@@ -200,17 +200,14 @@ object Curate {
   def run(spark: SparkSession, sfDir: String, outDir: String,
       tokenBudget: Long = 2048L): Result = {
     // the skew advisory reads only raw inputs and writes its own
-    // artifact — fully independent of every stage below, so it runs
-    // overlapped on its own thread (optimization guide §2.6) instead
-    // of serializing its census between the corpus write and the
-    // manifest read-back as it used to; its jobs back-fill the
-    // driver-side gaps of the main flow's action barriers
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val advisoryFut = scala.concurrent.Future {
-        spark.sparkContext.setJobDescription("curate: skew advisory")
+    // artifact — fully independent of every stage below, so it runs as
+    // an overlapped branch ([[Overlap]]) instead of serializing its
+    // census between the corpus write and the manifest read-back as it
+    // used to; its jobs back-fill the driver-side gaps of the main
+    // flow's action barriers. The scope also restores the caller's job
+    // description on exit, failed runs included.
+    Overlap(spark) { s =>
+      val advisoryFut = s.fork("curate: skew advisory") {
         val advisory = ext.Dedup.editDedupRerouteReport(spark, sfDir)
           .withColumnRenamed("rerouted", "would_reroute_edit_dedup")
         // materialize on the driver: bounded by construction (each
@@ -231,21 +228,20 @@ object Curate {
         advRows.length.toLong
       }
 
-      // 1. the production exact-then-fuzzy curation stack, launched on
-      // the pool so its eager setup (the connected-components loop's
-      // edge materialization and label rounds) overlaps the forecast
-      // pilot below — the two read only raw inputs, so the forecast
-      // still owes nothing to the pipeline's outputs. The survivor set
-      // feeds BOTH the shard-packing projection below and the final
-      // corpus join — persisted once (Memos-tracked, the shardPack
-      // convention) or the entire curation DAG (dedup window, MinHash
-      // pair restriction, connected components, decontamination join,
-      // quality scoring — document-text scans included) executes twice
-      val keptFut = scala.concurrent.Future {
-        spark.sparkContext.setJobDescription("curate: stage1-3 curation")
+      // 1. the production exact-then-fuzzy curation stack, forked so
+      // its eager setup (the connected-components loop's edge
+      // materialization and label rounds) overlaps the forecast pilot
+      // below — the two read only raw inputs, so the forecast still
+      // owes nothing to the pipeline's outputs. The survivor set feeds
+      // BOTH the shard-packing projection below and the final corpus
+      // join — persisted once (released with the scope) or the entire
+      // curation DAG (dedup window, MinHash pair restriction, connected
+      // components, decontamination join, quality scoring —
+      // document-text scans included) executes twice
+      val keptFut = s.fork("curate: stage1-3 curation") {
         val pairs = ext.Dedup.minhashBanded(spark, sfDir)
           .select(col("doc_a"), col("doc_b"))
-        val kept = Memos.track(
+        val kept = s.release(
           ext.Curation.curatedDocs(spark, sfDir, Some(pairs)).persist())
         (kept, kept.limit(1).count())
       }
@@ -265,8 +261,7 @@ object Curate {
       // misconfiguration — name it instead of writing an unreadable
       // corpus.
       spark.sparkContext.setJobDescription("curate: stage1-3 curation")
-      val (kept, keptProbe) = scala.concurrent.Await.result(keptFut,
-        scala.concurrent.duration.Duration.Inf)
+      val (kept, keptProbe) = s.join(keptFut)
       require(keptProbe > 0,
         s"curation kept zero documents from $sfDir — every doc was " +
           "deduped, decontaminated, or quality-gated out; refusing to " +
@@ -297,7 +292,7 @@ object Curate {
       // aggregated ONCE: the manifest rows are collected (a bounded
       // (split, lang) table), the tiny frame is re-written from the
       // driver (same one-task schema-bearing idiom as the advisory
-      // below), and the split counts and doc/token totals fold from the
+      // above), and the split counts and doc/token totals fold from the
       // collected rows. Only the global distinct-shard count needs a
       // second read-back pass (shards span (split, lang) cells, so it
       // cannot fold from the manifest).
@@ -311,11 +306,9 @@ object Curate {
       // two read-backs that cannot fold into one aggregate (shards span
       // (split, lang) cells) — but they are independent of EACH OTHER,
       // both reading only the just-written corpus, so the shard pass
-      // runs overlapped on the pool (guide §2.6) instead of serializing
-      // after the manifest re-write; harvested below before the
-      // estimates that need it
-      val nShardsFut = scala.concurrent.Future {
-        spark.sparkContext.setJobDescription("curate: manifest + totals")
+      // runs as a branch instead of serializing after the manifest
+      // re-write; harvested below before the estimates that need it
+      val nShardsFut = s.fork("curate: manifest + totals") {
         written.agg(countDistinct(col("shard_id"))).head().getLong(0)
       }
       val manifest = written
@@ -344,14 +337,12 @@ object Curate {
       // EMPTY on every clean corpus, so the oracled corpus/manifest
       // outputs are untouched and a scheduler can join survivorship
       // decisions against exactly the skew hot-spots. Launched up top on
-      // its own thread; harvested here.
-      val advisoryCells = scala.concurrent.Await.result(advisoryFut,
-        scala.concurrent.duration.Duration.Inf)
+      // its own branch; harvested here.
+      val advisoryCells = s.join(advisoryFut)
 
       val bySplit = manifestRows.groupBy(_.getString(0))
         .map { case (s, rows) => s -> rows.map(_.getLong(2)).sum }
-      val nShards = scala.concurrent.Await.result(nShardsFut,
-        scala.concurrent.duration.Duration.Inf)
+      val nShards = s.join(nShardsFut)
       val docTotal = manifestRows.map(_.getLong(2)).sum
       val tokenTotal = manifestRows.map(_.getLong(3)).sum
       val trainDocs = bySplit.getOrElse("train", 0L)
@@ -381,13 +372,9 @@ object Curate {
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$outDir/estimate")
 
-      spark.sparkContext.setJobDescription(null)
       Result(inputDocs, docTotal, trainDocs, testDocs,
         nShards, tokenTotal, advisoryCells, estimates)
-      // pool.shutdown() lives in the finally below: pool threads are
-      // non-daemon, and an exception escaping mid-run would otherwise
-      // leave the JVM unable to exit after a failed standalone main
-    } finally pool.shutdown()
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -18,10 +18,14 @@ object DevProfile {
     val spark = Sessions.local(appName = "graft-devprofile")
     val q = SparkEntry.registry.find(_.name == name).get
     // DEV_CONFS="k=v;k=v" layers ad-hoc session confs over Q.confs for
-    // A/B runs (profiling harness only — never the bench or a query)
-    val devConfs = sys.env.get("DEV_CONFS").map(_.split(";").toSeq
-      .map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap)
-      .getOrElse(Map.empty[String, String])
+    // A/B runs (profiling harness only — never the bench or a query);
+    // empty segments (a trailing ';') are skipped
+    val devConfs = sys.env.getOrElse("DEV_CONFS", "").split(";")
+      .filter(_.nonEmpty).map { seg =>
+        val kv = seg.split("=", 2)
+        require(kv.length == 2, s"DEV_CONFS segment '$seg' is not k=v")
+        kv(0) -> kv(1)
+      }.toMap
     def once(): Unit = {
       Sessions.withConfs(spark, q.confs ++ devConfs) {
         q.benchFn.getOrElse(q.fn)(spark, sfDir)

@@ -27,62 +27,53 @@ object Pipeline {
     // multi-action frames are cached once — each stage below fans out
     // into several actions (parquet write + JDBC write + count), and
     // recomputing the lineage per action is exactly the reference's
-    // no-cache anti-pattern this engine exists to fix.
+    // no-cache anti-pattern this engine exists to fix. The scope frees
+    // them on every exit path, a failed stage included.
     //
     // The three stages are data-INDEPENDENT (each reads only raw
-    // tables), so their sink actions run overlapped from a small
-    // thread pool (optimization guide §2.6): Spark's scheduler happily
-    // runs several jobs at once, and the stages were only sequential
-    // because this driver code called them sequentially — measured
-    // round 21, the serial form left the whole job gated on one
-    // sub-second action barrier after another (36 jobs end to end).
-    // Each frame's own actions (write, then count) stay ORDERED inside
-    // its future; only distinct stages overlap. Job-group/description
-    // properties are thread-local, so concurrent stages stay readable
-    // in the UI; the raw-table cache and the ml fit memos are
+    // tables), so their sink actions run as overlapped branches
+    // ([[Overlap]]): Spark's scheduler happily runs several jobs at
+    // once, and the stages were only sequential because this driver
+    // code called them sequentially — measured round 21, the serial
+    // form left the whole job gated on one sub-second action barrier
+    // after another (36 jobs end to end). Each frame's own actions
+    // (write, then count) stay ORDERED inside its branch; only distinct
+    // stages overlap. The raw-table cache and the ml fit memos are
     // concurrency-safe (ConcurrentHashMap + per-block cache locks).
+    Overlap(spark) { s =>
+      // stage 1: profiling (one fused job per metric family)
+      val completeness =
+        s.release(quality.Profiler.profileCompleteness(spark, sfDir).cache())
+      val integrity = quality.Profiler.profileIntegrity(spark, sfDir)
+      // stage 2: cleaning (rule chain; R4 counted but not applied)
+      val counts = clean.Rules.ruleCounts(spark, sfDir)
+      val cleaned = s.release(clean.Rules.cleaned(spark, sfDir).cache())
+      // stage 3: features + activity clustering, JDBC sink
+      val features = feature.Features.build(spark, sfDir)
+      val labeled = mlx.Clustering.kmeansActivity(spark, sfDir)
+      val analysis =
+        s.release(features.join(labeled, Seq("c_custkey")).cache())
 
-    // stage 1: profiling (one fused job per metric family)
-    val completeness =
-      quality.Profiler.profileCompleteness(spark, sfDir).cache()
-    val integrity = quality.Profiler.profileIntegrity(spark, sfDir)
-    // stage 2: cleaning (rule chain; R4 counted but not applied)
-    val counts = clean.Rules.ruleCounts(spark, sfDir)
-    val cleaned = clean.Rules.cleaned(spark, sfDir).cache()
-    // stage 3: features + activity clustering, JDBC sink
-    val features = feature.Features.build(spark, sfDir)
-    val labeled = mlx.Clustering.kmeansActivity(spark, sfDir)
-    val analysis = features.join(labeled, Seq("c_custkey")).cache()
-
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    try {
-      val f1 = Future {
+      val f1 = s.fork("pipeline: profile") {
         completeness.write.mode(SaveMode.Overwrite)
           .parquet(s"$outDir/profile_completeness")
         integrity.write.mode(SaveMode.Overwrite)
           .parquet(s"$outDir/profile_integrity")
         completeness.count()
       }
-      val f2 = Future {
+      val f2 = s.fork("pipeline: clean") {
         counts.write.mode(SaveMode.Overwrite).parquet(s"$outDir/rule_counts")
         cleaned.write.mode(SaveMode.Overwrite).parquet(s"$outDir/cleaned")
         cleaned.count()
       }
-      val f3 = Future {
+      val f3 = s.fork("pipeline: transform") {
         analysis.write.mode(SaveMode.Overwrite).parquet(s"$outDir/analysis")
         io.Sources.jdbcRoundTrip(spark, analysis,
           io.Sources.tmpDir("derby") + "/pipeline_db", "analysis")
         analysis.count()
       }
-      val res = Result(Await.result(f1, Duration.Inf),
-        Await.result(f2, Duration.Inf), Await.result(f3, Duration.Inf))
-      completeness.unpersist(); cleaned.unpersist(); analysis.unpersist()
-      res
-    } finally pool.shutdown()
+      Result(s.join(f1), s.join(f2), s.join(f3))
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** A named engine query: the Spark implementation plus an optional DuckDB
   * oracle SQL (ANSI, runnable on the same parquet tables). `bench = true`
@@ -177,12 +177,21 @@ object Memos {
     * set of plan trees or storage blocks.
     */
   def track(df: DataFrame): DataFrame = synchronized {
-    if (adhoc.length >= adhocCap) {
-      adhoc.head.unpersist(blocking = false)
-      adhoc.remove(0)
-    }
+    if (adhoc.length >= adhocCap) free(adhoc.remove(0))
     adhoc += df
     df
+  }
+
+  /** Release a cached OR checkpointed frame. `Dataset.unpersist` alone
+    * does nothing to a local checkpoint: its blocks belong to the
+    * checkpointed RDD under the frame's `LogicalRDD`, not to a cache
+    * entry, so that RDD is unpersisted directly.
+    */
+  def free(df: Dataset[_]): Unit = df.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD
+        if l.rdd.getStorageLevel.isValid =>
+      l.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
   }
 
   /** Max ad-hoc frames held before [[track]] evicts the oldest. */
@@ -197,10 +206,10 @@ object Memos {
   /** Unpersist and forget every DERIVED frame; raw input caches stay. */
   def clearDerived(): Unit = synchronized {
     derived.foreach { m =>
-      m.values.forEach(df => df.unpersist(blocking = false))
+      m.values.forEach(df => free(df))
       m.clear()
     }
-    adhoc.foreach(_.unpersist(blocking = false))
+    adhoc.foreach(free)
     adhoc.clear()
     hooks.foreach(_.apply())
   }
@@ -209,7 +218,7 @@ object Memos {
   def clear(): Unit = synchronized {
     clearDerived()
     raw.foreach { m =>
-      m.values.forEach(df => df.unpersist(blocking = false))
+      m.values.forEach(df => free(df))
       m.clear()
     }
   }

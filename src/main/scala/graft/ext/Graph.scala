@@ -72,6 +72,9 @@ object Graph {
     val nEdges = e.count()
     val parts = math.max(1L, math.min(sessionParts, nEdges / 50000 + 1)).toInt
     var sym: DataFrame = null
+    var labels: DataFrame = null
+    var prev: DataFrame = null
+    var done = false
     try {
       // symmetrize then dedup in ONE explicit exchange: hash(src, parts)
       // already co-locates equal (src, dst) pairs, so the dropDuplicates
@@ -86,7 +89,7 @@ object Graph {
       // hash(id, parts) so the per-round left join is co-partitioned
       // with `pushed` from round 1 (localCheckpoint preserves the
       // physical partitioning into the checkpointed LogicalRDD)
-      var labels = sym.select(col("src").as("id"))
+      labels = sym.select(col("src").as("id"))
         .repartition(parts, col("id"))
         .dropDuplicates("id")
         .withColumn("label", col("id"))
@@ -137,21 +140,14 @@ object Graph {
         // maxIter would otherwise hold every generation of the label
         // table in storage until the driver happens to GC (round-21
         // verdict memory-safety item).
-        val prev = labels
+        prev = labels
         labels = labels.join(pushed, Seq("id"), "left")
           .select(col("id"),
             least(col("label"), coalesce(col("neighbor_min"), col("label")))
               .as("label"))
           .localCheckpoint(false)
         val s = labelSum(labels) // materializes the checkpoint
-        prev.queryExecution.analyzed match {
-          // every superseded label table is a checkpointed LogicalRDD
-          // (the initial one eagerly, each round's lazily); defensive
-          // no-op default in case a future edit changes the init shape
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
+        graft.Memos.free(prev)
         converged = prevSum.contains(s)
         prevSum = Some(s)
         iter += 1
@@ -161,10 +157,14 @@ object Graph {
           s"edges=$nEdges parts=$parts")
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds")
+      done = true
       labels.select(col("id"), col("label").as("group_id"))
     } finally {
       e.unpersist(blocking = false) // no-op if already released above
       if (sym != null) sym.unpersist(blocking = false)
+      // a failed loop (non-convergence, a cancelled probe) hands no
+      // label table out: release the generations it still holds
+      if (!done) Seq(prev, labels).filter(_ != null).foreach(graft.Memos.free)
     }
   }
 

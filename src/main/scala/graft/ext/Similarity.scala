@@ -764,9 +764,10 @@ object Similarity {
     * output unions the five batch results under a `batch` column and
     * is fully hash-oracled by the same inlined-planes replay as
     * [[annIndexProbe]], once per batch. The timed formulation
-    * ([[annProbeManyBench]]) materializes the batches SEQUENTIALLY —
-    * five separate probe plans, as a serving loop would — rather than
-    * letting one union plan share scans across batches.
+    * ([[annProbeManyBench]]) issues the batches as five independent
+    * probe plans run concurrently, as a serving tier answering
+    * concurrent clients would, rather than letting one union plan share
+    * scans across batches.
     */
   def annProbeMany(spark: SparkSession, dir: String): DataFrame =
     (0 until 5).map { b =>
@@ -783,39 +784,33 @@ object Similarity {
     * showed the strictly sequential loop gated on five sets of
     * driver-side planning barriers in a row). Round 21 overlapped
     * batches 0-3 and left batch 4 as a serial tail for Bench's own
-    * materialization; round 22 moves batch 4 onto the pool too, as an
-    * EAGER localCheckpoint — the checkpoint computes every column of
-    * the batch inside the pool (concurrently with batches 0-3, still
-    * entirely inside the timed span, all futures awaited before
+    * materialization; round 22 forks batch 4 too, as an EAGER
+    * localCheckpoint — the checkpoint computes every column of the
+    * batch inside its branch (concurrently with batches 0-3, still
+    * entirely inside the timed span, every branch joined before
     * return), and the frame handed back to Bench's noop sink is the
-    * checkpointed rows. Nothing is cached across samples: the blocks
-    * are born and consumed within one timed invocation (round-22
-    * min-of-5: 1.242 s -> 0.716 s same-box). The index is resolved ONCE before
-    * the fan-out so concurrent probes can never race a missing-index
-    * rebuild.
+    * checkpointed rows (round-22 min-of-5: 1.242 s -> 0.716 s
+    * same-box). Those blocks outlive the call: the checkpoint is
+    * [[graft.Memos.track]]ed, so the caller's next
+    * [[graft.Memos.clearDerived]] (Bench's, after every sample) frees
+    * them. The index is resolved ONCE before the fan-out so concurrent
+    * probes can never race a missing-index rebuild.
     */
   def annProbeManyBench(spark: SparkSession, dir: String): DataFrame = {
     ensureAnnIndex(spark, dir)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
+    graft.Overlap(spark) { s =>
       val served = (0 until 4).map { b =>
-        scala.concurrent.Future {
-          spark.sparkContext.setJobDescription(s"ann serve: batch $b")
+        s.fork(s"ann serve: batch $b") {
           annProbeBatch(spark, dir, b)
             .write.format("noop").mode("overwrite").save()
         }
       }
-      val last = scala.concurrent.Future {
-        spark.sparkContext.setJobDescription("ann serve: batch 4")
-        annProbeBatch(spark, dir, 4).localCheckpoint(true)
+      val last = s.fork("ann serve: batch 4") {
+        graft.Memos.track(annProbeBatch(spark, dir, 4).localCheckpoint(true))
       }
-      served.foreach(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-      scala.concurrent.Await.result(last,
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+      served.foreach(s.join(_))
+      s.join(last)
+    }
   }
 
   private def annProbeManySql: String =
@@ -1480,9 +1475,17 @@ object Similarity {
         col("emb").as("q_emb"), col("nrm").as("q_nrm"))
     val c = e.select(col("vec_id").as("c_id"), col("label").as("c_label"),
       col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    knnVote(c.join(broadcast(q), col("q_id") =!= col("c_id"), "inner"))
+  }
+
+  /** The kNN tail [[knnClassify]] and [[knnAnn]] share over their
+    * (query, candidate) pairs: bps-quantized cosine, the k=5
+    * [[graft.functions.TopKStructs]] bound, then the majority vote.
+    */
+  private def knnVote(pairs: DataFrame): DataFrame = {
     // struct ordering = (bps desc, c_id asc) via (bps, -c_id): the
     // aggregate keeps the k LARGEST structs lexicographically
-    val top = c.join(broadcast(q), col("q_id") =!= col("c_id"), "inner")
+    val top = pairs
       .withColumn("cos_bps",
         floor(expr(dotExpr) / (col("q_nrm") * col("c_nrm")) * 10000
           + lit(0.5)).cast("long"))
@@ -1518,7 +1521,15 @@ object Similarity {
                  AS BIGINT) AS cos_bps
              FROM nr a JOIN nr b ON a.vec_id <> b.vec_id
              WHERE a.vec_id % 50 = 0),
-       r AS (SELECT q_id, q_label, c_label,
+       $knnVoteSql"""
+  }
+
+  /** [[knnVote]]'s replay over a candidate CTE `p` (q_id, q_label,
+    * c_id, c_label, cos_bps): top-5 by (cos_bps desc, c_id), then the
+    * majority vote — shared by every kNN oracle.
+    */
+  private def knnVoteSql: String =
+    """r AS (SELECT q_id, q_label, c_label,
                row_number() OVER (PARTITION BY q_id
                  ORDER BY cos_bps DESC, c_id) AS rnk FROM p),
        v AS (SELECT q_id, q_label, c_label, count(*) AS cnt
@@ -1531,7 +1542,6 @@ object Similarity {
          CAST(CASE WHEN c_label = q_label THEN 1 ELSE 0 END AS INT)
            AS correct
        FROM w WHERE vr = 1 ORDER BY q_id"""
-  }
 
   /** [EXT] ANN-backed k-NN labeling — the UNBOUNDED-query-set twin of
     * [[knnClassify]]: same bps-quantized cosine, same k=5
@@ -1612,31 +1622,10 @@ object Similarity {
     val probePairs = q.select(col("q_id"), explode(array(
       col("sig") +: flips.map(m => col("sig").bitwiseXOR(lit(m))): _*))
       .as("sig"))
-    val top = index.join(gatedProbeBroadcast(spark, probePairs),
+    knnVote(index.join(gatedProbeBroadcast(spark, probePairs),
         Seq("sig"), "inner")
       .filter(col("q_id") =!= col("c_id"))
-      .join(gatedProbeBroadcast(spark, q.drop("sig")), Seq("q_id"))
-      .withColumn("cos_bps",
-        floor(expr(dotExpr) / (col("q_nrm") * col("c_nrm")) * 10000
-          + lit(0.5)).cast("long"))
-      .groupBy(col("q_id"), col("q_label"))
-      .agg(expr("topk_structs(struct(cos_bps, -c_id AS nid, c_label), 5)")
-        .as("nn"))
-    val votes = top
-      .select(col("q_id"), col("q_label"),
-        explode(col("nn.c_label")).as("c_label"))
-      .groupBy(col("q_id"), col("q_label"), col("c_label"))
-      .agg(count(lit(1)).as("cnt"))
-    val wVote = Window.partitionBy(col("q_id"))
-      .orderBy(col("cnt").desc, col("c_label"))
-    votes.withColumn("vr", row_number().over(wVote))
-      .filter(col("vr") === 1)
-      .select(col("q_id"), col("q_label").as("true_label"),
-        col("c_label").as("pred_label"),
-        col("cnt").cast("int").as("n_votes"),
-        when(col("c_label") === col("q_label"), 1).otherwise(0)
-          .cast("int").as("correct"))
-      .orderBy(col("q_id"))
+      .join(gatedProbeBroadcast(spark, q.drop("sig")), Seq("q_id")))
   }
 
   /** [[knnClassifySql]]'s vote over [[annLshSql]]'s candidate
@@ -1645,36 +1634,8 @@ object Similarity {
     * the bps-quantized rank + vote replays unchanged — one oracle,
     * both stages exact.
     */
-  private def knnAnnSql: String = {
-    val sumSq = (1 to 64).map(i => s"emb[$i] * emb[$i]").mkString(" + ")
-    val dotQT = (1 to 64).map(i => s"q.emb[$i] * t.emb[$i]").mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, label,
-                   CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       $nbitsSql,
-       s AS (SELECT vec_id, label, emb, sqrt($sumSq) AS nrm,
-           $sigBitsSql
-         FROM e),
-       p AS (SELECT q.vec_id AS q_id, q.label AS q_label,
-               t.vec_id AS c_id, t.label AS c_label,
-               CAST(floor(($dotQT) / (q.nrm * t.nrm) * 10000 + 0.5)
-                 AS BIGINT) AS cos_bps
-             FROM s q, s t, nb
-             WHERE q.vec_id % 50 = 0 AND q.vec_id <> t.vec_id
-               AND ${hammingSql("q", "t")} <= $KnnProbeHamming),
-       r AS (SELECT q_id, q_label, c_label,
-               row_number() OVER (PARTITION BY q_id
-                 ORDER BY cos_bps DESC, c_id) AS rnk FROM p),
-       v AS (SELECT q_id, q_label, c_label, count(*) AS cnt
-             FROM r WHERE rnk <= 5 GROUP BY 1, 2, 3),
-       w AS (SELECT q_id, q_label, c_label, cnt,
-               row_number() OVER (PARTITION BY q_id
-                 ORDER BY cnt DESC, c_label) AS vr FROM v)
-       SELECT q_id, q_label AS true_label, c_label AS pred_label,
-         CAST(cnt AS INT) AS n_votes,
-         CAST(CASE WHEN c_label = q_label THEN 1 ELSE 0 END AS INT)
-           AS correct
-       FROM w WHERE vr = 1 ORDER BY q_id"""
-  }
+  private def knnAnnSql: String =
+    lshKnnSql("q.vec_id % 50 = 0 AND q.vec_id <> t.vec_id")
 
   /** [[knnAnnSql]] with the incremental-ingest split: queries are the
     * ARRIVING delta (`vec_id % 5 == 4`, the s14/s15 convention),
@@ -1684,7 +1645,14 @@ object Similarity {
     * the base index broadcast. Same planes, same autoBits from
     * count(*), same Hamming <= [[KnnProbeHamming]] probe.
     */
-  private[graft] def streamKnnProbeSql: String = {
+  private[graft] def streamKnnProbeSql: String =
+    lshKnnSql("q.vec_id % 5 = 4 AND t.vec_id % 5 <> 4")
+
+  /** LSH-probed kNN oracle: candidates are the (q, t) pairs passing
+    * `pairPred` within Hamming <= [[KnnProbeHamming]], voted by
+    * [[knnVoteSql]].
+    */
+  private def lshKnnSql(pairPred: String): String = {
     val sumSq = (1 to 64).map(i => s"emb[$i] * emb[$i]").mkString(" + ")
     val dotQT = (1 to 64).map(i => s"q.emb[$i] * t.emb[$i]").mkString(" + ")
     s"""WITH e AS (SELECT vec_id, label,
@@ -1698,21 +1666,9 @@ object Similarity {
                CAST(floor(($dotQT) / (q.nrm * t.nrm) * 10000 + 0.5)
                  AS BIGINT) AS cos_bps
              FROM s q, s t, nb
-             WHERE q.vec_id % 5 = 4 AND t.vec_id % 5 <> 4
+             WHERE $pairPred
                AND ${hammingSql("q", "t")} <= $KnnProbeHamming),
-       r AS (SELECT q_id, q_label, c_label,
-               row_number() OVER (PARTITION BY q_id
-                 ORDER BY cos_bps DESC, c_id) AS rnk FROM p),
-       v AS (SELECT q_id, q_label, c_label, count(*) AS cnt
-             FROM r WHERE rnk <= 5 GROUP BY 1, 2, 3),
-       w AS (SELECT q_id, q_label, c_label, cnt,
-               row_number() OVER (PARTITION BY q_id
-                 ORDER BY cnt DESC, c_label) AS vr FROM v)
-       SELECT q_id, q_label AS true_label, c_label AS pred_label,
-         CAST(cnt AS INT) AS n_votes,
-         CAST(CASE WHEN c_label = q_label THEN 1 ELSE 0 END AS INT)
-           AS correct
-       FROM w WHERE vr = 1 ORDER BY q_id"""
+       $knnVoteSql"""
   }
 
   /** [EXT] SEMANTIC decontamination — the embedding layer of the

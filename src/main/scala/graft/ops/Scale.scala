@@ -157,27 +157,23 @@ object Scale {
     // the two bucketed writes are independent tables: overlap them
     // (optimization guide §2.6) instead of paying two full write
     // barriers back to back
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val writes = Seq(
-      scala.concurrent.Future {
-        table(spark, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .write.mode("overwrite")
-          .bucketBy(8, "o_custkey").sortBy("o_custkey")
-          .saveAsTable("g_bucket_orders")
-      },
-      scala.concurrent.Future {
-        table(spark, dir, "customer")
-          .select(col("c_custkey"), col("c_name"))
-          .write.mode("overwrite")
-          .bucketBy(8, "c_custkey").sortBy("c_custkey")
-          .saveAsTable("g_bucket_customer")
-      })
-    try writes.foreach(f => scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf))
-    finally pool.shutdown()
+    graft.Overlap(spark) { s =>
+      Seq(
+        s.fork("bucketed write: orders") {
+          table(spark, dir, "orders")
+            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+            .write.mode("overwrite")
+            .bucketBy(8, "o_custkey").sortBy("o_custkey")
+            .saveAsTable("g_bucket_orders")
+        },
+        s.fork("bucketed write: customer") {
+          table(spark, dir, "customer")
+            .select(col("c_custkey"), col("c_name"))
+            .write.mode("overwrite")
+            .bucketBy(8, "c_custkey").sortBy("c_custkey")
+            .saveAsTable("g_bucket_customer")
+        }).foreach(s.join(_))
+    }
     spark.table("g_bucket_orders")
       .join(spark.table("g_bucket_customer"),
         col("o_custkey") === col("c_custkey"), "inner")

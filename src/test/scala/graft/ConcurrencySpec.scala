@@ -4,6 +4,9 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkException
 
 /** Library-embedding hardening: a resident engine serves many queries
   * from ONE SparkSession concurrently, while Bench/Verify drive it
@@ -85,6 +88,63 @@ class ConcurrencySpec extends SparkSuite {
       }
       assert(spark.conf.get("spark.sql.shuffle.partitions") == parts0)
     } finally pool.shutdown()
+  }
+
+  /** Fault injection for [[Overlap]]: one branch holds every core with
+    * a job whose tasks would sleep for a minute, a sibling then throws.
+    * The scope must rethrow the sibling's own exception (the long job's
+    * cancellation error rides along as suppressed), cancel the long job
+    * instead of waiting it out, free both released frames — a cached
+    * one and a local checkpoint — restore the caller's job description,
+    * and leave no non-daemon thread of its own running.
+    */
+  test("overlap: a failing branch cancels its siblings and frees the " +
+      "scope's frames") {
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    var released = Set.empty[Int]
+    val threadsBefore = Thread.getAllStackTraces.keySet.asScala.toSet
+    val boom = new IllegalStateException("injected branch failure")
+    sc.setJobDescription("caller")
+    try {
+      val t0 = System.nanoTime()
+      val err = intercept[IllegalStateException] {
+        Overlap(spark) { s =>
+          val cached = s.release(spark.range(1000).toDF("id").cache())
+          assert(cached.count() == 1000L)
+          s.release(spark.range(1000).toDF("id").localCheckpoint(true))
+          released = sc.getPersistentRDDs.keySet.toSet -- rddsBefore
+          assert(released.size == 2,
+            "expected one cached RDD and one checkpoint RDD")
+          val long = s.fork("sleeps for a minute") {
+            sc.parallelize(1 to 4, 4).map { i => Thread.sleep(60000); i }
+              .count()
+          }
+          s.fork("fails") {
+            val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+            while (sc.statusTracker.getActiveJobIds().isEmpty &&
+                System.nanoTime() < deadline) Thread.sleep(20)
+            Thread.sleep(500) // let the long job's tasks start
+            throw boom
+          }
+          s.join(long)
+        }
+      }
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      assert(err eq boom, s"scope rethrew $err, not the failing branch's own")
+      assert(err.getSuppressed.exists(_.isInstanceOf[SparkException]),
+        "the cancelled sibling's error is not attached as suppressed")
+      assert(elapsed < 20.0,
+        f"scope took $elapsed%.1f s — the long sibling was not cancelled")
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      assert((sc.getPersistentRDDs.keySet & released).isEmpty,
+        "released frames survived the failed scope")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      val leaked = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && !t.isDaemon && !threadsBefore(t))
+      assert(leaked.isEmpty,
+        s"non-daemon threads outlived the scope: ${leaked.map(_.getName)}")
+    } finally sc.setJobDescription(null)
   }
 
   /** Round-15 directive 6: `x_ann_index_update` claims append-only

@@ -648,12 +648,29 @@ class OperatorInvariantsSpec extends SparkSuite {
         "ContextCleaner")
   }
 
+  test("connected components: a failed loop releases its label tables") {
+    import spark.implicits._
+    // maxIter = 1 cannot converge on a diameter-5 chain, so the loop
+    // exits through its require — every checkpoint generation it made
+    // must be released on that path too, not left to the ContextCleaner
+    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("a", "b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException] {
+      ext.Graph.connectedComponents(edges, "a", "b", maxIter = 1)
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty,
+      s"a non-converging CC loop left ${leaked.size} persistent RDDs behind")
+  }
+
   test("ann probe-many: bench formulation rows match the union's batch 4") {
     // the bench path computes batch 4 as an eager localCheckpoint on
     // the serve pool (round 22); the frame it hands back must stay
     // row-identical to the registered (oracle-checked) union's batch-4
     // slice — pins the checkpoint refactor to the fn it stands in for
     val cols = Seq("q_id", "c_id", "rank", "cos_sim")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val bench = ext.Similarity.annProbeManyBench(spark, sf)
       .select(cols.map(col): _*).collect().map(_.toSeq).toSet
     val union = ext.Similarity.annProbeMany(spark, sf)
@@ -662,7 +679,12 @@ class OperatorInvariantsSpec extends SparkSuite {
     assert(bench == union,
       "annProbeManyBench's returned frame diverged from the registered " +
         "union's batch-4 rows")
+    // the batch-4 checkpoint is Memos-tracked: the per-query clear the
+    // bench runs after every sample releases it
     Memos.clearDerived()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"${leaked.size} persistent RDDs outlived " +
+      "annProbeManyBench past Memos.clearDerived()")
   }
 
   test("dup groups: both endpoints of every near-dup pair share a group") {

@@ -145,21 +145,21 @@ object Bench {
     }
     val warmSec = (System.nanoTime() - warmT0) / 1e9
     failed.clear() // warm-pass failures re-surface in the timed runs
-    // benchRuns > 1 (streaming queries + the >2s heavy tail): time every
-    // sample, report the MEDIAN as the query's cost — micro-batch trigger
-    // scheduling and box contention swing 2-3x run-to-run with unchanged
-    // code and identical stage/task counts (round-6/7 driver artifacts),
-    // and single draws of that noise were 14-16% of the total.
+    // Every query's cost is the MEDIAN of its samples — micro-batch
+    // trigger scheduling and box contention swing 2-3x run-to-run with
+    // unchanged code and identical stage/task counts (round-6/7 driver
+    // artifacts), and single draws of that noise were 14-16% of the
+    // total. Each query gets BaseRuns samples; those whose first-three
+    // median reaches HeavySec get HeavyRuns (see [[heavy]]).
     //
     // Samples are INTERLEAVED as round-robin passes, not taken
     // back-to-back: three consecutive draws of one query share a single
     // contention window, and a window longer than the triple defeats the
     // median (round-9 driver artifact: x_semantic_dedup runs
-    // [1.44, 11.17, 7.39] s at identical stage counts). Pass 1 runs
-    // sample 1 of every query in registry order; pass 2 runs sample 2 of
-    // every multi-sample query; ... — so consecutive samples of one
-    // query are separated by a full pass over the multi-sample set (tens
-    // of seconds) and its median spans windows.
+    // [1.44, 11.17, 7.39] s at identical stage counts). Passes 1-3 run
+    // every query in registry order; passes 4-5 run every heavy query —
+    // so consecutive samples of one query are separated by a full pass
+    // and its median spans windows.
     // All samples are preserved in BENCH_FULL.json's `runs` map.
     // a failed sample's time is time-to-crash, not cost: median over
     // the successful samples only (if every sample failed, the crash
@@ -168,9 +168,11 @@ object Bench {
     val byName = scala.collection.mutable.LinkedHashMap[
       String, Vector[(Timing, Boolean)]]()
     toRun.foreach(q => byName(q.name) = Vector.empty)
-    schedule(toRun.map(q => q.name -> q.benchRuns)).foreach { n =>
-      byName(n) = byName(n) :+ run(qByName(n))
-    }
+    def sample(order: Seq[String]): Unit =
+      order.foreach(n => byName(n) = byName(n) :+ run(qByName(n)))
+    sample(schedule(toRun.map(_.name), BaseRuns))
+    sample(schedule(heavy(byName.toSeq.map { case (n, ss) =>
+      n -> ss.map(_._1.sec) }), HeavyRuns - BaseRuns))
     val sampled = toRun.map { q =>
       val samples = byName(q.name)
       val good = samples.collect { case (t, true) => t }
@@ -181,12 +183,8 @@ object Bench {
     }
     val timings = sampled.map { case (n, med, _) => n -> med }
     val results = timings.map { case (n, t) => n -> t.sec }
-    val runsMap = sampled.collect { case (n, _, ss) if ss.length > 1 =>
-      n -> ss.map(_.sec)
-    }
-    val runStages = sampled.collect { case (n, _, ss) if ss.length > 1 =>
-      n -> ss.map(_.stages)
-    }
+    val runsMap = sampled.map { case (n, _, ss) => n -> ss.map(_.sec) }
+    val runStages = sampled.map { case (n, _, ss) => n -> ss.map(_.stages) }
 
     // BENCH_FULL.json is the COMMITTED closing-ritual artifact — the
     // full benchDefault catalog. A targeted profiling run
@@ -213,38 +211,56 @@ object Bench {
       totalOverride = Some(total)))
   }
 
-  /** Interleaved sampling order: pass 1 runs sample 1 of every query in
-    * input order, pass 2 runs sample 2 of every query with `benchRuns`
-    * >= 2, and so on — so consecutive samples of one query are separated
-    * by a full pass over the multi-sample set and its median spans
-    * contention windows (back-to-back triples shared one window —
-    * round-9 driver artifact). Pure so the spec can pin the property.
-    *
-    * Degenerate case, accepted: with a SINGLE multi-sample query in
-    * the input (targeted profiling via SPARK_GRAFT_ONLY), passes
-    * collapse to back-to-back samples again — there is nothing to
-    * interleave with, and injecting spacer work would distort the
-    * very timing being profiled. The artifact path (full catalog)
-    * always has the full multi-sample set between consecutive
-    * samples.
+  /** Samples every query gets. */
+  val BaseRuns = 3
+
+  /** Samples a heavy query gets: with 3 samples a box that is slow for
+    * 2 of 3 draws contaminates the MEDIAN itself — the round-15 driver
+    * artifact did exactly that (`x_curation_neardup` runs
+    * [15.6, 3.6, 23.0] s at flat stage counts, median 6.1x the committed
+    * cost). At 5 samples the median survives two contended draws.
     */
-  def schedule(runsPerQuery: Seq[(String, Int)]): Seq[String] = {
-    val maxRuns = runsPerQuery
-      .map { case (_, r) => math.max(1, r) }.foldLeft(1)(math.max)
-    for {
-      pass <- 0 until maxRuns
-      (n, r) <- runsPerQuery if pass < math.max(1, r)
-    } yield n
-  }
+  val HeavyRuns = 5
+
+  /** The heavy-tier red line (seconds): a query whose median over its
+    * first [[BaseRuns]] samples reaches it gets [[HeavyRuns]] samples —
+    * the entries where a contended median materially moves the total.
+    */
+  val HeavySec = 2.0
+
+  /** The queries (in input order) whose median over their first
+    * [[BaseRuns]] samples is >= [[HeavySec]]. Each draw decides its own
+    * heavy set from its own samples, so no membership carries over from
+    * an artifact drawn on another box. Pure so the spec can pin it.
+    */
+  def heavy(samples: Seq[(String, Seq[Double])]): Seq[String] =
+    samples.collect {
+      case (n, ss) if ss.size >= BaseRuns &&
+          ss.take(BaseRuns).sorted(Ordering.Double.TotalOrdering)
+            .apply(BaseRuns / 2) >= HeavySec => n
+    }
+
+  /** Interleaved sampling order: `passes` round-robin passes over
+    * `names` in input order — so consecutive samples of one query are
+    * separated by a full pass and its median spans contention windows
+    * (back-to-back triples shared one window — round-9 driver
+    * artifact). Pure so the spec can pin the property.
+    *
+    * Degenerate case, accepted: with a SINGLE query in the input (or a
+    * single heavy query in passes 4-5), passes collapse to back-to-back
+    * samples — there is nothing to interleave with, and injecting
+    * spacer work would distort the very timing being measured.
+    */
+  def schedule(names: Seq[String], passes: Int): Seq[String] =
+    for (_ <- 0 until passes; n <- names) yield n
 
   /** BENCH_FULL.json body: the [[jsonLine]] fields plus per-query Spark
     * job/stage/task counts — box-independent cost proxies a reader can
-    * compare across environments when wall seconds disagree — and, for
-    * multi-sample queries (`Q.benchRuns > 1`), the full per-run second
-    * samples under `runs` (the `queries` value is their median) next to
-    * their per-run stage counts under `run_stages`, so a >2x second
-    * spread at flat stage counts reads as contention, not plan change,
-    * without needing a second artifact.
+    * compare across environments when wall seconds disagree — and the
+    * full per-run second samples under `runs` (the `queries` value is
+    * their median) next to their per-run stage counts under
+    * `run_stages`, so a >2x second spread at flat stage counts reads as
+    * contention, not plan change, without needing a second artifact.
     */
   /** The ML fit counters, snapshotted at end-of-run into the artifact's
     * `fit_counts` — direct fit-once provenance (round-16 directive 1):

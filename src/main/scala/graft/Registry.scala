@@ -17,22 +17,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * the scale path. The two formulations must compute the same operator —
   * the invariant specs pin them together.
   *
-  * `benchRuns > 1` makes [[graft.Bench]] time the query that many times
-  * and report the MEDIAN. The DEFAULT is 3 since round 14 — the
-  * conversion history is the reason: round 6 converted streaming
-  * (s7-s12 swung ~9.3 s -> ~14.6 s with unchanged code), round 8 the
-  * >2 s heavy tail (x_curation_neardup 4.1 -> 16.9 s, x_pagerank
-  * 5.0 -> 14.9 s at IDENTICAL stage/task counts), round 13 the
-  * >=0.55 s band, round 14 everything that drew >=0.26 s in the worst
-  * observed draw — and each band's headroom assumption was then
-  * falsified by the next contended draw (a 0.38 s median drew 1.17 s:
-  * 3.0x). A committed artifact must never carry a single-draw number
-  * a foreign contended draw can push past a red line, so every query
-  * is a median now; the marginal cost (2 extra samples x the
-  * sub-0.3 s tail) is ~20 s of bench wall, invisible in the
-  * median-sum total. Every sample lands in BENCH_FULL.json's `runs`
-  * map so a reader can separate plan cost from scheduler noise.
-  *
   * This is the registration unit for every operator in SURVEY.md §2: each
   * module exposes a `qs: Seq[Q]` and [[SparkEntry]] concatenates them.
   */
@@ -44,7 +28,6 @@ final case class Q(
     benchDefault: Boolean = true,
     doc: String = "",
     benchFn: Option[(SparkSession, String) => DataFrame] = None,
-    benchRuns: Int = 3,
     confs: Map[String, String] = Map.empty)
 
 object Q {
@@ -80,49 +63,6 @@ object Q {
   val KBoundedAggConfs: Map[String, String] = Map(
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
       (1 << 18).toString)
-
-  /** Samples per heavy-tier query (vs the default 3). With 3 samples a
-    * box that is slow for 2 of 3 draws contaminates the MEDIAN itself —
-    * the round-15 driver artifact did exactly that (`x_curation_neardup`
-    * runs [15.6, 3.6, 23.0] s at flat stage counts, median 6.1x the
-    * committed cost; the headline moved 1.86x on zero plan change). At
-    * 5 samples the median survives two contended draws. Applied only to
-    * the [[HeavyTier]]: converting the whole catalog would add ~2x the
-    * full medians-sum (~300 s) of wall for queries whose absolute swing
-    * is bounded by their sub-second cost anyway.
-    */
-  val HeavyBenchRuns = 5
-
-  /** The heavy tier: every query whose committed builder-HEAD median
-    * is >= ~1.6 s (round-15/16 artifacts) — the entries where a
-    * contended median materially moves the headline total, and exactly
-    * the set the round-15 driver draw blew up 3-6x at unchanged plans.
-    * The ~1.6 s line sits a box-drift margin (~25%, two same-HEAD
-    * builder draws this round moved 150.6 -> 162.1 s) under the 2 s
-    * artifact red line, so quiet-box drift can't push a tight-spread
-    * straddler past the line between rounds. Expected extra wall: 2
-    * extra samples x ~66 s of medians ~= +130 s (recorded in BENCH.md).
-    * `BenchContractSpec` red-lines membership two ways: every name
-    * resolves in the registry at [[HeavyBenchRuns]], and every
-    * committed >2 s TIGHT-SPREAD median (genuine cost, not contention)
-    * must be in the tier.
-    */
-  val HeavyTier: Set[String] = Set(
-    "pipe1_end_to_end", "pipe2_curate_main",
-    "x_pagerank", "x_triangle_count", "x_degree_profile",
-    "x_curation_neardup", "x_dedup_threshold_sweep",
-    "x_ann_probe_many", "x_ann_index_update",
-    "ml3_pipeline_compose", "x_quality_model",
-    "scale1_salted_join", "x_bloom_contamination",
-    "x_incremental_dedup", "x_media_dedup", "x_ngram_jaccard",
-    "x_dup_groups", "x_quality_gate", "x_substring_dedup",
-    "x_bpe_merges", "x_bpe_encode",
-    "s11_stream_stream_join", "s15_stream_neardup_probe",
-    "s18_stream_late_data", "s20_stream_knn_probe",
-    // round-16 straddlers: tight-spread medians that crossed ~1.6 s on
-    // the second same-HEAD draw (x_semantic_dedup touched 2.04 s)
-    "x_semantic_dedup", "ref1_pipeline_parity",
-    "x_embed_quantize", "a7_percentiles")
 }
 
 /** Registry of per-process memoized DataFrame caches, in two tiers with
@@ -309,7 +249,8 @@ object Sessions {
     }
   }
 
-  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+              Runtime.getRuntime.availableProcessors.toString),
             appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()

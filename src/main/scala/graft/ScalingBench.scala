@@ -176,8 +176,7 @@ object ScalingBench {
   /** Samples per decade5 point (round-15 verdict item 4): the committed
     * 100x runs were wide (`x_pagerank` [86.9, 71.3, 144.7]), so the
     * per-decade ratios carried ~2x run noise — at 5 samples the median
-    * survives two contended draws, the same estimator the bench heavy
-    * tier uses ([[Q.HeavyBenchRuns]]).
+    * survives two contended draws.
     */
   val Decade5Runs = 5
 
@@ -341,7 +340,7 @@ object ScalingBench {
       val samples = scala.collection.mutable.LinkedHashMap[
         String, Vector[(Double, Long)]]()
       queries.foreach(n => samples(n) = Vector.empty)
-      Bench.schedule(queries.map(_ -> runs)).foreach { n =>
+      Bench.schedule(queries, runs).foreach { n =>
         samples(n) = samples(n) :+ run(n, dir)
       }
       System.err.println(s"[scaling] $dir done")

@@ -22,11 +22,6 @@ object SparkEntry {
       ext.Graph.qs ++ ext.Curation.qs ++ ext.Governance.qs ++
       ext.Multimodal.qs ++ io.IoQueries.qs ++ streaming.EventStream.qs ++
       PipelineBench.qs ++ RefParity.qs)
-      // heavy tier (round-16 directive 2): contention-resistant medians
-      // for the entries a loaded box can push past the 2x gate — see
-      // Q.HeavyTier / Q.HeavyBenchRuns
-      .map(q => if (Q.HeavyTier(q.name)) q.copy(benchRuns = Q.HeavyBenchRuns)
-        else q)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The stage-2/3 core of the reference: per-user transaction counts

@@ -1508,14 +1508,6 @@ object Dedup {
        GROUP BY f.threshold_bps, d.n_docs, n.corpus_docs
        ORDER BY threshold_bps"""
 
-  // 3-sample medians (the Q.benchRuns default): the dedup/
-  // similarity block is the contention-sensitive tail of the catalog —
-  // round-10 driver draws of the single-sample members
-  // (x_contamination 2.62 s, x_simhash_pairs 2.59 s,
-  // x_sorted_neighborhood 2.57 s vs 0.5-0.9 s committed, at IDENTICAL
-  // stage counts) were ~10 s of unrejectable noise per artifact. The
-  // interleaved Bench.schedule amortizes the extra passes; medians
-  // reject single-window contention.
   val qs: Seq[Q] = Seq(
     Q("x_exact_dedup", exactDedup, Some(exactDedupSql)),
     Q("x_dedup_threshold_sweep", thresholdSweep, Some(thresholdSweepSql)),

@@ -152,9 +152,6 @@ object Graph {
         prevSum = Some(s)
         iter += 1
       }
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] converged in $iter rounds, " +
-          s"edges=$nEdges parts=$parts")
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds")
       done = true

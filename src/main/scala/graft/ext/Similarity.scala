@@ -1813,11 +1813,6 @@ object Similarity {
        FROM r JOIN sz ON r.bucket = sz.bucket
        WHERE r.rank <= 3 ORDER BY r.bucket, r.rank"""
 
-  // 3-sample medians (the Q.benchRuns default): round-10 driver
-  // draws of the single-sample members (x_embed_quantize 5.19 s vs
-  // 1.69 committed, x_knn_classify 2.50 vs 0.57, x_cosine_topk 1.72 vs
-  // 0.45 — all at IDENTICAL stage counts) showed this block is the
-  // contention-sensitive tail; interleaved medians reject that noise.
   val qs: Seq[Q] = Seq(
     Q("x_cosine_topk", cosineTopK, Some(cosineTopKSql), bench = true),
     Q("x_knn_classify", knnClassify, Some(knnClassifySql), bench = true,

@@ -31,18 +31,13 @@ object Sources {
     * query suite, mirroring what a warm cluster cache / DataFrame reuse
     * would give; the raw tier survives the per-query derived-memo clear
     * (see [[graft.Memos]]). Off by default so library users and plan
-    * tests see the real FileSourceScan (pushdown assertions);
-    * SPARK_GRAFT_CACHE=1/0 force-overrides either way for A/B runs.
+    * tests see the real FileSourceScan (pushdown assertions).
     */
-  @volatile private var cacheFlag: Option[Boolean] =
-    sys.env.get("SPARK_GRAFT_CACHE").map(_ == "1")
+  @volatile private var cacheFlag: Option[Boolean] = None
   private def cacheEnabled: Boolean = cacheFlag.getOrElse(false)
 
-  /** Turn the raw-table cache on for this process unless the env var
-    * already pinned it explicitly.
-    */
-  def enableTableCache(): Unit =
-    if (sys.env.get("SPARK_GRAFT_CACHE").isEmpty) cacheFlag = Some(true)
+  /** Turn the raw-table cache on for this process. */
+  def enableTableCache(): Unit = cacheFlag = Some(true)
 
   /** Test hook: flip the raw-table cache and return the PREVIOUS flag
     * so the caller can restore it. The flag is process-global and the

@@ -474,11 +474,6 @@ object EventStream {
          floor(sum(value) * 100 + 0.5) / 100 AS sum_value
        FROM latest WHERE rk = 1 GROUP BY event_type ORDER BY event_type"""
 
-  // 3-sample medians (the Q.benchRuns default): micro-batch trigger
-  // scheduling is the noisiest thing in the catalog (round-6 driver
-  // artifacts: this block 9.3 -> 14.6 s run-to-run, unchanged code) —
-  // Bench reports each query's median of three and keeps the raw
-  // samples in BENCH_FULL.json's `runs` map.
   /** Streaming quality gate — the curation tier's map-only signals
     * ([[graft.ext.Curation.qualityGate]]'s length / word-shape /
     * repetition checks) applied to `documents` as a STREAM: because the

@@ -236,8 +236,7 @@ object Bench {
   def heavy(samples: Seq[(String, Seq[Double])]): Seq[String] =
     samples.collect {
       case (n, ss) if ss.size >= BaseRuns &&
-          ss.take(BaseRuns).sorted(Ordering.Double.TotalOrdering)
-            .apply(BaseRuns / 2) >= HeavySec => n
+          median(ss.take(BaseRuns)) >= HeavySec => n
     }
 
   /** Interleaved sampling order: `passes` round-robin passes over
@@ -254,14 +253,6 @@ object Bench {
   def schedule(names: Seq[String], passes: Int): Seq[String] =
     for (_ <- 0 until passes; n <- names) yield n
 
-  /** BENCH_FULL.json body: the [[jsonLine]] fields plus per-query Spark
-    * job/stage/task counts — box-independent cost proxies a reader can
-    * compare across environments when wall seconds disagree — and the
-    * full per-run second samples under `runs` (the `queries` value is
-    * their median) next to their per-run stage counts under
-    * `run_stages`, so a >2x second spread at flat stage counts reads as
-    * contention, not plan change, without needing a second artifact.
-    */
   /** The ML fit counters, snapshotted at end-of-run into the artifact's
     * `fit_counts` — direct fit-once provenance (round-16 directive 1):
     * the round-15 driver artifact needed stage-count forensics to show
@@ -278,6 +269,14 @@ object Bench {
     "ml_pca" -> mlx.Clustering.pcaFitCount.get(),
     "ann_ivf_kmeans" -> ext.Similarity.ivfFitCount.get())
 
+  /** BENCH_FULL.json body: the [[jsonLine]] fields plus per-query Spark
+    * job/stage/task counts — box-independent cost proxies a reader can
+    * compare across environments when wall seconds disagree — and the
+    * full per-run second samples under `runs` (the `queries` value is
+    * their median) next to their per-run stage counts under
+    * `run_stages`, so a >2x second spread at flat stage counts reads as
+    * contention, not plan change, without needing a second artifact.
+    */
   def fullJson(timings: Seq[(String, Timing)], sfDir: String,
       failed: Seq[String],
       runs: Seq[(String, Seq[Double])] = Seq.empty,
@@ -289,7 +288,6 @@ object Bench {
       sfDir, failed)
     def m(f: Timing => Long): String = timings
       .map { case (n, t) => jstr(n) + ":" + f(t) }.mkString("{", ",", "}")
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val runsJson = runs.map { case (n, ss) =>
       jstr(n) + ":" + ss.map(r3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -305,6 +303,17 @@ object Bench {
     base.dropRight(1) +
       s""","jobs":${m(_.jobs)},"stages":${m(_.stages)},"tasks":${m(_.tasks)},"runs":$runsJson,"run_stages":$runStagesJson,"warm_sec":${r3(warmSec)},"fit_counts":$fitJson,"cpus":$cpus}"""
   }
+
+  /** The one 3-decimal, locale-independent number format of every
+    * committed artifact.
+    */
+  def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** The upper median: the middle sample, or the upper of the two middle
+    * samples for an even count.
+    */
+  def median(xs: Seq[Double]): Double =
+    xs.sorted(Ordering.Double.TotalOrdering).apply(xs.length / 2)
 
   /** JSON string literal (quoted + escaped) — the one escaping path for
     * every string emitted by [[jsonLine]] and [[fullJson]], so a query
@@ -333,7 +342,6 @@ object Bench {
     */
   def jsonLine(results: Seq[(String, Double)], sfDir: String,
       failed: Seq[String], totalOverride: Option[Double] = None): String = {
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val queries = results
       .map { case (k, v) => jstr(k) + ":" + r3(v) }.mkString("{", ",", "}")
     val failedJson = failed.map(jstr).mkString("[", ",", "]")

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.Bench.{median, r3}
+
 /** Post-hoc bench-artifact provenance (round-15 verdict item 7): the
   * round-15 driver headline moved 1.86x on ZERO plan change, and
   * exonerating it took manual forensics (per-query stage diffs + runs
@@ -57,9 +59,6 @@ object BenchAudit {
       fields.flatMap { case (k, jv) => num(jv).map(k -> _) }.toMap
     case _ => Map.empty
   }
-
-  private def r3(v: Double): String =
-    "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
   /** Classify `foreign` against `reference` (both BENCH_FULL-shaped
     * JSON). Returns the one-line audit JSON.
@@ -273,8 +272,6 @@ object BenchAudit {
       case JObject(fields) => fields.map(_._1)
       case _ => Nil
     }
-    def medianOf(xs: Seq[Double]): Double =
-      xs.sorted(Ordering.Double.TotalOrdering).apply(xs.length / 2)
     def arr(v: JValue): Option[Seq[Double]] = v match {
       case JArray(vs) =>
         val ns = vs.flatMap(num)
@@ -353,8 +350,8 @@ object BenchAudit {
             fs <- num(fv \ a \ "median_sec")
             rs <- num(rv \ a \ "median_sec")
           } yield Pt(s"$s/$a@drill", a, fs, rs,
-            arr(fv \ a \ "stages").map(medianOf),
-            arr(rv \ a \ "stages").map(medianOf),
+            arr(fv \ a \ "stages").map(median),
+            arr(rv \ a \ "stages").map(median),
             spreadOf(fv \ a \ "runs"),
             spreadOf(rv \ a \ "runs"))
         }
@@ -370,8 +367,8 @@ object BenchAudit {
             for {
               fs <- num(fq \ "sec" \ p); rs <- num(rq \ "sec" \ p)
             } yield Pt(s"$s/$n@$p", n, fs, rs,
-              arr(fq \ "stages" \ p).map(medianOf),
-              arr(rq \ "stages" \ p).map(medianOf),
+              arr(fq \ "stages" \ p).map(median),
+              arr(rq \ "stages" \ p).map(median),
               spreadOf(fq \ "runs" \ p),
               spreadOf(rq \ "runs" \ p))
           }

@@ -3,9 +3,12 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.functions._
+
+import graft.Bench.{jstr, median, r3}
 
 /** Scaling-curve benchmark (round-12 directive 3): the 100x claims for
   * the headline families were plan-ASSERTED (ShuffleBudgetSpec,
@@ -180,394 +183,337 @@ object ScalingBench {
     */
   val Decade5Runs = 5
 
-  private val SfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1")
-
-  private def r3(v: Double): String =
-    "%.3f".formatLocal(java.util.Locale.ROOT, v)
-
-  private def median(xs: Seq[Double]): Double =
-    xs.sorted(Ordering.Double.TotalOrdering).apply(xs.length / 2)
-
-  /** Every committed SCALING.json draw is a 32-core draw — wall
-    * numbers without their core count are not comparable, and the
-    * round-17 incident proved it: a `--decade5-refresh` launched
-    * without `SPARK_GRAFT_CPUS` ran at the `Sessions.local` default of
-    * 4 threads and produced x100 medians 3.3x over the committed
-    * numbers at byte-identical flat stage counts and tight spreads —
-    * a config-drift artifact that perfectly impersonates a real
-    * regression. Refuse to draw on a different width unless the caller
-    * explicitly opts in (`--any-cpus`, for exploratory runs whose
-    * output will not be committed).
+  /** The artifact's top-level sections, in artifact order: the tri-sf
+    * sweep, the two decade sweeps and the two drills. `main` draws the
+    * sections it is given and carries the rest from SCALING.json.
     */
-  val RequiredCpus = 32
+  val Sections: Seq[String] =
+    Seq("queries", "decade4", "decade5", "fallback_drill", "rewrite_drill")
 
-  def main(args: Array[String]): Unit = {
-    io.Sources.enableTableCache()
-    val spark = Sessions.local(appName = "graft-scaling")
-    require(args.contains("--any-cpus") ||
-      spark.sparkContext.defaultParallelism == RequiredCpus,
-      s"ScalingBench draws are committed at $RequiredCpus cores but " +
-        s"this session has ${spark.sparkContext.defaultParallelism} — " +
-        s"run with SPARK_GRAFT_CPUS=$RequiredCpus (or pass --any-cpus " +
-        "for an exploratory draw that will not be committed)")
-    val cost = new Bench.CostListener
-    spark.sparkContext.addSparkListener(cost)
+  /** One timed sample: wall seconds and the Spark stages it ran. */
+  type Sample = (Double, Long)
 
-    // `--drill-only` / `--rewrite-drill-only`: run just that drill and
-    // print its JSON (no SCALING.json write) — for iterating on a
-    // drill's cost model without paying the tri-sf sweep each time.
-    if (args.contains("--drill-only")) {
-      println(fallbackDrill(spark, cost))
-      spark.stop()
-      return
-    }
-    if (args.contains("--rewrite-drill-only")) {
-      println(rewriteDrill(spark, cost))
-      spark.stop()
-      return
-    }
+  /** A sweep section's data: its queries, its `(label, dir)` points
+    * (dirs resolved against the session, so a fixture builds on first
+    * use), the raw tables each point warms, samples per point, the
+    * `(key, over, under)` median ratios recorded per query, and its
+    * `(fixture, growth_axis)` header — `None` for the tri-sf sweep,
+    * whose header fields sit at the artifact root.
+    */
+  private[graft] final case class Sweep(
+      queries: Seq[String],
+      points: Seq[(String, SparkSession => String)],
+      warm: Seq[String],
+      runs: Int,
+      ratios: Seq[(String, String, String)],
+      about: Option[(String, String)])
 
-    // `--sweep-only`: re-run the tri-sf sweep but carry the drill
-    // sections over from the existing SCALING.json — the fallback
-    // drill is ~1 h of wall (its fallback arm really runs the shuffle
-    // bucket-join over ~1B candidate rows) and the rewrite drill tens
-    // of minutes (its brute arm really scores the 5B-pair join), while
-    // the sweep is ~2 min, so a sweep taken on a contended box can be
-    // retaken without paying the drills again. The fallback section is
-    // REQUIRED to exist (fails fast); the rewrite section, if absent
-    // (pre-round-14 artifact), is regenerated even under --sweep-only.
-    //
-    // Parse + re-serialize the drill subtrees rather than substring
-    // slicing: a trailing newline (editor save, jq pretty-print) or a
-    // field added after a section would otherwise keep the root's
-    // closing brace and corrupt the regenerated artifact silently at
-    // write time.
-    def carriedSection(name: String): Option[String] = {
-      val p = Paths.get("SCALING.json")
-      if (!Files.exists(p)) None
-      else {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        JsonMethods.parse(new String(Files.readAllBytes(p),
-          StandardCharsets.UTF_8)) \ name match {
-          case JNothing => None
-          case section => Some(JsonMethods.compact(JsonMethods.render(section)))
-        }
-      }
-    }
-    val sweepOnly = args.contains("--sweep-only")
-    // --drills-only is the inverse of --sweep-only: re-run BOTH drills
-    // (hours) while carrying the committed sweep + decade4 sections
-    // (minutes each, but pointless to re-draw when only drill code or
-    // drill provenance changed). Provenance recorded in `mode` like
-    // every carried section.
-    val drillsOnly = args.contains("--drills-only")
-    // --decade4-refresh: re-run ONLY the decade4 section (fixture bump,
-    // Decade4Queries widening) while carrying the committed tri-sf
-    // sweep and both drills — the decade4 sweep is minutes; nothing
-    // else changed, so nothing else should be re-drawn.
-    val decade4Refresh = args.contains("--decade4-refresh")
-    // --rewrite-drill-refresh: re-run ONLY the (cheap, ~5 min) rewrite
-    // drill, carrying everything else — for when the drill's own
-    // protocol changes (round 15: the warm pass switched to sample
-    // shape). Named after --rewrite-drill-only (its print-only twin);
-    // distinct from --refresh-rewrite, the --sweep-only MODIFIER that
-    // recomputes the rewrite drill alongside a sweep re-draw.
-    val rewriteRefresh = args.contains("--rewrite-drill-refresh")
-    // --decade5-refresh: re-run ONLY the decade5 section (the 100x
-    // point for the two steepest trajectories), carrying everything
-    // else.
-    val decade5Refresh = args.contains("--decade5-refresh")
-    require(Seq(sweepOnly, drillsOnly, decade4Refresh, rewriteRefresh,
-        decade5Refresh).count(identity) <= 1,
-      "--sweep-only, --drills-only, --decade4-refresh, " +
-        "--rewrite-drill-refresh and --decade5-refresh are mutually " +
-        "exclusive")
-    // any partial mode carries every section it does not recompute
-    val partialMode = sweepOnly || drillsOnly || decade4Refresh ||
-      rewriteRefresh || decade5Refresh
-    val carryFallback = sweepOnly || decade4Refresh || rewriteRefresh ||
-      decade5Refresh
-    val keepDrill: Option[String] =
-      if (!carryFallback) None
-      else Some(carriedSection("fallback_drill").getOrElse(sys.error(
-        "carrying drills needs an existing SCALING.json with a " +
-          "fallback_drill section")))
-    // --refresh-rewrite forces the rewrite drill to re-run even under
-    // --sweep-only — needed when the drill's timed window itself
-    // changes alongside a sweep re-draw
-    val keepRewrite: Option[String] =
-      if (!carryFallback || rewriteRefresh ||
-        args.contains("--refresh-rewrite")) None
-      else carriedSection("rewrite_drill")
+  private def sfDir(sf: String): SparkSession => String =
+    _ => s"/root/testdata/sf$sf"
 
-    val reg = SparkEntry.registry.map(q => q.name -> q).toMap
-    val missing = PinnedQueries.filterNot(reg.contains)
-    require(missing.isEmpty, s"pinned queries not in registry: $missing")
+  /** The full table set: the composed mains consume all five (profiling
+    * rules, the cleaning window, feature joins, both sinks), so every
+    * decade point warms them.
+    */
+  private val DecadeTables =
+    Seq("documents", "orders", "lineitem", "customer", "events")
 
-    // per-sample stage counts are COMMITTED artifact values with a
-    // flatness red line (ScalingContractSpec), so both snapshots drain
-    // the async listener first — an in-flight event at the snapshot
-    // bleeds a stage into the neighboring sample (the round-14 drill
-    // arms' unflat [9,8,8]). The drains sit OUTSIDE the timed window.
-    def run(name: String, dir: String): (Double, Long) = {
-      val q = reg(name)
-      val (_, s0, _) = cost.drainStable()
-      val t0 = System.nanoTime()
-      Sessions.withConfs(spark, q.confs) {
-        q.benchFn.getOrElse(q.fn)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      Memos.clearDerived()
-      val (_, s1, _) = cost.drainStable()
-      (sec, s1 - s0)
-    }
-
-    // one sweep point: warm the dir's raw tier, one untimed pass of
-    // the query set, then `runs` interleaved timed passes (Runs for
-    // the tri-sf/decade4 sweeps, Decade5Runs for the wide-spread 100x
-    // point)
-    def samplePoint(queries: Seq[String], dir: String,
-        warmTables: Seq[String], runs: Int): scala.collection.Map[
-        String, (Double, Vector[Double], Vector[Long])] = {
-      warmTables.foreach { t =>
-        io.Sources.table(spark, dir, t).write.format("noop")
-          .mode("overwrite").save()
-      }
-      queries.foreach(run(_, dir)) // untimed warm pass
-      val samples = scala.collection.mutable.LinkedHashMap[
-        String, Vector[(Double, Long)]]()
-      queries.foreach(n => samples(n) = Vector.empty)
-      Bench.schedule(queries, runs).foreach { n =>
-        samples(n) = samples(n) :+ run(n, dir)
-      }
-      System.err.println(s"[scaling] $dir done")
-      samples.map { case (n, ss) =>
-        n -> (median(ss.map(_._1)), ss.map(_._1), ss.map(_._2))
-      }
-    }
-
-    if (args.contains("--decade4-only")) {
-      println(decade4Sweep(spark, samplePoint))
-      spark.stop()
-      return
-    }
-    if (args.contains("--decade5-only")) {
-      println(decade5Sweep(spark, samplePoint))
-      spark.stop()
-      return
-    }
-
-    val sfKey = SfDirs.map(d =>
-      d -> "sf([0-9.]+)".r.findFirstMatchIn(d).get.group(1)).toMap
-
-    // ---- tri-sf sweep (carried verbatim under --drills-only) ----------
-    // per sf: (query -> (median sec, per-run secs, per-run stages))
-    val queriesJson =
-      if (drillsOnly || decade4Refresh || rewriteRefresh || decade5Refresh)
-        carriedSection("queries").getOrElse(sys.error(
-        "carrying the tri-sf sweep needs an existing SCALING.json with " +
-          "a queries section"))
-      else {
-        val bySf = SfDirs.map { dir =>
-          dir -> samplePoint(PinnedQueries, dir, io.Sources.tableNames, Runs)
-        }
-        PinnedQueries.map { n =>
-          val sec = bySf.map { case (d, m) =>
-            Bench.jstr(sfKey(d)) + ":" + r3(m(n)._1) }.mkString("{", ",", "}")
-          val runs = bySf.map { case (d, m) =>
-            Bench.jstr(sfKey(d)) + ":" +
-              m(n)._2.map(r3).mkString("[", ",", "]") }.mkString("{", ",", "}")
-          val stages = bySf.map { case (d, m) =>
-            Bench.jstr(sfKey(d)) + ":" +
-              m(n)._3.mkString("[", ",", "]") }.mkString("{", ",", "}")
-          val m = bySf.toMap
-          val r001 = m(SfDirs(1))(n)._1 / math.max(m(SfDirs(0))(n)._1, 1e-9)
-          val r01 = m(SfDirs(2))(n)._1 / math.max(m(SfDirs(1))(n)._1, 1e-9)
-          Bench.jstr(n) + s""":{"sec":$sec,"runs":$runs,"stages":$stages,""" +
-            s""""ratio_001_to_01":${r3(r001)},"ratio_01_to_1":${r3(r01)}}"""
-        }.mkString("{", ",", "}")
-      }
-
-    // ---- decade-4 sweep (round-15 directive 2) ------------------------
-    val decade4Json =
-      if (drillsOnly || rewriteRefresh || decade5Refresh)
-        carriedSection("decade4").getOrElse(sys.error(
-        "carrying the decade4 sweep needs an existing SCALING.json " +
-          "with a decade4 section"))
-      else decade4Sweep(spark, samplePoint)
-
-    // ---- decade-5 sweep (100x, the steepest trajectories + mains) ----
-    // carried in every partial mode except its own refresh. A partial
-    // run against an artifact with NO decade5 section does not silently
-    // fall back to computing it (round-15 ADVICE 2: the fallback built
-    // the 100x fixture and ran a full sweep inside modes advertised as
-    // cheap) — it fails with the explicit upgrade path unless
-    // --allow-decade5-upgrade opts in, and then logs loudly.
-    val decade5Carried: Option[String] =
-      if (decade5Refresh || !partialMode) None
-      else carriedSection("decade5")
-    val decade5Json = decade5Carried.getOrElse {
-      if (partialMode && !decade5Refresh) {
-        require(args.contains("--allow-decade5-upgrade"),
-          "the carried SCALING.json has no decade5 section; a partial " +
-            "mode will not silently pay the 100x fixture + sweep — run " +
-            "--decade5-refresh, or pass --allow-decade5-upgrade to " +
-            "compute it inside this mode")
-        System.err.println("[scaling] WARNING: computing the decade5 " +
-          "section (100x fixture build + 3-point sweep) inside a " +
-          "partial mode — explicitly allowed by --allow-decade5-upgrade")
-      }
-      decade5Sweep(spark, samplePoint)
-    }
-
-    // ---- gated-fallback drill ----------------------------------------
-    val drillJson = keepDrill.getOrElse(fallbackDrill(spark, cost))
-
-    val rewriteJson = keepRewrite.getOrElse(rewriteDrill(spark, cost))
-
-    // provenance: a partial regeneration carries sections from a PRIOR
-    // run (the drills are hours, the sweeps minutes — neither should
-    // force re-paying the other) — record which, so the artifact never
-    // implies one run produced all
-    val carried = (if (keepDrill.isDefined) Seq("fallback_drill")
-      else Nil) ++
-      (if (keepRewrite.isDefined) Seq("rewrite_drill") else Nil) ++
-      (if (drillsOnly) Seq("queries", "decade4") else Nil) ++
-      (if (decade4Refresh) Seq("queries") else Nil) ++
-      (if (rewriteRefresh) Seq("queries", "decade4") else Nil) ++
-      (if (decade5Refresh) Seq("queries", "decade4") else Nil) ++
-      (if (decade5Carried.isDefined) Seq("decade5") else Nil)
-    val mode =
-      if (carried.isEmpty) "full"
-      else if (drillsOnly)
-        s"drills_reusing_committed_${carried.mkString("+")}"
-      else if (decade4Refresh)
-        s"decade4_reusing_committed_${carried.mkString("+")}"
-      else if (rewriteRefresh)
-        s"rewrite_reusing_committed_${carried.mkString("+")}"
-      else if (decade5Refresh)
-        s"decade5_reusing_committed_${carried.mkString("+")}"
-      else s"sweep_reusing_committed_${carried.mkString("+")}"
-    val json =
-      s"""{"generated_by":"graft.ScalingBench","mode":"$mode",""" +
-        s""""cpus":${spark.sparkContext.defaultParallelism},""" +
-        s""""runs_per_point":$Runs,""" +
-        s""""sfs":${SfDirs.map(d => Bench.jstr(sfKey(d)))
-          .mkString("[", ",", "]")},""" +
-        s""""ratio_ceiling_01_to_1":${r3(RatioCeiling)},""" +
-        s""""queries":$queriesJson,"decade4":$decade4Json,""" +
-        s""""decade5":$decade5Json,""" +
-        s""""fallback_drill":$drillJson,""" +
-        s""""rewrite_drill":$rewriteJson}"""
-    Files.write(Paths.get("SCALING.json"),
-      json.getBytes(StandardCharsets.UTF_8))
-    spark.stop()
-    println(json)
-  }
+  /** The tri-sf sweep: [[PinnedQueries]] at sf0.001 / sf0.01 / sf0.1. */
+  private[graft] val TriSf = Sweep(PinnedQueries,
+    Seq("0.001", "0.01", "0.1").map(sf => sf -> sfDir(sf)),
+    io.Sources.tableNames, Runs,
+    Seq(("ratio_001_to_01", "0.01", "0.001"),
+      ("ratio_01_to_1", "0.1", "0.01")),
+    None)
 
   /** The 4th sweep point for [[Decade4Queries]]: times each family at
     * sf0.1 AND at the 10x [[ensureDecadeFixture]] in the SAME process
     * (fresh same-session sf0.1 medians, so the ratio compares draws
     * from one contention regime, not this run against a committed
-    * number). Same protocol as the tri-sf sweep: warm pass, then
-    * interleaved Runs-sample medians with drained per-sample stage
-    * counts. The x10/sf0.1 median ratio is the committed verdict on
+    * number). The x10/sf0.1 median ratio is the committed verdict on
     * whether the >=2.45x/decade families flatten toward linear
     * (ratio ~ 10 with fixed costs amortized) or compound
     * (quadratic work lands near prior-ratio^2 x 10, past the
     * [[RatioCeiling]] red line in `ScalingContractSpec`).
     */
-  private def decade4Sweep(spark: SparkSession,
-      samplePoint: (Seq[String], String, Seq[String], Int) =>
-        scala.collection.Map[String, (Double, Vector[Double], Vector[Long])])
-      : String = {
-    val d4dir = ensureDecadeFixture(spark)
-    val warm = Seq("documents", "orders", "lineitem", "customer", "events")
-    val points = Seq("sf0.1" -> SfDirs(2), "x10" -> d4dir)
-    val byPoint = points.map { case (label, dir) =>
-      label -> samplePoint(Decade4Queries, dir, warm, Runs)
-    }
-    val m = byPoint.toMap
-    val queriesJson = Decade4Queries.map { n =>
-      val sec = byPoint.map { case (l, p) =>
-        Bench.jstr(l) + ":" + r3(p(n)._1) }.mkString("{", ",", "}")
-      val runs = byPoint.map { case (l, p) =>
-        Bench.jstr(l) + ":" +
-          p(n)._2.map(r3).mkString("[", ",", "]") }.mkString("{", ",", "}")
-      val stages = byPoint.map { case (l, p) =>
-        Bench.jstr(l) + ":" +
-          p(n)._3.mkString("[", ",", "]") }.mkString("{", ",", "}")
-      val ratio = m("x10")(n)._1 / math.max(m("sf0.1")(n)._1, 1e-9)
-      Bench.jstr(n) + s""":{"sec":$sec,"runs":$runs,"stages":$stages,""" +
-        s""""ratio_1_to_10x":${r3(ratio)}}"""
-    }.mkString("{", ",", "}")
-    s"""{"fixture":"target/guard-fixture/decade4-v2 (50k docs: 10 """ +
-      s"""disjoint dialect vocabularies x 20 sources x 250 docs, """ +
-      s"""sf0.1-shaped per dialect; 1.5M orders / 6M lineitem / 150k """ +
-      s"""customers / 1M events, full schemas, constant per-key """ +
-      s"""depth)","growth_axis":"breadth — per-key posting """ +
-      s"""df and vertex degree held at sf0.1 levels while volume """ +
-      s"""grows 10x; the depth axis is the operators' contractual """ +
-      s"""quadratic term, guarded by maxDf / the edit-dedup block """ +
-      s"""cap","runs_per_point":$Runs,""" +
-      s""""ratio_ceiling":${r3(RatioCeiling)},"queries":$queriesJson}"""
-  }
+  private[graft] val Decade4 = Sweep(Decade4Queries,
+    Seq("sf0.1" -> sfDir("0.1"), "x10" -> ensureDecadeFixture),
+    DecadeTables, Runs, Seq(("ratio_1_to_10x", "x10", "sf0.1")),
+    Some(("target/guard-fixture/decade4-v2 (50k docs: 10 disjoint " +
+      "dialect vocabularies x 20 sources x 250 docs, sf0.1-shaped per " +
+      "dialect; 1.5M orders / 6M lineitem / 150k customers / 1M events, " +
+      "full schemas, constant per-key depth)",
+      "breadth — per-key posting df and vertex degree held at sf0.1 " +
+      "levels while volume grows 10x; the depth axis is the operators' " +
+      "contractual quadratic term, guarded by maxDf / the edit-dedup " +
+      "block cap")))
 
   /** The 5th sweep point: [[Decade5Queries]] timed at sf0.1, the 10x
     * decade4 fixture AND a 100x fixture in ONE process — three decades
     * of data in one contention regime, so the two per-decade ratios
-    * are directly comparable. Same protocol as every sweep point
-    * (warm pass, interleaved Runs-sample medians, drained flat stage
-    * counts); both per-decade ratios red-lined under [[RatioCeiling]]
-    * in `ScalingContractSpec`.
+    * are directly comparable; both red-lined under [[RatioCeiling]] in
+    * `ScalingContractSpec`.
     */
-  private def decade5Sweep(spark: SparkSession,
-      samplePoint: (Seq[String], String, Seq[String], Int) =>
-        scala.collection.Map[String, (Double, Vector[Double], Vector[Long])])
-      : String = {
-    val d4dir = ensureDecadeFixture(spark)
-    val d5dir = ensureDecade5Fixture(spark)
-    // the composed mains consume the full table set (profiling rules,
-    // the cleaning window, feature joins, both sinks), so every point
-    // warms all five fixture tables
-    val warm = Seq("documents", "orders", "lineitem", "customer", "events")
-    val points = Seq("sf0.1" -> SfDirs(2), "x10" -> d4dir, "x100" -> d5dir)
-    val byPoint = points.map { case (label, dir) =>
-      label -> samplePoint(Decade5Queries, dir, warm, Decade5Runs)
-    }
-    val m = byPoint.toMap
-    val queriesJson = Decade5Queries.map { n =>
-      val sec = byPoint.map { case (l, p) =>
-        Bench.jstr(l) + ":" + r3(p(n)._1) }.mkString("{", ",", "}")
-      val runs = byPoint.map { case (l, p) =>
-        Bench.jstr(l) + ":" +
-          p(n)._2.map(r3).mkString("[", ",", "]") }.mkString("{", ",", "}")
-      val stages = byPoint.map { case (l, p) =>
-        Bench.jstr(l) + ":" +
-          p(n)._3.mkString("[", ",", "]") }.mkString("{", ",", "}")
-      val r1 = m("x10")(n)._1 / math.max(m("sf0.1")(n)._1, 1e-9)
-      val r2 = m("x100")(n)._1 / math.max(m("x10")(n)._1, 1e-9)
-      Bench.jstr(n) + s""":{"sec":$sec,"runs":$runs,"stages":$stages,""" +
-        s""""ratio_1_to_10x":${r3(r1)},"ratio_10x_to_100x":${r3(r2)}}"""
-    }.mkString("{", ",", "}")
-    s"""{"fixture":"target/guard-fixture/decade5-v2 (500k docs: 100 """ +
-      s"""dialect vocabularies x 2000 sources, sf0.1 posting density; """ +
-      s"""15M orders / 60M lineitem at constant degree; full schemas + """ +
-      s"""1.5M customer / 10M events for the composed mains — same """ +
-      s"""parameterized construction as decade4-v2)",""" +
-      s""""growth_axis":"breadth, same construction as decade4 — """ +
-      s"""per-key posting df and vertex degree held at sf0.1 levels """ +
-      s"""while volume grows 100x","runs_per_point":$Decade5Runs,""" +
-      s""""ratio_ceiling":${r3(RatioCeiling)},"queries":$queriesJson}"""
+  private[graft] val Decade5 = Sweep(Decade5Queries,
+    Seq("sf0.1" -> sfDir("0.1"), "x10" -> ensureDecadeFixture,
+      "x100" -> ensureDecade5Fixture),
+    DecadeTables, Decade5Runs,
+    Seq(("ratio_1_to_10x", "x10", "sf0.1"),
+      ("ratio_10x_to_100x", "x100", "x10")),
+    Some(("target/guard-fixture/decade5-v2 (500k docs: 100 dialect " +
+      "vocabularies x 2000 sources, sf0.1 posting density; 15M orders / " +
+      "60M lineitem at constant degree; full schemas + 1.5M customer / " +
+      "10M events for the composed mains — same parameterized " +
+      "construction as decade4-v2)",
+      "breadth, same construction as decade4 — per-key posting df and " +
+      "vertex degree held at sf0.1 levels while volume grows 100x")))
+
+  private val Sweeps: Map[String, Sweep] =
+    Map("queries" -> TriSf, "decade4" -> Decade4, "decade5" -> Decade5)
+
+  /** A drill section's fixed fields: its fixture note, the query it
+    * prices and its two arms' names, the `false` arm first.
+    */
+  private[graft] final case class Drill(fixture: String, query: String,
+      arms: (String, String))
+
+  private[graft] val FallbackDrill = Drill("target/guard-fixture/bigemb-v1 " +
+    "(500k x 64-dim, ~128 MB uncompressed, index 4096 sig partitions)",
+    "x_knn_ann", ("fallback", "hinted"))
+
+  private[graft] val RewriteDrill = Drill("target/guard-fixture/bigemb-v1 " +
+    "(500k x 64-dim, 100-query probe batch)",
+    "x_ann_lsh_rewrite", ("brute", "rewrite"))
+
+  /** What one `main` call does: the sections it draws, and the exact
+    * committed text of every other section, copied verbatim.
+    */
+  private[graft] final case class Plan(draw: Seq[String],
+      carried: Seq[(String, String)]) {
+    def mode: String =
+      if (carried.isEmpty) "full"
+      else draw.mkString("+") + "_reusing_committed_" +
+        carried.map(_._1).mkString("+")
   }
+
+  /** Decides a draw from the section list (empty = every section), the
+    * committed SCALING.json text (if any) and this session's width.
+    * `Left` is a refusal naming the fix. Carrying needs the committed
+    * artifact to hold every carried section and to be stamped with
+    * this width: wall numbers without their core count are not
+    * comparable, and the round-17 incident proved it — a 4-wide x100
+    * redraw read 3.3x over the 32-wide committed medians at
+    * byte-identical flat stage counts, a config-drift artifact that
+    * perfectly impersonates a real regression. A full draw stamps the
+    * session's width. Pure so the spec can pin every case.
+    */
+  private[graft] def plan(args: Seq[String], committed: Option[String],
+      cpus: Int): Either[String, Plan] = {
+    val unknown = args.filterNot(Sections.contains)
+    val named = args.toSet
+    val draw = if (named.isEmpty) Sections else Sections.filter(named)
+    val carry = Sections.filterNot(draw.contains)
+    lazy val top = topLevel(committed.get).toMap
+    lazy val missing = carry.filterNot(top.contains)
+    if (unknown.nonEmpty)
+      Left(s"unknown section ${unknown.mkString(", ")} — the sections " +
+        s"are ${Sections.mkString(", ")}")
+    else if (carry.isEmpty) Right(Plan(draw, Nil))
+    else if (committed.isEmpty)
+      Left(s"drawing ${draw.mkString(" ")} carries ${carry.mkString(" ")} " +
+        "from ./SCALING.json, which does not exist — run with no " +
+        "section list to draw every section")
+    else if (missing.nonEmpty)
+      Left(s"SCALING.json has no ${missing.mkString(", ")} section to " +
+        s"carry — add ${missing.mkString(" ")} to the section list")
+    else if (!top.get("cpus").contains(cpus.toString))
+      Left(s"SCALING.json is stamped cpus=${top.getOrElse("cpus", "none")} " +
+        s"but this session has $cpus cores, and a carried section must " +
+        "share the draw's width — set SPARK_GRAFT_CPUS to the stamp, or " +
+        "run with no section list to redraw every section")
+    else Right(Plan(draw, carry.map(n => n -> top(n))))
+  }
+
+  /** The artifact's top-level fields in file order: objects and arrays
+    * as their exact source text, scalars as their token text.
+    */
+  private[graft] def topLevel(json: String): Seq[(String, String)] = {
+    val p = new JsonFactory().createParser(json)
+    try {
+      require(p.nextToken() == JsonToken.START_OBJECT,
+        "SCALING.json is not a JSON object")
+      val fields = Seq.newBuilder[(String, String)]
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName()
+        if (p.nextToken().isStructStart) {
+          val from = p.currentTokenLocation().getCharOffset.toInt
+          p.skipChildren()
+          fields += name ->
+            json.substring(from, p.currentLocation().getCharOffset.toInt)
+        } else fields += name -> p.getText
+      }
+      fields.result()
+    } finally p.close()
+  }
+
+  private def runsJson(ss: Seq[Sample]): String =
+    ss.map(s => r3(s._1)).mkString("[", ",", "]")
+
+  private def stagesJson(ss: Seq[Sample]): String =
+    ss.map(_._2).mkString("[", ",", "]")
+
+  /** One sweep section from its samples, `byPoint` in point order: per
+    * query, each point's median seconds (`sec`), every sample's seconds
+    * (`runs`) and stage count (`stages`), and the sweep's median
+    * ratios. Pure so the spec can feed committed samples back through.
+    */
+  private[graft] def sweepJson(sw: Sweep,
+      byPoint: Seq[(String, Map[String, Seq[Sample]])]): String = {
+    val m = byPoint.toMap
+    def sec(point: String, n: String): Double =
+      median(m(point)(n).map(_._1))
+    val queries = sw.queries.map { n =>
+      def perPoint(f: Seq[Sample] => String): String = byPoint
+        .map { case (l, p) => jstr(l) + ":" + f(p(n)) }.mkString("{", ",", "}")
+      val ratios = sw.ratios.map { case (key, over, under) =>
+        jstr(key) + ":" + r3(sec(over, n) / math.max(sec(under, n), 1e-9))
+      }
+      jstr(n) + (Seq(
+        "\"sec\":" + perPoint(ss => r3(median(ss.map(_._1)))),
+        "\"runs\":" + perPoint(runsJson),
+        "\"stages\":" + perPoint(stagesJson)) ++ ratios)
+        .mkString(":{", ",", "}")
+    }.mkString("{", ",", "}")
+    sw.about.fold(queries) { case (fixture, axis) =>
+      s"""{"fixture":${jstr(fixture)},"growth_axis":${jstr(axis)},""" +
+        s""""runs_per_point":${sw.runs},""" +
+        s""""ratio_ceiling":${r3(RatioCeiling)},"queries":$queries}"""
+    }
+  }
+
+  /** One drill section from its samples, each tagged with its arm
+    * (`false` = the first arm). Pure, like [[sweepJson]].
+    */
+  private[graft] def drillJson(d: Drill,
+      samples: Seq[(Boolean, Sample)]): String = {
+    def arm(on: Boolean): String = {
+      val ss = samples.collect { case (`on`, s) => s }
+      s"""{"median_sec":${r3(median(ss.map(_._1)))},""" +
+        s""""runs":${runsJson(ss)},"stages":${stagesJson(ss)}}"""
+    }
+    s"""{"fixture":${jstr(d.fixture)},"query":${jstr(d.query)},""" +
+      s"""${jstr(d.arms._1)}:${arm(false)},${jstr(d.arms._2)}:${arm(true)}}"""
+  }
+
+  /** The whole artifact: the root fields (the tri-sf sweep's header among
+    * them) and each section's text, in [[Sections]] order.
+    */
+  private[graft] def artifactJson(mode: String, cpus: Int,
+      sections: Seq[(String, String)]): String =
+    s"""{"generated_by":"graft.ScalingBench","mode":${jstr(mode)},""" +
+      s""""cpus":$cpus,"runs_per_point":${TriSf.runs},""" +
+      s""""sfs":${TriSf.points.map(p => jstr(p._1))
+        .mkString("[", ",", "]")},""" +
+      s""""ratio_ceiling_01_to_1":${r3(RatioCeiling)},""" +
+      sections.map { case (n, s) => jstr(n) + ":" + s }.mkString(",") + "}"
+
+  /** `runMain graft.ScalingBench [section ...]`: draws the named
+    * [[Sections]] (every section when none is named) and writes
+    * SCALING.json in the working directory, carrying every other
+    * section verbatim from the SCALING.json already there — the
+    * fallback drill is ~755 s a sample at 32 cores, so a sweep can be
+    * retaken without paying the drills again. `mode` records which
+    * sections were carried, so the artifact never implies one run
+    * produced all. Refuses (see [[plan]]) before any sample runs.
+    */
+  def main(args: Array[String]): Unit = {
+    io.Sources.enableTableCache()
+    val spark = Sessions.local(appName = "graft-scaling")
+    val cpus = spark.sparkContext.defaultParallelism
+    val path = Paths.get("SCALING.json")
+    val committed = Option.when(Files.exists(path))(
+      new String(Files.readAllBytes(path), StandardCharsets.UTF_8))
+    val todo = plan(args.toSeq, committed, cpus)
+      .fold(why => { spark.stop(); sys.error(why) }, identity)
+    val cost = new Bench.CostListener
+    spark.sparkContext.addSparkListener(cost)
+
+    val reg = SparkEntry.registry.map(q => q.name -> q).toMap
+    val missing = PinnedQueries.filterNot(reg.contains)
+    require(missing.isEmpty, s"pinned queries not in registry: $missing")
+
+    // one sweep point: warm the dir's raw tier, one untimed pass of the
+    // query set, then `runs` interleaved timed passes
+    // ([[Bench.schedule]] — consecutive samples of one query are
+    // separated by a full pass, so the median spans contention windows)
+    def samplePoint(sw: Sweep, dir: String): Map[String, Seq[Sample]] = {
+      sw.warm.foreach { t =>
+        io.Sources.table(spark, dir, t).write.format("noop")
+          .mode("overwrite").save()
+      }
+      def run(name: String): Sample = {
+        val q = reg(name)
+        Sessions.withConfs(spark, q.confs) {
+          timedWrite(cost)(q.benchFn.getOrElse(q.fn)(spark, dir))
+        }
+      }
+      sw.queries.foreach(run) // untimed warm pass
+      val samples = Bench.schedule(sw.queries, sw.runs).map(n => n -> run(n))
+      System.err.println(s"[scaling] $dir done")
+      samples.groupMap(_._1)(_._2)
+    }
+
+    def draw(section: String): String = section match {
+      case "fallback_drill" => fallbackDrill(spark, cost)
+      case "rewrite_drill" => rewriteDrill(spark, cost)
+      case sweep =>
+        val sw = Sweeps(sweep)
+        // every point's dir first: fixtures build before any sample
+        val dirs = sw.points.map { case (label, dir) => label -> dir(spark) }
+        sweepJson(sw, dirs.map { case (label, d) =>
+          label -> samplePoint(sw, d) })
+    }
+
+    val carried = todo.carried.toMap
+    val json = artifactJson(todo.mode, cpus,
+      Sections.map(n => n -> carried.getOrElse(n, draw(n))))
+    Files.write(path, json.getBytes(StandardCharsets.UTF_8))
+    spark.stop()
+    println(json)
+  }
+
+  /** One timed sample: drain the listener, time `df`'s build and a noop
+    * write, clear derived memos, drain again. Per-sample stage counts
+    * are COMMITTED artifact values with a flatness red line
+    * (ScalingContractSpec), so both snapshots drain the async listener
+    * first — an in-flight event at the snapshot bleeds a stage into the
+    * neighboring sample (the round-14 drill arms' unflat [9,8,8]). The
+    * drains sit OUTSIDE the timed window.
+    */
+  private def timedWrite(cost: Bench.CostListener)(df: => DataFrame)
+      : Sample = {
+    val (_, s0, _) = cost.drainStable()
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    val sec = (System.nanoTime() - t0) / 1e9
+    Memos.clearDerived()
+    val (_, s1, _) = cost.drainStable()
+    (sec, s1 - s0)
+  }
+
+  /** [[Runs]] samples per arm, interleaved (false, true, false, ...) so
+    * each arm's median spans contention windows instead of one arm
+    * owning one window — the round-9 lesson [[Bench.schedule]] encodes
+    * (round-12 ADVICE: the back-to-back version let a single contention
+    * window skew a whole arm).
+    */
+  private def interleaved(sample: Boolean => Sample): Seq[(Boolean, Sample)] =
+    (1 to Runs).flatMap(_ => Seq(false -> sample(false), true -> sample(true)))
 
   /** One fixture root for every guard/scale fixture — was hardcoded
     * per method (round-15 ADVICE 4).
     */
-  private val FixtureRoot = "/root/repo/target/guard-fixture"
+  private[graft] val FixtureRoot = "/root/repo/target/guard-fixture"
 
   /** Scale parameters for one decade fixture — decade4-v2 (10x) and
     * decade5-v2 (100x) are the SAME hash-seeded construction at
@@ -735,21 +681,12 @@ object ScalingBench {
     */
   private[graft] def ensureDecade5Fixture(spark: SparkSession): String =
     ensureDecadeFixtureFor(spark, Decade5Spec)
-
-  /** Both arms of the probe-broadcast gate on the 500k-vector /
-    * ~128 MB fixture (same deterministic construction as
-    * `GuardFireDrillSpec` fixture D — the sizes genuinely trip the
-    * default 64 MB cap, no conf override on the fallback arm). Asserts
-    * each arm really is on its branch (analyzed-plan hint count) before
-    * timing it, so the recorded numbers can't silently both measure the
-    * same plan.
+  /** The shared 500k-vector / ~128 MB drill fixture (also
+    * `GuardFireDrillSpec` fixture D). Returns its dir; builds it on
+    * first use.
     */
-  /** The shared 500k-vector / ~128 MB drill fixture (same
-    * deterministic construction as `GuardFireDrillSpec` fixture D).
-    * Returns its dir; builds it on first use.
-    */
-  private def ensureDrillFixture(spark: SparkSession): String = {
-    val dir = "/root/repo/target/guard-fixture/bigemb-v1"
+  private[graft] def ensureDrillFixture(spark: SparkSession): String = {
+    val dir = s"$FixtureRoot/bigemb-v1"
     val path = s"$dir/embeddings.parquet"
     if (!new java.io.File(s"$path/_SUCCESS").exists) {
       spark.range(500000).select(
@@ -773,17 +710,20 @@ object ScalingBench {
   private[graft] def ensureDecadeFixture(spark: SparkSession): String =
     ensureDecadeFixtureFor(spark, Decade4Spec)
 
+  /** Both arms of the probe-broadcast gate on the 500k-vector /
+    * ~128 MB fixture (same deterministic construction as
+    * `GuardFireDrillSpec` fixture D — the sizes genuinely trip the
+    * default 64 MB cap, no conf override on the fallback arm). Asserts
+    * each arm really is on its branch (analyzed-plan hint count) before
+    * timing it, so the recorded numbers can't silently both measure the
+    * same plan.
+    */
   private def fallbackDrill(spark: SparkSession,
       cost: Bench.CostListener): String = {
     val dir = ensureDrillFixture(spark)
 
     // one SAMPLE per call, with the conf flipped and the branch
-    // re-asserted each time: the two arms' samples INTERLEAVE
-    // (fallback, hinted, fallback, hinted, ...) so each arm's median
-    // spans contention windows instead of one arm owning one window —
-    // the same round-9 lesson Bench.schedule encodes for the tri-sf
-    // sweep (round-12 ADVICE: the back-to-back version let a single
-    // contention window skew a whole arm).
+    // re-asserted each time, the arms' samples interleaved.
     // the drill flips ProbeBroadcastMaxBytesKey per-arm via a
     // defensive unset OUTSIDE withConfs (the fallback arm needs the
     // cap ABSENT even if a caller left an override behind) — so
@@ -794,7 +734,7 @@ object ScalingBench {
     val priorCap =
       spark.conf.getOption(ext.Similarity.ProbeBroadcastMaxBytesKey)
 
-    def sample(hinted: Boolean): (Double, Long) = {
+    def sample(hinted: Boolean): Sample = {
       // defensive baseline: the fallback arm needs the cap ABSENT
       spark.conf.unset(ext.Similarity.ProbeBroadcastMaxBytesKey)
       // x_knn_ann carries Q.KBoundedAggConfs in the registry; the drill
@@ -816,14 +756,7 @@ object ScalingBench {
           s"drill arm hinted=$hinted landed on the wrong branch " +
             s"($hints hints)")
         Memos.clearDerived()
-        val (_, s0, _) = cost.drainStable()
-        val t0 = System.nanoTime()
-        ext.Similarity.knnAnn(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Memos.clearDerived()
-        val (_, s1, _) = cost.drainStable()
-        (sec, s1 - s0)
+        timedWrite(cost)(ext.Similarity.knnAnn(spark, dir))
       }
     }
 
@@ -840,28 +773,14 @@ object ScalingBench {
     }
     Memos.clearDerived()
     val samples =
-      try (1 to Runs).flatMap(_ =>
-        Seq(false -> sample(hinted = false), true -> sample(hinted = true)))
+      try interleaved(hinted => sample(hinted))
       finally priorCap match {
         case Some(v) =>
           spark.conf.set(ext.Similarity.ProbeBroadcastMaxBytesKey, v)
         case None =>
           spark.conf.unset(ext.Similarity.ProbeBroadcastMaxBytesKey)
       }
-    val (fbRuns, fbStages) =
-      (samples.collect { case (false, s) => s._1 },
-        samples.collect { case (false, s) => s._2 })
-    val (hRuns, hStages) =
-      (samples.collect { case (true, s) => s._1 },
-        samples.collect { case (true, s) => s._2 })
-    def armJson(runs: Seq[Double], stages: Seq[Long]): String =
-      s"""{"median_sec":${r3(median(runs))},""" +
-        s""""runs":${runs.map(r3).mkString("[", ",", "]")},""" +
-        s""""stages":${stages.mkString("[", ",", "]")}}"""
-    s"""{"fixture":"target/guard-fixture/bigemb-v1 (500k x 64-dim, """ +
-      s"""~128 MB uncompressed, index 4096 sig partitions)",""" +
-      s""""query":"x_knn_ann","fallback":${armJson(fbRuns, fbStages)},""" +
-      s""""hinted":${armJson(hRuns, hStages)}}"""
+    drillJson(FallbackDrill, samples)
   }
 
   /** Prices `AnnIndexRewrite` — the flag-gated Catalyst rule behind
@@ -894,29 +813,23 @@ object ScalingBench {
     // after each clearDerived, symmetrically.
     val rewriteSession = ext.Similarity.annLshRewriteSession(spark, dir)
 
-    def build(rewrite: Boolean): org.apache.spark.sql.DataFrame =
+    def build(rewrite: Boolean): DataFrame =
       if (rewrite) ext.Similarity.bruteTopK(rewriteSession, dir, QueryModulus)
       else ext.Similarity.bruteTopK(spark, dir, QueryModulus)
 
-    def probeGenerates(df: org.apache.spark.sql.DataFrame): Int =
+    def probeGenerates(df: DataFrame): Int =
       df.queryExecution.optimizedPlan.collect {
         case g: org.apache.spark.sql.catalyst.plans.logical.Generate
             if g.generatorOutput.exists(_.name == "__ann_probe") => g
       }.size
 
-    def sample(rewrite: Boolean): (Double, Long) = {
+    def sample(rewrite: Boolean): Sample = {
       val gens = probeGenerates(build(rewrite))
       require(gens == (if (rewrite) 1 else 0),
         s"rewrite drill arm rewrite=$rewrite landed on the wrong " +
           s"branch ($gens probe Generates in the optimized plan)")
       Memos.clearDerived()
-      val (_, s0, _) = cost.drainStable()
-      val t0 = System.nanoTime()
-      build(rewrite).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Memos.clearDerived()
-      val (_, s1, _) = cost.drainStable()
-      (sec, s1 - s0)
+      timedWrite(cost)(build(rewrite))
     }
 
     // untimed warm pass per arm, run through the SAME sample() shape
@@ -927,18 +840,6 @@ object ScalingBench {
     // warm pass in sample shape makes the discarded warm draw absorb
     // it, so every committed sample measures the steady-state plan
     Seq(false, true).foreach(r => sample(rewrite = r))
-    val samples = (1 to Runs).flatMap(_ =>
-      Seq(false -> sample(rewrite = false), true -> sample(rewrite = true)))
-    def arm(rewrite: Boolean): String = {
-      val runs = samples.collect { case (`rewrite`, s) => s._1 }
-      val stages = samples.collect { case (`rewrite`, s) => s._2 }
-      s"""{"median_sec":${r3(median(runs))},""" +
-        s""""runs":${runs.map(r3).mkString("[", ",", "]")},""" +
-        s""""stages":${stages.mkString("[", ",", "]")}}"""
-    }
-    s"""{"fixture":"target/guard-fixture/bigemb-v1 (500k x 64-dim, """ +
-      s"""100-query probe batch)","query":"x_ann_lsh_rewrite",""" +
-      s""""brute":${arm(rewrite = false)},""" +
-      s""""rewrite":${arm(rewrite = true)}}"""
+    drillJson(RewriteDrill, interleaved(r => sample(rewrite = r)))
   }
 }

@@ -96,7 +96,7 @@ class BucketingSpec extends SparkSuite {
     // The registered probe batches collectively cover every bucket at
     // test scale, so observable pruning needs a probe set smaller than
     // the bucket count: ONE query probes 1+5+C(5,2) = 16 of 32.
-    val dir = "/root/repo/target/guard-fixture/dpp-emb-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/dpp-emb-v1"
     val path = s"$dir/embeddings.parquet"
     if (!new java.io.File(s"$path/_SUCCESS").exists) {
       // per-id seeded isotropic gaussians (the fixture-C recipe) so the

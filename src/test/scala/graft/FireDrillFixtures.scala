@@ -12,8 +12,6 @@ import org.apache.spark.sql.SparkSession
   */
 object FireDrillFixtures {
 
-  val root = "/root/repo/target/guard-fixture"
-
   /** Fixture B ("boilerplate hot key" / hotgram): 1,200 same-(source,
     * lang) ~90-char docs sharing a navigation-chrome prefix. Two 3-gram
     * keys have df 1,200 > the 1,000 default posting cutoff, and the
@@ -25,7 +23,7 @@ object FireDrillFixtures {
     * copies).
     */
   def hotgramDir(spark: SparkSession): String = {
-    val dir = s"$root/hotgram-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/hotgram-v1"
     val path = s"$dir/documents.parquet"
     if (!new File(s"$path/_SUCCESS").exists) {
       import spark.implicits._
@@ -54,7 +52,7 @@ object FireDrillFixtures {
     * and the ONLY abnormal output is the input-skew advisory.
     */
   def curateHotDir(spark: SparkSession): String = {
-    val dir = s"$root/curatehot-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/curatehot-v1"
     val path = s"$dir/documents.parquet"
     if (!new File(s"$path/_SUCCESS").exists) {
       import spark.implicits._

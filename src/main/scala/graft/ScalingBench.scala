@@ -773,7 +773,7 @@ object ScalingBench {
     }
     Memos.clearDerived()
     val samples =
-      try interleaved(hinted => sample(hinted))
+      try interleaved(sample)
       finally priorCap match {
         case Some(v) =>
           spark.conf.set(ext.Similarity.ProbeBroadcastMaxBytesKey, v)
@@ -840,6 +840,6 @@ object ScalingBench {
     // warm pass in sample shape makes the discarded warm draw absorb
     // it, so every committed sample measures the steady-state plan
     Seq(false, true).foreach(r => sample(rewrite = r))
-    drillJson(RewriteDrill, interleaved(r => sample(rewrite = r)))
+    drillJson(RewriteDrill, interleaved(sample))
   }
 }

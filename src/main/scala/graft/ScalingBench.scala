@@ -503,17 +503,18 @@ object ScalingBench {
 
   /** [[Runs]] samples per arm, interleaved (false, true, false, ...) so
     * each arm's median spans contention windows instead of one arm
-    * owning one window — the round-9 lesson [[Bench.schedule]] encodes
-    * (round-12 ADVICE: the back-to-back version let a single contention
-    * window skew a whole arm).
+    * owning one window — the lesson [[Bench.schedule]] encodes
+    * (the back-to-back version let a single contention window skew a
+    * whole arm).
     */
   private def interleaved(sample: Boolean => Sample): Seq[(Boolean, Sample)] =
     (1 to Runs).flatMap(_ => Seq(false -> sample(false), true -> sample(true)))
 
-  /** One fixture root for every guard/scale fixture — was hardcoded
-    * per method (round-15 ADVICE 4).
+  /** One fixture root for every guard/scale fixture: `target/guard-fixture`
+    * under the working directory (the repository root when run via sbt).
     */
-  private[graft] val FixtureRoot = "/root/repo/target/guard-fixture"
+  private[graft] val FixtureRoot =
+    new java.io.File("target/guard-fixture").getAbsolutePath
 
   /** Scale parameters for one decade fixture — decade4-v2 (10x) and
     * decade5-v2 (100x) are the SAME hash-seeded construction at

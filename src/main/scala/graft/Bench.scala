@@ -286,16 +286,12 @@ object Bench {
       cpus: Int = 0): String = {
     val base = jsonLine(timings.map { case (n, t) => n -> t.sec },
       sfDir, failed)
-    def m(f: Timing => Long): String = timings
-      .map { case (n, t) => jstr(n) + ":" + f(t) }.mkString("{", ",", "}")
-    val runsJson = runs.map { case (n, ss) =>
-      jstr(n) + ":" + ss.map(r3).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val runStagesJson = runStages.map { case (n, ss) =>
-      jstr(n) + ":" + ss.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val fitJson = fitCounts.map { case (n, v) => jstr(n) + ":" + v }
-      .mkString("{", ",", "}")
+    def m(f: Timing => Long): String =
+      jobj(timings.map { case (n, t) => n -> f(t).toString })
+    val runsJson = jobj(runs.map { case (n, ss) => n -> jarr(ss.map(r3)) })
+    val runStagesJson =
+      jobj(runStages.map { case (n, ss) => n -> jarr(ss.map(_.toString)) })
+    val fitJson = jobj(fitCounts.map { case (n, v) => n -> v.toString })
     // cpus records the draw's parallelism (round-17: a local[4]
     // ScalingBench mis-draw impersonated a 3x regression at flat
     // stages — wall numbers without their core count are not
@@ -314,6 +310,15 @@ object Bench {
     */
   def median(xs: Seq[Double]): Double =
     xs.sorted(Ordering.Double.TotalOrdering).apply(xs.length / 2)
+
+  /** A JSON object from (key, rendered value) pairs, each key escaped
+    * by [[jstr]].
+    */
+  def jobj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** A JSON array from rendered values. */
+  def jarr(values: Seq[String]): String = values.mkString("[", ",", "]")
 
   /** JSON string literal (quoted + escaped) — the one escaping path for
     * every string emitted by [[jsonLine]] and [[fullJson]], so a query
@@ -342,9 +347,8 @@ object Bench {
     */
   def jsonLine(results: Seq[(String, Double)], sfDir: String,
       failed: Seq[String], totalOverride: Option[Double] = None): String = {
-    val queries = results
-      .map { case (k, v) => jstr(k) + ":" + r3(v) }.mkString("{", ",", "}")
-    val failedJson = failed.map(jstr).mkString("[", ",", "]")
+    val queries = jobj(results.map { case (k, v) => k -> r3(v) })
+    val failedJson = jarr(failed.map(jstr))
     val sfJson = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
       .map(_.group(1)).getOrElse(jstr(sfDir))
     val total = totalOverride.getOrElse(results.map(_._2).sum)

@@ -3,10 +3,12 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.Bench.{median, r3}
+import graft.Bench.{jarr, jobj, jstr, median, r3}
 
 /** Post-hoc bench-artifact provenance (round-15 verdict item 7): the
   * round-15 driver headline moved 1.86x on ZERO plan change, and
@@ -19,32 +21,35 @@ import graft.Bench.{median, r3}
   * (wide run spread at consistent plans), emitting ONE JSON line whose
   * `verdict` says "noise vs plan-change" — committed next to each
   * round's artifact so the next 213-second headline carries its own
-  * explanation.
+  * explanation. SCALING.json-shaped pairs get the same rungs per
+  * (section, family, point) — [[scalingAuditJson]].
   *
-  * Usage: graft.BenchAudit <foreignArtifact> [<referenceArtifact>]
-  * (reference defaults to `git show HEAD:BENCH_FULL.json`). Writes
-  * BENCH_AUDIT.json and prints the line. Pure classification lives in
-  * [[auditJson]] so `BenchAuditSpec` pins it without artifacts.
+  * Both classifiers read an artifact the same way: flattened once into
+  * a key -> [[Side]] map ([[benchPoints]], [[scalingPoints]]), then the
+  * two maps are compared.
+  *
+  * Usage: graft.BenchAudit <foreignArtifact> [<referenceArtifact>].
+  * The foreign artifact's shape ([[shapeOf]]) picks the audit, its
+  * default reference (`git show HEAD:BENCH_FULL.json` or
+  * `HEAD:SCALING.json`) and the file it writes (BENCH_AUDIT.json or
+  * SCALING_AUDIT.json); the line is also printed. Pure classification
+  * lives in [[auditJson]] / [[scalingAuditJson]] so `BenchAuditSpec`
+  * pins it without artifacts.
   */
 object BenchAudit {
-
-  /** Stage-count agreement band between two artifacts of the same code:
-    * the async cost listener can shift ±1 stage into a neighboring
-    * query, and the composed mains' racing AQE exchange jobs add one
-    * more non-deterministic stage (the ScalingContractSpec band) — so
-    * plans are "changed" only past listener noise + the composed-main
-    * allowance. A real extra shuffle/fit moves the count by whole
-    * stages per sample and clears the band (the round-15 refit was +26
-    * stages over 3 samples).
-    */
-  private def planBand(name: String): Long =
-    2L + PipelineBench.asyncExchangeBand(name)
 
   /** Run-spread threshold: max/min > 2 at a consistent plan reads as
     * contention (the demonstrated 3x single-draw swing on this box
     * class), not cost drift.
     */
   private val SpreadThreshold = 2.0
+
+  /** One artifact entry (a bench query, or a scaling point or drill
+    * arm): its median seconds, its median sample's stage count and its
+    * run spread, each absent when the artifact does not carry it.
+    */
+  private final case class Side(sec: Option[Double],
+      stages: Option[Double], spread: Option[Double])
 
   private def num(v: JValue): Option[Double] = v match {
     case JDouble(d) => Some(d)
@@ -54,11 +59,87 @@ object BenchAudit {
     case _ => None
   }
 
-  private def numMap(v: JValue): Map[String, Double] = v match {
-    case JObject(fields) =>
-      fields.flatMap { case (k, jv) => num(jv).map(k -> _) }.toMap
-    case _ => Map.empty
+  /** The numbers of a non-empty array holding nothing but numbers. */
+  private def nums(v: JValue): Option[Seq[Double]] = v match {
+    case JArray(vs) =>
+      val ns = vs.flatMap(num)
+      if (ns.size == vs.size && ns.nonEmpty) Some(ns) else None
+    case _ => None
   }
+
+  private def str(v: JValue): Option[String] = v match {
+    case JString(s) => Some(s)
+    case _ => None
+  }
+
+  private def keys(v: JValue): Seq[String] = v match {
+    case JObject(fields) => fields.map(_._1)
+    case _ => Nil
+  }
+
+  /** The one run-spread rule: max/min over a runs array of at least two
+    * samples. An array holding anything but numbers is no spread
+    * evidence at all.
+    */
+  private def spread(runs: JValue): Option[Double] =
+    nums(runs).filter(_.size >= 2).map(xs => xs.max / math.max(xs.min, 1e-9))
+
+  /** The one plan-change test: both stage counts present and apart by
+    * more than `slack` plus the composed mains' racing AQE exchange
+    * allowance (`PipelineBench.asyncExchangeBand`, the
+    * ScalingContractSpec band). A real extra shuffle/fit moves the
+    * count by whole stages per sample and clears the band (the
+    * round-15 refit was +26 stages over 3 samples).
+    *
+    * Bench artifacts pass a slack of 2: the async cost listener can
+    * shift ±1 stage into a neighboring query. SCALING.json's
+    * within-point stage flatness is itself a committed contract, so
+    * scaling points pass 0 — a cross-round diff past the band means
+    * the code change between the rounds moved the plan at that point.
+    */
+  private def planChanged(name: String, slack: Long)(f: Side, r: Side)
+      : Boolean = f.stages.zip(r.stages).exists { case (fs, rs) =>
+    math.abs(fs - rs) > slack + PipelineBench.asyncExchangeBand(name)
+  }
+
+  private def cpus(v: JValue): Option[Double] = num(v \ "cpus").filter(_ > 0)
+
+  /** Cross-width draws are not comparable AT ALL — Sessions.local sizes
+    * shuffle partitions to the core count, so a 4-core artifact has
+    * genuinely different plans and even the stage-count signal reads as
+    * spurious plan changes (the round-17 local[4] mis-draw). Only both
+    * stamps present and different is a mismatch: an absent stamp
+    * (pre-round-17 artifacts) cannot attest one.
+    */
+  private def cpusMismatch(f: JValue, r: JValue): Boolean =
+    cpus(f).zip(cpus(r)).exists { case (a, b) => a != b }
+
+  /** The keys both sides measured (a numeric `sec` on both), in the
+    * foreign map's order.
+    */
+  private def sharedKeys(f: Map[String, Side], r: Map[String, Side])
+      : Seq[String] = f.keys.toSeq.filter(k =>
+    f(k).sec.isDefined && r.get(k).exists(_.sec.isDefined))
+
+  private def planChangesJson(keys: Seq[String], f: Map[String, Side],
+      r: Map[String, Side]): String = jobj(keys.map(k => k -> jobj(Seq(
+    "ref_stages" -> r(k).stages.fold(0L)(_.toLong).toString,
+    "foreign_stages" -> f(k).stages.fold(0L)(_.toLong).toString,
+    "ref_sec" -> r3(r(k).sec.getOrElse(0.0)),
+    "foreign_sec" -> r3(f(k).sec.getOrElse(0.0))))))
+
+  /** `key -> 3-decimal number` objects: contended spreads, moved ratios. */
+  private def numsJson(xs: Seq[(String, Double)]): String =
+    jobj(xs.map { case (k, v) => k -> r3(v) })
+
+  /** A bench artifact flattened to query name -> [[Side]]: `sec` from
+    * `queries`, `stages` from `stages`, `spread` from `runs`. A name
+    * in any of the three maps is an entry; entries are name-sorted.
+    */
+  private def benchPoints(v: JValue): ListMap[String, Side] = ListMap(
+    (keys(v \ "queries") ++ keys(v \ "stages") ++ keys(v \ "runs"))
+      .distinct.sorted.map(n => n -> Side(num(v \ "queries" \ n),
+        num(v \ "stages" \ n), spread(v \ "runs" \ n))): _*)
 
   /** Classify `foreign` against `reference` (both BENCH_FULL-shaped
     * JSON). Returns the one-line audit JSON.
@@ -67,81 +148,40 @@ object BenchAudit {
       foreignLabel: String, referenceLabel: String): String = {
     val f = JsonMethods.parse(foreign)
     val r = JsonMethods.parse(reference)
-    val fSec = numMap(f \ "queries"); val rSec = numMap(r \ "queries")
-    val fStages = numMap(f \ "stages"); val rStages = numMap(r \ "stages")
-    val shared = (fSec.keySet & rSec.keySet).toSeq.sorted
+    val (fp, rp) = (benchPoints(f), benchPoints(r))
+    val shared = sharedKeys(fp, rp)
+    val planChanges = shared.filter(n => planChanged(n, 2L)(fp(n), rp(n)))
 
-    // plan changes: median-sample stage counts disagree past the band
-    val planChanges = shared.flatMap { n =>
-      for {
-        fs <- fStages.get(n); rs <- rStages.get(n)
-        if math.abs(fs - rs) > planBand(n)
-      } yield n -> ((rs.toLong, fs.toLong,
-        fSec.getOrElse(n, 0.0), rSec.getOrElse(n, 0.0)))
-    }
-
-    // contended: wide run spread at a plan consistent with reference
-    def spread(v: JValue): Option[Double] = v match {
-      case JArray(rs) if rs.size >= 2 =>
-        val secs = rs.flatMap(num)
-        if (secs.size < 2) None
-        else Some(secs.max / math.max(secs.min, 1e-9))
-      case _ => None
-    }
-    // one definition for both sides: a threshold or filter change can
+    // contended: wide run spread at a plan consistent with reference.
+    // One definition for both sides: a threshold or filter change can
     // never diverge the foreign and reference contention sets again
-    def contendedIn(side: JValue): Seq[(String, Double)] =
-      shared.flatMap { n =>
-        spread(side \ "runs" \ n) match {
-          case Some(s) if s > SpreadThreshold &&
-            !planChanges.exists(_._1 == n) => Some(n -> s)
-          case _ => None
-        }
-      }
-    val contended = contendedIn(f)
+    def contendedIn(side: Map[String, Side]): Seq[(String, Double)] =
+      shared.filterNot(planChanges.contains).flatMap(n =>
+        side(n).spread.filter(_ > SpreadThreshold).map(n -> _))
+    val contended = contendedIn(fp)
+    // contention on the REFERENCE draw: the only evidence that can
+    // legitimately exonerate a foreign SPEED-UP — foreign contention
+    // inflates the foreign median, it can never shrink it, so a fast
+    // headline needs the slow side's noise attested (round-19 review)
+    val rContended = contendedIn(rp)
 
     // refits: fit counters in the foreign artifact above the one-fit
     // contract (absent section = pre-round-16 artifact, not judged)
-    val refits = numMap(f \ "fit_counts").collect {
-      case (n, c) if c > 1.0 => n -> c.toLong
-    }.toSeq.sortBy(_._1)
+    val refits = keys(f \ "fit_counts").sorted.flatMap(n =>
+      num(f \ "fit_counts" \ n).filter(_ > 1.0).map(c => n -> c.toLong))
 
     val fTotal = num(f \ "value").getOrElse(0.0)
     val rTotal = num(r \ "value").getOrElse(0.0)
     val ratio = if (rTotal > 0) fTotal / rTotal else 0.0
 
-    // does the foreign artifact carry ANY per-run samples? The
-    // contention_noise verdict rests on run-spread evidence; an
-    // artifact with stage maps but no runs arrays cannot attest noise,
-    // so a moved headline over it must NOT fold into "consistent"
-    // (round-16 ADVICE 2).
-    def hasRuns(v: JValue): Boolean = (v \ "runs") match {
-      case JObject(fields) => fields.exists {
-        case (_, JArray(rs)) => rs.size >= 2
-        case _ => false
-      }
-      case _ => false
-    }
-    val fHasRuns = hasRuns(f)
-    val rHasRuns = hasRuns(r)
-    // contention on the REFERENCE draw (wide reference run spread):
-    // the only evidence that can legitimately exonerate a foreign
-    // SPEED-UP — foreign contention inflates the foreign median, it
-    // can never shrink it, so a fast headline needs the slow side's
-    // noise attested (round-19 review finding)
-    val rContended = contendedIn(r)
-
-    // cross-width draws are not comparable AT ALL — Sessions.local
-    // sizes shuffle partitions to the core count, so a 4-core artifact
-    // has genuinely different plans (hashpartitioning(4), different
-    // AQE coalescing) and even the stage-count signal this audit rests
-    // on reads as spurious plan changes (the round-17 local[4]
-    // mis-draw). Both fields present and different -> name the config
-    // problem instead of misclassifying it.
-    val fCpus = num(f \ "cpus").filter(_ > 0)
-    val rCpus = num(r \ "cpus").filter(_ > 0)
-    val cpusMismatch = (for (fc <- fCpus; rc <- rCpus) yield fc != rc)
-      .getOrElse(false)
+    // does an artifact carry ANY run-spread evidence? The
+    // contention_noise verdict rests on it; an artifact with stage maps
+    // but no runs arrays cannot attest noise, so a moved headline over
+    // it must NOT fold into "consistent" (round-16 ADVICE 2).
+    def hasRuns(side: Map[String, Side]) =
+      side.values.exists(_.spread.nonEmpty)
+    def hasStages(side: Map[String, Side]) =
+      side.values.exists(_.stages.nonEmpty)
 
     // Verdict ladder, most- to least-evidenced (round-16 ADVICE 2
     // hardened the degenerate rungs):
@@ -161,48 +201,69 @@ object BenchAudit {
     //    contended reference median is inflated; foreign contention
     //    can never make the foreign draw faster).
     val verdict =
-      if (cpusMismatch) "config_mismatch"
-      else if (fStages.isEmpty || rStages.isEmpty) "insufficient_artifact"
+      if (cpusMismatch(f, r)) "config_mismatch"
+      else if (!hasStages(fp) || !hasStages(rp)) "insufficient_artifact"
       else if (fTotal <= 0 || rTotal <= 0) "insufficient_artifact"
       else if (planChanges.nonEmpty || refits.nonEmpty) "plan_change"
       else if (ratio > 1.25 && contended.nonEmpty) "contention_noise"
-      else if (ratio > 1.25 && !fHasRuns) "insufficient_artifact"
+      else if (ratio > 1.25 && !hasRuns(fp)) "insufficient_artifact"
       else if (ratio > 1.25) "headline_moved_unexplained"
       else if (ratio < 0.8 && rContended.nonEmpty) "contention_noise"
-      else if (ratio < 0.8 && !rHasRuns) "insufficient_artifact"
+      else if (ratio < 0.8 && !hasRuns(rp)) "insufficient_artifact"
       else if (ratio < 0.8) "headline_moved_unexplained"
       else "consistent"
 
-    val pcJson = planChanges.map { case (n, (rs, fs, fSecV, rSecV)) =>
-      Bench.jstr(n) + s""":{"ref_stages":$rs,"foreign_stages":$fs,""" +
-        s""""ref_sec":${r3(rSecV)},"foreign_sec":${r3(fSecV)}}"""
-    }.mkString("{", ",", "}")
-    val ctJson = contended.map { case (n, s) =>
-      Bench.jstr(n) + ":" + r3(s)
-    }.mkString("{", ",", "}")
-    val rfJson = refits.map { case (n, c) => Bench.jstr(n) + ":" + c }
-      .mkString("{", ",", "}")
-
-    s"""{"generated_by":"graft.BenchAudit",""" +
-      s""""foreign":${Bench.jstr(foreignLabel)},""" +
-      s""""reference":${Bench.jstr(referenceLabel)},""" +
-      s""""verdict":${Bench.jstr(verdict)},""" +
-      s""""headline_ratio":${r3(ratio)},""" +
-      s""""shared_queries":${shared.size},""" +
-      s""""plan_changes":$pcJson,"refits":$rfJson,""" +
-      s""""contended":$ctJson}"""
+    jobj(Seq("generated_by" -> jstr("graft.BenchAudit"),
+      "foreign" -> jstr(foreignLabel),
+      "reference" -> jstr(referenceLabel),
+      "verdict" -> jstr(verdict),
+      "headline_ratio" -> r3(ratio),
+      "shared_queries" -> shared.size.toString,
+      "plan_changes" -> planChangesJson(planChanges, fp, rp),
+      "refits" -> jobj(refits.map { case (n, c) => n -> c.toString }),
+      "contended" -> numsJson(contended)))
   }
 
-  /** Within-point stage flatness in SCALING.json is a committed
-    * contract (`ScalingContractSpec`: exact for single-plan families,
-    * ±1 for the composed mains' racing async exchanges), so
-    * CROSS-artifact stage agreement inherits the same bands — unlike
-    * the bench artifacts, whose async cost listener earns the wider
-    * [[planBand]]. A cross-round stage diff past this band means the
-    * code change between the rounds moved the plan at that point.
+  private val Drills = Seq("fallback_drill", "rewrite_drill")
+
+  /** A scaling artifact's sections in artifact order, each with its
+    * root. The tri-sf sweep lives at the artifact ROOT (families under
+    * root "queries", sample count in root "runs_per_point", the sf grid
+    * in root "sfs") — it is the section named "queries", recognized by
+    * object-shaped family entries so a bench-shaped artifact's flat
+    * name->median map never qualifies.
     */
-  private def scalingBand(name: String): Long =
-    PipelineBench.asyncExchangeBand(name).toLong
+  private def sectionsOf(v: JValue): ListMap[String, JValue] = {
+    val triSf = (v \ "queries") match {
+      case JObject(fields) => fields.exists(_._2 \ "sec" != JNothing)
+      case _ => false
+    }
+    ListMap((if (triSf) Seq("queries" -> v) else Nil) ++
+      (Seq("decade4", "decade5") ++ Drills).map(s => s -> (v \ s))
+        .filter(_._2 != JNothing): _*)
+  }
+
+  /** A scaling artifact flattened to `section/family@point` -> [[Side]],
+    * in section order, then family and point name order. Sweeps carry
+    * per-point maps under each family: `sec`, the median of `stages`,
+    * the spread of `runs`. A drill's families are its arms (those with
+    * a `median_sec`), each the one point `drill`: `median_sec`, the
+    * median of `stages`, the spread of `runs`.
+    */
+  private def scalingPoints(v: JValue): ListMap[String, Side] =
+    ListMap(sectionsOf(v).toSeq.flatMap {
+      case (s, sv) if Drills.contains(s) =>
+        keys(sv).sorted.filter(a => (sv \ a \ "median_sec") != JNothing)
+          .map(a => s"$s/$a@drill" -> Side(num(sv \ a \ "median_sec"),
+            nums(sv \ a \ "stages").map(median), spread(sv \ a \ "runs")))
+      case (s, sv) =>
+        keys(sv \ "queries").sorted.flatMap { n =>
+          val q = sv \ "queries" \ n
+          keys(q \ "sec").sorted.map(p => s"$s/$n@$p" -> Side(
+            num(q \ "sec" \ p), nums(q \ "stages" \ p).map(median),
+            spread(q \ "runs" \ p)))
+        }
+    }: _*)
 
   /** Classify two SCALING.json-shaped artifacts (round-17 verdict item
     * 5): BenchAudit classified BENCH_FULL pairs while scaling re-draws
@@ -227,7 +288,7 @@ object BenchAudit {
     *    committed artifact from round 18 on carries the stamp, so the
     *    tolerant branch ages out of the history it exists for;
     *  - `plan_change`: a shared point's stage medians disagree past
-    *    [[scalingBand]];
+    *    [[planChanged]]'s band (no listener slack);
     *  - `insufficient_artifact`: no shared points at all, a section /
     *    family / point / drill arm present on only one side (partial
     *    coverage must not read as a full-coverage "consistent" — the
@@ -258,208 +319,78 @@ object BenchAudit {
       foreignLabel: String, referenceLabel: String): String = {
     val f = JsonMethods.parse(foreign)
     val r = JsonMethods.parse(reference)
-
-    val fCpus = num(f \ "cpus").filter(_ > 0)
-    val rCpus = num(r \ "cpus").filter(_ > 0)
-    val cpusMismatch = (for (fc <- fCpus; rc <- rCpus) yield fc != rc)
-      .getOrElse(false)
-
-    def str(v: JValue): Option[String] = v match {
-      case JString(s) => Some(s)
-      case _ => None
-    }
-    def keys(v: JValue): Seq[String] = v match {
-      case JObject(fields) => fields.map(_._1)
-      case _ => Nil
-    }
-    def arr(v: JValue): Option[Seq[Double]] = v match {
-      case JArray(vs) =>
-        val ns = vs.flatMap(num)
-        if (ns.size == vs.size && ns.nonEmpty) Some(ns) else None
-      case _ => None
-    }
-
-    // the tri-sf sweep lives at the artifact ROOT (families under root
-    // "queries", sample count in root "runs_per_point", the sf grid in
-    // root "sfs") — treat it as a section named "queries" alongside the
-    // decade sections, recognized by object-shaped family entries so a
-    // bench-shaped artifact's flat name->median map never qualifies.
-    def triSf(v: JValue): Boolean = (v \ "queries") match {
-      case JObject(fields) =>
-        fields.exists { case (_, fam) => (fam \ "sec") != JNothing }
-      case _ => false
-    }
-    val DrillSections = Seq("fallback_drill", "rewrite_drill")
-    def sectionNames(v: JValue): Seq[String] =
-      (if (triSf(v)) Seq("queries") else Nil) ++
-        (Seq("decade4", "decade5") ++ DrillSections)
-          .filter(s => (v \ s) != JNothing)
-    val fSections = sectionNames(f)
-    val rSections = sectionNames(r)
-    val sections = fSections.filter(rSections.contains)
-    // a section present on only one side is an evidence hole: the
-    // verdict must not read as full-coverage "consistent" when (say)
-    // the reference predates decade5 and a decade5 regression was
-    // never compared at all
-    val sectionsUncompared =
-      (fSections ++ rSections).distinct.filterNot(sections.contains)
-    def root(v: JValue, s: String): JValue =
-      if (s == "queries") v else v \ s
-    val sectionRoots: Seq[(String, JValue, JValue)] =
-      sections.map(s => (s, root(f, s), root(r, s)))
+    val (fRoots, rRoots) = (sectionsOf(f), sectionsOf(r))
+    val sections = fRoots.keys.toSeq.filter(rRoots.contains)
 
     // per-section config agreement: same fixture (decades, drills) /
     // same sf grid (tri-sf) / same drill query, same sample count
-    val configMismatches = sectionRoots.flatMap { case (s, fv, rv) =>
-      val fx = (str(fv \ "fixture"), str(rv \ "fixture")) match {
-        case (Some(a), Some(b)) if a != b => Seq(s"$s.fixture")
-        case _ => Nil
+    val configMismatches = sections.flatMap { s =>
+      Seq[(String, JValue => Option[Any])]("fixture" -> str,
+        "sfs" -> ((v: JValue) => Some(v).collect { case a: JArray => a }),
+        "query" -> str, "runs_per_point" -> num).collect {
+        case (k, get) if get(fRoots(s) \ k).zip(get(rRoots(s) \ k))
+          .exists { case (a, b) => a != b } => s"$s.$k"
       }
-      val grid = (fv \ "sfs", rv \ "sfs") match {
-        case (a: JArray, b: JArray) if a != b => Seq(s"$s.sfs")
-        case _ => Nil
-      }
-      val dq = (str(fv \ "query"), str(rv \ "query")) match {
-        case (Some(a), Some(b)) if a != b => Seq(s"$s.query")
-        case _ => Nil
-      }
-      val rp = (num(fv \ "runs_per_point"),
-        num(rv \ "runs_per_point")) match {
-        case (Some(a), Some(b)) if a != b => Seq(s"$s.runs_per_point")
-        case _ => Nil
-      }
-      fx ++ grid ++ dq ++ rp
-    } ++ (if (cpusMismatch) Seq("cpus") else Nil)
+    } ++ (if (cpusMismatch(f, r)) Seq("cpus") else Nil)
 
-    // shared (section, family, point) grid. Sweep sections carry
-    // per-point maps under each family; a drill section's families are
-    // its arms (fallback/hinted, brute/rewrite), each one point.
-    final case class Pt(key: String, name: String, fSec: Double,
-      rSec: Double, fStages: Option[Double], rStages: Option[Double],
-      fSpread: Option[Double], rSpread: Option[Double])
-    def spreadOf(v: JValue): Option[Double] =
-      arr(v).filter(_.size >= 2)
-        .map(xs => xs.max / math.max(xs.min, 1e-9))
-    val points = sectionRoots.flatMap { case (s, fv, rv) =>
-      if (DrillSections.contains(s)) {
-        val arms = (keys(fv).toSet & keys(rv).toSet).toSeq.sorted
-          .filter(a => (fv \ a \ "median_sec") != JNothing ||
-            (rv \ a \ "median_sec") != JNothing)
-        arms.flatMap { a =>
-          for {
-            fs <- num(fv \ a \ "median_sec")
-            rs <- num(rv \ a \ "median_sec")
-          } yield Pt(s"$s/$a@drill", a, fs, rs,
-            arr(fv \ a \ "stages").map(median),
-            arr(rv \ a \ "stages").map(median),
-            spreadOf(fv \ a \ "runs"),
-            spreadOf(rv \ a \ "runs"))
-        }
-      } else {
-        val shared = (keys(fv \ "queries").toSet &
-          keys(rv \ "queries").toSet).toSeq.sorted
-        shared.flatMap { n =>
-          val fq = fv \ "queries" \ n
-          val rq = rv \ "queries" \ n
-          val pts = (keys(fq \ "sec").toSet & keys(rq \ "sec").toSet)
-            .toSeq.sorted
-          pts.flatMap { p =>
-            for {
-              fs <- num(fq \ "sec" \ p); rs <- num(rq \ "sec" \ p)
-            } yield Pt(s"$s/$n@$p", n, fs, rs,
-              arr(fq \ "stages" \ p).map(median),
-              arr(rq \ "stages" \ p).map(median),
-              spreadOf(fq \ "runs" \ p),
-              spreadOf(rq \ "runs" \ p))
-          }
-        }
-      }
-    }
-
-    // one-sided families / points / drill arms (round-18 ADVICE): the
-    // shared-key intersections above silently DROP an entry present on
-    // only one side — a renamed/removed sweep family, a decade point
-    // missing from one draw, a drill arm lacking median_sec on one
-    // side — so sub-section partial coverage could still read as
-    // full-coverage "consistent". Enumerate each side's point keys
-    // independently; anything not in the compared set is an evidence
-    // hole, reported at family granularity when the whole family is
-    // one-sided and at point granularity otherwise. An intersection
-    // entry that fails numeric extraction (a malformed median) lands
-    // here too rather than vanishing.
-    def famsOf(v: JValue, s: String): Seq[String] =
-      if (DrillSections.contains(s))
-        keys(v).filter(a => (v \ a \ "median_sec") != JNothing)
-      else keys(v \ "queries")
-    def pointKeysOf(v: JValue, s: String): Seq[String] =
-      if (DrillSections.contains(s))
-        famsOf(v, s).map(a => s"$s/$a@drill")
-      else keys(v \ "queries").flatMap(n =>
-        keys(v \ "queries" \ n \ "sec").map(p => s"$s/$n@$p"))
-    val familiesUncompared = sectionRoots.flatMap { case (s, fv, rv) =>
-      val ff = famsOf(fv, s).toSet; val rf = famsOf(rv, s).toSet
-      ((ff ++ rf) -- (ff & rf)).toSeq.sorted.map(n => s"$s/$n")
-    }
-    val comparedKeys = points.map(_.key).toSet
-    val pointsUncompared = sectionRoots.flatMap { case (s, fv, rv) =>
-      (pointKeysOf(fv, s) ++ pointKeysOf(rv, s)).distinct.sorted
-        .filterNot(comparedKeys)
-        .filterNot(k => familiesUncompared.exists(f => k.startsWith(f + "@")))
-    }
-    // a shared section malformed identically on BOTH sides (e.g. a
-    // harness schema change renaming median_sec/sec in round N whose
-    // round-N+1 audit compares two such blobs) produces zero point
-    // keys on either side — no compared points AND no one-sided
-    // entries, so it would vanish from coverage entirely (round-19
-    // review): surface it as an uncompared section
-    val sectionsEmptyBothSides = sectionRoots.collect {
-      case (s, fv, rv)
-        if pointKeysOf(fv, s).isEmpty && pointKeysOf(rv, s).isEmpty => s
-    }
-    val sectionsUncomparedAll =
-      (sectionsUncompared ++ sectionsEmptyBothSides).distinct
+    // every point of a shared section, each side enumerated on its own:
+    // an entry present on only one side — a renamed/removed family, a
+    // decade point missing from one draw, a drill arm lacking
+    // median_sec — is an evidence hole (round-18 ADVICE), reported at
+    // family granularity when the whole family is one-sided and at
+    // point granularity otherwise; so is a point whose median is not a
+    // number on one side
+    def section(k: String) = k.takeWhile(_ != '/')
+    def family(k: String) = k.take(k.lastIndexOf('@'))
+    val fp = scalingPoints(f).filter(e => sections.contains(section(e._1)))
+    val rp = scalingPoints(r).filter(e => sections.contains(section(e._1)))
+    val points = sharedKeys(fp, rp)
+    def perSection(ks: Set[String]): Seq[String] =
+      sections.flatMap(s => ks.filter(section(_) == s).toSeq.sorted)
+    val (ff, rf) = (fp.keySet.map(family), rp.keySet.map(family))
+    val familiesUncompared = perSection((ff ++ rf) -- (ff & rf))
+    val pointsUncompared = perSection(fp.keySet ++ rp.keySet -- points)
+      .filterNot(k => familiesUncompared.contains(family(k)))
+    // a section present on only one side is an evidence hole, and so is
+    // a shared section with no points on EITHER side (a harness schema
+    // change renaming median_sec/sec present in both blobs, round-19
+    // review) — it would otherwise vanish from coverage entirely
+    val sectionsUncompared =
+      (fRoots.keys ++ rRoots.keys).toSeq.distinct
+        .filterNot(sections.contains) ++
+        sections.filterNot(s => (fp.keys ++ rp.keys).exists(section(_) == s))
 
     // evidence holes: a point that cannot be judged (no stage medians,
     // non-positive wall) — auditJson screens these artifact-globally
     // (empty stage maps, non-positive totals); here the same screens
     // apply per point
-    val nonPositive = points.filter(p => p.fSec <= 0 || p.rSec <= 0)
-    val judgeable = points.filterNot(p => nonPositive.exists(_.key == p.key))
-    val noStageEvidence = judgeable.filter(p =>
-      p.fStages.isEmpty || p.rStages.isEmpty)
-    val planChanges = judgeable.flatMap { p =>
-      for {
-        fs <- p.fStages; rs <- p.rStages
-        if math.abs(fs - rs) > scalingBand(p.name)
-      } yield p
-    }
-    def ratio(p: Pt): Double = p.fSec / math.max(p.rSec, 1e-9)
+    def sec(side: Map[String, Side], k: String) = side(k).sec.getOrElse(0.0)
+    val nonPositive = points.filter(k => sec(fp, k) <= 0 || sec(rp, k) <= 0)
+    val judgeable = points.filterNot(nonPositive.contains)
+    val noStageEvidence = judgeable.filter(k =>
+      fp(k).stages.isEmpty || rp(k).stages.isEmpty)
+    val planChanges = judgeable.filter(k => planChanged(
+      family(k).drop(section(k).length + 1), 0L)(fp(k), rp(k)))
+    def ratio(k: String): Double = sec(fp, k) / math.max(sec(rp, k), 1e-9)
     // symmetric move test (round-18 ADVICE): a point silently doing
     // LESS work after a harness change moves the ratio below 1 at flat
     // stages, and max() over the other points hides it — a >1.25x move
     // in either direction needs the same spread evidence
-    def movedPast(p: Pt): Boolean = {
-      val r = ratio(p); r > 1.25 || r < 0.8
-    }
-    val moved = judgeable.filter(p => movedPast(p) &&
-      !planChanges.exists(_.key == p.key) &&
-      !noStageEvidence.exists(_.key == p.key))
+    val moved = judgeable.filter(k => (ratio(k) > 1.25 || ratio(k) < 0.8) &&
+      !planChanges.contains(k) && !noStageEvidence.contains(k))
     // side-aware exoneration (round-19 review): contention inflates a
     // median, never shrinks it — a SLOWDOWN is explained by wide
     // FOREIGN spread, a SPEED-UP only by wide REFERENCE spread (the
     // slow side was the noisy one). The evidence-absence screen uses
     // the same side the exoneration would.
-    def explainSpread(p: Pt): Option[Double] =
-      if (ratio(p) > 1.25) p.fSpread else p.rSpread
-    val (contended, movedRest) = moved.partition(p =>
-      explainSpread(p).exists(_ > SpreadThreshold))
+    def explainSpread(k: String): Option[Double] =
+      (if (ratio(k) > 1.25) fp(k) else rp(k)).spread
+    val (contended, movedRest) = moved.partition(k =>
+      explainSpread(k).exists(_ > SpreadThreshold))
     val (movedNoEvidence, movedTight) =
-      movedRest.partition(p => explainSpread(p).isEmpty)
-    val maxRatio =
-      if (judgeable.isEmpty) 0.0 else judgeable.map(ratio).max
-    val minRatio =
-      if (judgeable.isEmpty) 0.0 else judgeable.map(ratio).min
-    val evidenceHoles = sectionsUncomparedAll.nonEmpty ||
+      movedRest.partition(k => explainSpread(k).isEmpty)
+    val ratios = judgeable.map(ratio)
+    val evidenceHoles = sectionsUncompared.nonEmpty ||
       familiesUncompared.nonEmpty || pointsUncompared.nonEmpty ||
       nonPositive.nonEmpty || noStageEvidence.nonEmpty ||
       movedNoEvidence.nonEmpty
@@ -477,43 +408,29 @@ object BenchAudit {
       else if (contended.nonEmpty) "contention_noise"
       else "consistent"
 
-    val pcJson = planChanges.map { p =>
-      Bench.jstr(p.key) +
-        s""":{"ref_stages":${p.rStages.fold(0L)(_.toLong)},""" +
-        s""""foreign_stages":${p.fStages.fold(0L)(_.toLong)},""" +
-        s""""ref_sec":${r3(p.rSec)},"foreign_sec":${r3(p.fSec)}}"""
-    }.mkString("{", ",", "}")
-    val ctJson = contended.map(p =>
-      Bench.jstr(p.key) + ":" + r3(explainSpread(p).getOrElse(0.0)))
-      .mkString("{", ",", "}")
-    val mvJson = (movedTight ++ movedNoEvidence).map(p =>
-      Bench.jstr(p.key) + ":" + r3(ratio(p))).mkString("{", ",", "}")
-    val cfJson = configMismatches.map(Bench.jstr)
-      .mkString("[", ",", "]")
     // stamps are reported even when absence keeps the verdict tolerant
     // (a null here on a post-round-18 artifact is itself the finding)
-    def cpusJson(c: Option[Double]): String =
-      c.fold("null")(v => v.toLong.toString)
-
-    s"""{"generated_by":"graft.BenchAudit","mode":"scaling",""" +
-      s""""foreign":${Bench.jstr(foreignLabel)},""" +
-      s""""reference":${Bench.jstr(referenceLabel)},""" +
-      s""""verdict":${Bench.jstr(verdict)},""" +
-      s""""cpus":{"foreign":${cpusJson(fCpus)},""" +
-      s""""reference":${cpusJson(rCpus)}},""" +
-      s""""sections":${sections.map(Bench.jstr).mkString("[", ",", "]")},""" +
-      s""""sections_uncompared":${sectionsUncomparedAll.map(Bench.jstr)
-        .mkString("[", ",", "]")},""" +
-      s""""families_uncompared":${familiesUncompared.map(Bench.jstr)
-        .mkString("[", ",", "]")},""" +
-      s""""points_uncompared":${pointsUncompared.map(Bench.jstr)
-        .mkString("[", ",", "]")},""" +
-      s""""shared_points":${points.size},""" +
-      s""""max_point_ratio":${r3(maxRatio)},""" +
-      s""""min_point_ratio":${r3(minRatio)},""" +
-      s""""config_mismatches":$cfJson,""" +
-      s""""plan_changes":$pcJson,""" +
-      s""""moved":$mvJson,"contended":$ctJson}"""
+    def cpusJson(v: JValue): String = cpus(v).fold("null")(_.toLong.toString)
+    def names(xs: Seq[String]) = jarr(xs.map(jstr))
+    jobj(Seq("generated_by" -> jstr("graft.BenchAudit"),
+      "mode" -> jstr("scaling"),
+      "foreign" -> jstr(foreignLabel),
+      "reference" -> jstr(referenceLabel),
+      "verdict" -> jstr(verdict),
+      "cpus" -> jobj(Seq("foreign" -> cpusJson(f), "reference" -> cpusJson(r))),
+      "sections" -> names(sections),
+      "sections_uncompared" -> names(sectionsUncompared),
+      "families_uncompared" -> names(familiesUncompared),
+      "points_uncompared" -> names(pointsUncompared),
+      "shared_points" -> points.size.toString,
+      "max_point_ratio" -> r3(if (ratios.isEmpty) 0.0 else ratios.max),
+      "min_point_ratio" -> r3(if (ratios.isEmpty) 0.0 else ratios.min),
+      "config_mismatches" -> names(configMismatches),
+      "plan_changes" -> planChangesJson(planChanges, fp, rp),
+      "moved" -> numsJson((movedTight ++ movedNoEvidence)
+        .map(k => k -> ratio(k))),
+      "contended" -> numsJson(contended.map(k =>
+        k -> explainSpread(k).getOrElse(0.0)))))
   }
 
   /** The round-open gate (round-18 verdict item 3): the per-round
@@ -538,14 +455,43 @@ object BenchAudit {
         " — read the committed audit artifacts before building on this draw"))
   }
 
-  /** Resolve a `<rev>:<path>` spec against the CURRENT working
-    * directory's repository (round-17 ADVICE: the old hardcoded
-    * `/root/repo` silently read the wrong repo from any other
-    * checkout). Stderr is discarded rather than drained: `git show` of
-    * a blob writes only the blob to stdout, and a full stderr pipe
-    * would otherwise block the child before `waitFor`.
+  /** An artifact shape: its classifier, the reference a lone foreign
+    * artifact is audited against, and the file the audit line goes to.
     */
-  private def gitShow(spec: String): String = {
+  private[graft] final case class Shape(name: String, reference: String,
+      out: String, audit: (String, String, String, String) => String)
+  private[graft] val BenchShape = Shape("bench", "HEAD:BENCH_FULL.json",
+    "BENCH_AUDIT.json", auditJson)
+  private[graft] val ScalingShape = Shape("scaling", "HEAD:SCALING.json",
+    "SCALING_AUDIT.json", scalingAuditJson)
+
+  /** A root `"metric":"total"` (the [[Bench.jsonLine]] contract) marks
+    * a bench artifact; anything else is read as a scaling artifact.
+    */
+  private def shapeOf(json: String): Shape =
+    if ((JsonMethods.parse(json) \ "metric") == JString("total")) BenchShape
+    else ScalingShape
+
+  /** The shape a (foreign, reference) pair is audited as, or — when
+    * the two artifacts differ in shape — a refusal naming both shapes.
+    * Pure so the spec can pin it.
+    */
+  private[graft] def pairShape(foreign: String, reference: String)
+      : Either[String, Shape] = {
+    val (f, r) = (shapeOf(foreign), shapeOf(reference))
+    if (f == r) Right(f)
+    else Left(s"the foreign artifact is ${f.name}-shaped but the " +
+      s"reference is ${r.name}-shaped — audit two artifacts of one shape")
+  }
+
+  /** Resolve a `<rev>:<path>` spec against the CURRENT working
+    * directory's repository (round-17 ADVICE: a hardcoded checkout
+    * path silently read the wrong repo from any other checkout).
+    * Stderr is discarded rather than drained: `git show` of a blob
+    * writes only the blob to stdout, and a full stderr pipe would
+    * otherwise block the child before `waitFor`.
+    */
+  private[graft] def gitShow(spec: String): String = {
     val p = new ProcessBuilder("git", "show", spec)
       .redirectError(ProcessBuilder.Redirect.DISCARD)
       .start()
@@ -556,11 +502,20 @@ object BenchAudit {
     out
   }
 
+  /** An artifact's text and label: a path, or a `<rev>:<path>` git spec
+    * (self-documenting provenance for the committed audit — by audit
+    * time the artifacts compared may only exist as git blobs).
+    */
   private def readArg(p: String): (String, String) =
     if (p.contains(':') && !Files.exists(Paths.get(p)))
       (gitShow(p), s"git show $p")
     else (new String(Files.readAllBytes(Paths.get(p)),
       StandardCharsets.UTF_8), p)
+
+  /** [[pairShape]]'s shape, or its refusal as an exception. */
+  private def shapeOrRefuse(foreign: String, reference: String): Shape =
+    pairShape(foreign, reference)
+      .fold(msg => throw new IllegalArgumentException(msg), identity)
 
   private def writeLine(file: String, line: String): Unit = {
     Files.write(Paths.get(file), line.getBytes(StandardCharsets.UTF_8))
@@ -569,17 +524,24 @@ object BenchAudit {
 
   /** One-command round-open ritual: bench audit + scaling audit, both
     * artifacts written (so a red verdict can be inspected), THEN the
-    * gate — a non-green verdict on either audit fails the run.
+    * gate — a non-green verdict on either audit fails the run. A pair
+    * of mixed shapes, or the two pairs swapped, is refused before
+    * either audit runs.
     */
   private def roundOpen(specs: Seq[String]): Unit = {
     require(specs.size == 4,
       "usage: graft.BenchAudit --round-open <driverBench> <priorBench> " +
         "<currentScaling> <priorScaling> (each a path or <rev>:<path>)")
     val Seq((fb, fbL), (rb, rbL), (fs, fsL), (rs, rsL)) = specs.map(readArg)
+    val shapes = Seq(shapeOrRefuse(fb, rb), shapeOrRefuse(fs, rs))
+    require(shapes == Seq(BenchShape, ScalingShape),
+      s"round-open got a ${shapes.map(_.name).mkString(" pair, then a ")} " +
+        "pair — pass the bench pair first: <driverBench> <priorBench> " +
+        "<currentScaling> <priorScaling>")
     val benchLine = auditJson(fb, rb, fbL, rbL)
-    writeLine("BENCH_AUDIT.json", benchLine)
+    writeLine(BenchShape.out, benchLine)
     val scalingLine = scalingAuditJson(fs, rs, fsL, rsL)
-    writeLine("SCALING_AUDIT.json", scalingLine)
+    writeLine(ScalingShape.out, scalingLine)
     def verdictOf(line: String): String =
       (JsonMethods.parse(line) \ "verdict") match {
         case JString(s) => s
@@ -591,33 +553,18 @@ object BenchAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val scaling = args.contains("--scaling")
-    val paths = args.filterNot(a => a == "--scaling" || a == "--round-open")
-    if (args.contains("--round-open")) { roundOpen(paths.toSeq); return }
+    val paths = args.filterNot(_ == "--round-open").toSeq
+    if (args.contains("--round-open")) { roundOpen(paths); return }
     require(paths.nonEmpty,
-      "usage: graft.BenchAudit [--scaling] <foreignArtifact> " +
-        "[<referenceArtifact>] (either may be a <rev>:<path> git spec; " +
-        "--scaling audits SCALING.json-shaped artifacts into " +
-        "SCALING_AUDIT.json; --round-open runs both audits and gates)")
-    val (foreign, foreignPath) = readArg(paths(0))
-    // `<rev>:<path>` git specs are accepted for both arguments
-    // (self-documenting provenance for the committed audit: the
-    // round-open ritual compares the incoming driver draw against the
-    // PRIOR round's builder-committed artifact, and by audit time one
-    // or both may only exist as git blobs)
-    val defaultRef =
-      if (scaling) "HEAD:SCALING.json" else "HEAD:BENCH_FULL.json"
-    val (reference, refLabel) = paths.lift(1) match {
-      case Some(p) => readArg(p)
-      case None => (gitShow(defaultRef), s"git show $defaultRef")
-    }
-    val (line, outFile) =
-      if (scaling)
-        (scalingAuditJson(foreign, reference, foreignPath, refLabel),
-          "SCALING_AUDIT.json")
-      else
-        (auditJson(foreign, reference, foreignPath, refLabel),
-          "BENCH_AUDIT.json")
-    writeLine(outFile, line)
+      "usage: graft.BenchAudit <foreignArtifact> [<referenceArtifact>] " +
+        "(either may be a <rev>:<path> git spec; the foreign artifact's " +
+        "shape picks the audit and its default reference; --round-open " +
+        "runs both audits and gates)")
+    val (foreign, foreignLabel) = readArg(paths(0))
+    val (reference, refLabel) =
+      readArg(paths.lift(1).getOrElse(shapeOf(foreign).reference))
+    val shape = shapeOrRefuse(foreign, reference)
+    writeLine(shape.out,
+      shape.audit(foreign, reference, foreignLabel, refLabel))
   }
 }

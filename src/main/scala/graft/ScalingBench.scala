@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.functions._
 
-import graft.Bench.{jstr, median, r3}
+import graft.Bench.{jarr, jobj, jstr, median, r3}
 
 /** Scaling-curve benchmark (round-12 directive 3): the 100x claims for
   * the headline families were plan-ASSERTED (ShuffleBudgetSpec,
@@ -357,10 +357,10 @@ object ScalingBench {
   }
 
   private def runsJson(ss: Seq[Sample]): String =
-    ss.map(s => r3(s._1)).mkString("[", ",", "]")
+    jarr(ss.map(s => r3(s._1)))
 
   private def stagesJson(ss: Seq[Sample]): String =
-    ss.map(_._2).mkString("[", ",", "]")
+    jarr(ss.map(_._2.toString))
 
   /** One sweep section from its samples, `byPoint` in point order: per
     * query, each point's median seconds (`sec`), every sample's seconds
@@ -372,18 +372,17 @@ object ScalingBench {
     val m = byPoint.toMap
     def sec(point: String, n: String): Double =
       median(m(point)(n).map(_._1))
-    val queries = sw.queries.map { n =>
-      def perPoint(f: Seq[Sample] => String): String = byPoint
-        .map { case (l, p) => jstr(l) + ":" + f(p(n)) }.mkString("{", ",", "}")
+    val queries = jobj(sw.queries.map { n =>
+      def perPoint(f: Seq[Sample] => String): String =
+        jobj(byPoint.map { case (l, p) => l -> f(p(n)) })
       val ratios = sw.ratios.map { case (key, over, under) =>
-        jstr(key) + ":" + r3(sec(over, n) / math.max(sec(under, n), 1e-9))
+        key -> r3(sec(over, n) / math.max(sec(under, n), 1e-9))
       }
-      jstr(n) + (Seq(
-        "\"sec\":" + perPoint(ss => r3(median(ss.map(_._1)))),
-        "\"runs\":" + perPoint(runsJson),
-        "\"stages\":" + perPoint(stagesJson)) ++ ratios)
-        .mkString(":{", ",", "}")
-    }.mkString("{", ",", "}")
+      n -> jobj(Seq(
+        "sec" -> perPoint(ss => r3(median(ss.map(_._1)))),
+        "runs" -> perPoint(runsJson),
+        "stages" -> perPoint(stagesJson)) ++ ratios)
+    })
     sw.about.fold(queries) { case (fixture, axis) =>
       s"""{"fixture":${jstr(fixture)},"growth_axis":${jstr(axis)},""" +
         s""""runs_per_point":${sw.runs},""" +
@@ -410,12 +409,11 @@ object ScalingBench {
     */
   private[graft] def artifactJson(mode: String, cpus: Int,
       sections: Seq[(String, String)]): String =
-    s"""{"generated_by":"graft.ScalingBench","mode":${jstr(mode)},""" +
-      s""""cpus":$cpus,"runs_per_point":${TriSf.runs},""" +
-      s""""sfs":${TriSf.points.map(p => jstr(p._1))
-        .mkString("[", ",", "]")},""" +
-      s""""ratio_ceiling_01_to_1":${r3(RatioCeiling)},""" +
-      sections.map { case (n, s) => jstr(n) + ":" + s }.mkString(",") + "}"
+    jobj(Seq("generated_by" -> jstr("graft.ScalingBench"),
+      "mode" -> jstr(mode), "cpus" -> cpus.toString,
+      "runs_per_point" -> TriSf.runs.toString,
+      "sfs" -> jarr(TriSf.points.map(p => jstr(p._1))),
+      "ratio_ceiling_01_to_1" -> r3(RatioCeiling)) ++ sections)
 
   /** `runMain graft.ScalingBench [section ...]`: draws the named
     * [[Sections]] (every section when none is named) and writes

@@ -632,4 +632,97 @@ class BenchAuditSpec extends AnyFunSuite {
     assert((parsed \ "shared_points").values.toString.toInt == 6)
     assert((parsed \ "verdict").values == "consistent")
   }
+
+  private def committed(name: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(name)),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  test("the committed artifacts read as consistent against themselves, " +
+      "every entry compared") {
+    import org.json4s._
+    val bench = committed("BENCH_FULL.json")
+    val b = JsonMethods.parse(BenchAudit.auditJson(bench, bench, "f", "r"))
+    assert((b \ "verdict").values == "consistent")
+    val queries = (JsonMethods.parse(bench) \ "queries").values
+      .asInstanceOf[Map[String, Any]]
+    assert(queries.size >= 150)
+    assert((b \ "shared_queries").values.toString.toInt == queries.size)
+
+    val scaling = committed("SCALING.json")
+    val s = JsonMethods.parse(BenchAudit.scalingAuditJson(
+      scaling, scaling, "f", "r"))
+    assert((s \ "verdict").values == "consistent")
+    for (k <- Seq("sections_uncompared", "families_uncompared",
+        "points_uncompared"))
+      assert((s \ k).values == List.empty, k)
+    // (family, point) entries of the three sweeps plus the drill arms,
+    // counted from the file itself
+    val a = JsonMethods.parse(scaling)
+    def fields(v: JValue): List[(String, JValue)] = v match {
+      case JObject(fs) => fs
+      case _ => Nil
+    }
+    val sweepPoints = Seq(a, a \ "decade4", a \ "decade5").map(root =>
+      fields(root \ "queries").map(fam => fields(fam._2 \ "sec").size).sum)
+    val arms = Seq("fallback_drill", "rewrite_drill").map(d =>
+      fields(a \ d).count(_._2 \ "median_sec" != JNothing))
+    assert(sweepPoints.forall(_ > 0) && arms == Seq(2, 2))
+    assert((s \ "shared_points").values.toString.toInt ==
+      sweepPoints.sum + arms.sum)
+  }
+
+  test("the artifact's shape picks the audit; a mixed pair is refused " +
+      "naming both shapes") {
+    import BenchAudit.{BenchShape, ScalingShape, pairShape}
+    val headlineOnly = """{"metric":"total","value":213.7}"""
+    assert(pairShape(reference, headlineOnly) == Right(BenchShape))
+    assert(pairShape(scalingRef, scalingRef) == Right(ScalingShape))
+    val (bench, scaling) =
+      (committed("BENCH_FULL.json"), committed("SCALING.json"))
+    assert(pairShape(bench, bench) == Right(BenchShape))
+    assert(pairShape(scaling, scaling) == Right(ScalingShape))
+    assert((BenchShape.reference, BenchShape.out) ==
+      ("HEAD:BENCH_FULL.json", "BENCH_AUDIT.json"))
+    assert((ScalingShape.reference, ScalingShape.out) ==
+      ("HEAD:SCALING.json", "SCALING_AUDIT.json"))
+    for ((f, r) <- Seq(bench -> scaling, scalingRef -> reference))
+      pairShape(f, r) match {
+        case Left(msg) =>
+          assert(msg.contains("bench") && msg.contains("scaling"), msg)
+        case Right(shape) => fail(s"mixed pair audited as ${shape.name}")
+      }
+  }
+
+  test("a runs array holding a non-number gives no spread evidence, " +
+      "in both modes") {
+    // the 1.9x contended bench shape, one sample in each runs array
+    // malformed: no spread evidence is left, so the move cannot read
+    // as noise
+    val foreign = artifact(
+      queries = Map("q1" -> 0.8, "x_heavy" -> 6.2,
+        "pipe1_end_to_end" -> 7.5),
+      stages = Map("q1" -> 5L, "x_heavy" -> 21L,
+        "pipe1_end_to_end" -> 47L),
+      runs = Map("x_heavy" -> Seq(2.9, 6.2, 15.0),
+        "pipe1_end_to_end" -> Seq(4.1, 7.5, 18.0)))
+      .replace("[2.9,6.2,15.0]", "[2.9,\"6.2\",15.0]")
+      .replace("[4.1,7.5,18.0]", "[4.1,null,18.0]")
+    val bench = JsonMethods.parse(
+      BenchAudit.auditJson(foreign, reference, "f", "r"))
+    assert((bench \ "verdict").values == "insufficient_artifact")
+    assert((bench \ "contended").values == Map.empty[String, Any])
+    // the same malformed sample on a wide scaling point
+    val moved = scalingArtifact(Some(32), "fx-v2", Map(
+      "x_pagerank" -> fam(
+        "sf0.1" -> (4.7, Seq(4.5, 4.7, 4.9), Seq(25L, 25L, 25L)),
+        "x100" -> (95.0, Seq(60.0, 95.0, 180.0), Seq(22L, 22L, 22L))),
+      "pipe2_curate_main" -> fam(
+        "sf0.1" -> (5.2, Seq(5.0, 5.2, 5.5), Seq(72L, 72L, 72L)),
+        "x100" -> (21.6, Seq(19.6, 21.6, 25.0), Seq(76L, 76L, 76L)))))
+      .replace("[60.0,95.0,180.0]", "[60.0,\"95.0\",180.0]")
+    val scaling = JsonMethods.parse(BenchAudit.scalingAuditJson(
+      moved, scalingRef, "f", "r"))
+    assert((scaling \ "verdict").values == "insufficient_artifact")
+    assert((scaling \ "contended").values == Map.empty[String, Any])
+  }
 }

@@ -148,7 +148,7 @@ class BenchContractSpec extends AnyFunSuite {
     * artifact, or a non-git export.
     */
   private def committedBenchFull(): (String, String) = {
-    val path = java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")
+    val path = java.nio.file.Paths.get("BENCH_FULL.json")
     def worktree() = {
       assert(java.nio.file.Files.exists(path),
         "BENCH_FULL.json missing — the committed bench artifact is part " +
@@ -157,20 +157,17 @@ class BenchContractSpec extends AnyFunSuite {
         java.nio.charset.StandardCharsets.UTF_8), "worktree")
     }
     if (sys.env.get("SPARK_GRAFT_BENCH_BLOB").contains("worktree")) worktree()
-    else if (!java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get("/root/repo/.git")))
+    // `.git` is a directory in a clone and a file in a worktree
+    else if (!java.nio.file.Files.exists(java.nio.file.Paths.get(".git")))
       worktree() // not a git checkout (source export): worktree honestly
     else {
-      val p = new ProcessBuilder("git", "-C", "/root/repo", "show",
-        "HEAD:BENCH_FULL.json").redirectErrorStream(false).start()
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      assert(p.waitFor() == 0 && out.nonEmpty,
+      val out = scala.util.Try(BenchAudit.gitShow("HEAD:BENCH_FULL.json"))
+      assert(out.isSuccess,
         "git show HEAD:BENCH_FULL.json failed inside a git checkout — " +
           "refusing to silently judge the worktree file instead; commit " +
           "the artifact or set SPARK_GRAFT_BENCH_BLOB=worktree to " +
           "self-check an uncommitted regeneration")
-      (out, "git show HEAD")
+      (out.get, "git show HEAD")
     }
   }
 

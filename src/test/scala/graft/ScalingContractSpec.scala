@@ -33,7 +33,7 @@ class ScalingContractSpec extends AnyFunSuite {
   import org.json4s.jackson.JsonMethods
 
   private lazy val raw: String = {
-    val path = java.nio.file.Paths.get("/root/repo/SCALING.json")
+    val path = java.nio.file.Paths.get("SCALING.json")
     assert(java.nio.file.Files.exists(path),
       "SCALING.json missing — run `sbt \"runMain graft.ScalingBench\"` " +
         "and commit the artifact; the scaling claims are measurement, " +

@@ -13,7 +13,7 @@ class SurveyCoverageSpec extends AnyFunSuite {
 
   test("every registered query is documented in SURVEY.md") {
     val survey = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/SURVEY.md")),
+      java.nio.file.Paths.get("SURVEY.md")),
       java.nio.charset.StandardCharsets.UTF_8)
     val undocumented = SparkEntry.registry.map(_.name)
       .filterNot(survey.contains)

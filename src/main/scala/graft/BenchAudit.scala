@@ -466,23 +466,40 @@ object BenchAudit {
     "SCALING_AUDIT.json", scalingAuditJson)
 
   /** A root `"metric":"total"` (the [[Bench.jsonLine]] contract) marks
-    * a bench artifact; anything else is read as a scaling artifact.
+    * a bench artifact and a root `"generated_by":"graft.ScalingBench"`
+    * a scaling artifact. Anything else (a per-round wrapper such as
+    * `BENCH_r22.json`, which nests the bench line under `parsed`) is
+    * refused, naming its root keys.
     */
-  private def shapeOf(json: String): Shape =
-    if ((JsonMethods.parse(json) \ "metric") == JString("total")) BenchShape
-    else ScalingShape
+  private[graft] def shapeOf(json: String): Either[String, Shape] = {
+    val root = JsonMethods.parse(json)
+    if ((root \ "metric") == JString("total")) Right(BenchShape)
+    else if ((root \ "generated_by") == JString("graft.ScalingBench"))
+      Right(ScalingShape)
+    else {
+      val keys = root match {
+        case JObject(fs) => fs.map(_._1)
+        case _ => Nil
+      }
+      Left("neither a bench artifact (root \"metric\":\"total\") nor a " +
+        "scaling artifact (root \"generated_by\":\"graft.ScalingBench\"); " +
+        s"root keys: ${keys.mkString("[", ", ", "]")}")
+    }
+  }
 
-  /** The shape a (foreign, reference) pair is audited as, or — when
-    * the two artifacts differ in shape — a refusal naming both shapes.
-    * Pure so the spec can pin it.
+  /** The shape a (foreign, reference) pair is audited as, or a refusal:
+    * naming the artifact of neither shape, or — when the two differ in
+    * shape — naming both shapes. Pure so the spec can pin it.
     */
   private[graft] def pairShape(foreign: String, reference: String)
-      : Either[String, Shape] = {
-    val (f, r) = (shapeOf(foreign), shapeOf(reference))
-    if (f == r) Right(f)
-    else Left(s"the foreign artifact is ${f.name}-shaped but the " +
-      s"reference is ${r.name}-shaped — audit two artifacts of one shape")
-  }
+      : Either[String, Shape] =
+    for {
+      f <- shapeOf(foreign).left.map("the foreign artifact is " + _)
+      r <- shapeOf(reference).left.map("the reference is " + _)
+      _ <- Either.cond(f == r, (), "the foreign artifact is " +
+        s"${f.name}-shaped but the reference is ${r.name}-shaped — " +
+        "audit two artifacts of one shape")
+    } yield f
 
   /** Resolve a `<rev>:<path>` spec against the CURRENT working
     * directory's repository (round-17 ADVICE: a hardcoded checkout
@@ -512,10 +529,11 @@ object BenchAudit {
     else (new String(Files.readAllBytes(Paths.get(p)),
       StandardCharsets.UTF_8), p)
 
-  /** [[pairShape]]'s shape, or its refusal as an exception. */
-  private def shapeOrRefuse(foreign: String, reference: String): Shape =
-    pairShape(foreign, reference)
-      .fold(msg => throw new IllegalArgumentException(msg), identity)
+  /** A [[shapeOf]] / [[pairShape]] result, or its refusal as an
+    * exception — raised before any audit file is written.
+    */
+  private def orRefuse(shape: Either[String, Shape]): Shape =
+    shape.fold(msg => throw new IllegalArgumentException(msg), identity)
 
   private def writeLine(file: String, line: String): Unit = {
     Files.write(Paths.get(file), line.getBytes(StandardCharsets.UTF_8))
@@ -533,7 +551,7 @@ object BenchAudit {
       "usage: graft.BenchAudit --round-open <driverBench> <priorBench> " +
         "<currentScaling> <priorScaling> (each a path or <rev>:<path>)")
     val Seq((fb, fbL), (rb, rbL), (fs, fsL), (rs, rsL)) = specs.map(readArg)
-    val shapes = Seq(shapeOrRefuse(fb, rb), shapeOrRefuse(fs, rs))
+    val shapes = Seq(orRefuse(pairShape(fb, rb)), orRefuse(pairShape(fs, rs)))
     require(shapes == Seq(BenchShape, ScalingShape),
       s"round-open got a ${shapes.map(_.name).mkString(" pair, then a ")} " +
         "pair — pass the bench pair first: <driverBench> <priorBench> " +
@@ -562,8 +580,8 @@ object BenchAudit {
         "runs both audits and gates)")
     val (foreign, foreignLabel) = readArg(paths(0))
     val (reference, refLabel) =
-      readArg(paths.lift(1).getOrElse(shapeOf(foreign).reference))
-    val shape = shapeOrRefuse(foreign, reference)
+      readArg(paths.lift(1).getOrElse(orRefuse(shapeOf(foreign)).reference))
+    val shape = orRefuse(pairShape(foreign, reference))
     writeLine(shape.out,
       shape.audit(foreign, reference, foreignLabel, refLabel))
   }

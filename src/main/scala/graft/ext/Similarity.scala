@@ -319,13 +319,7 @@ object Similarity {
     * count constant.
     */
   def annLsh(spark: SparkSession, dir: String, nBits: Int): DataFrame = {
-    // testdata embeddings are 64-dim (TESTDATA.md); compute() clips to
-    // the shorter of vector/plane so a dim change degrades, not breaks
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(spark, nBits)
     val sigd = corpus(spark, dir).withColumn("sig", expr("lsh_sig(emb)"))
     // query side: own signature + every 1- and 2-bit flip (all
     // distinct, so a candidate pair joins exactly once)
@@ -595,11 +589,7 @@ object Similarity {
       .flatMap(b => readAnnManifest(annIndexPath(dir, b)))
     if (!prior.exists(_._2 == fingerprint)) invalidateCorpus(spark, dir)
     val nBits = autoBits(corpus(spark, dir).count())
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(spark, nBits)
     val path = annIndexPath(dir, nBits)
     corpus(spark, dir)
       .withColumn("sig", expr("lsh_sig(emb)"))
@@ -713,11 +703,7 @@ object Similarity {
   private[graft] def annProbeWhere(spark: SparkSession, dir: String,
       queryPred: Column): DataFrame = {
     val nBits = ensureAnnIndex(spark, dir)
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(spark, nBits)
     val index = spark.read.parquet(annIndexPath(dir, nBits))
       .select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
         col("nrm").as("c_nrm"), col("sig").cast("int").as("sig"))
@@ -843,9 +829,6 @@ object Similarity {
     graft.io.Sources.tmpDir("ann_index_incr") + "/" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  private def rmTree(path: String): Unit =
-    graft.io.Sources.rmTree(path)
-
   /** [EXT] Incremental serving-index maintenance — the UPDATE story
     * the build-once/probe-many split needs to be a real deployment:
     * new embeddings arrive continuously (the `vec_id % 5 == 4` delta,
@@ -883,11 +866,7 @@ object Similarity {
   private def annIncrSigged(spark: SparkSession, dir: String,
       df: DataFrame, origin: String): DataFrame = {
     val nBits = autoBits(corpus(spark, dir).count())
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(spark, nBits)
     df.withColumn("sig", expr("lsh_sig(emb)"))
       .select(col("vec_id"), col("label"), col("emb"), col("nrm"),
         lit(origin).as("origin"), col("sig"))
@@ -902,7 +881,7 @@ object Similarity {
   private[graft] def annIncrBase(spark: SparkSession, dir: String)
       : String = {
     val path = annIndexIncrPath(dir)
-    rmTree(path)
+    graft.io.Sources.rmTree(path)
     val e = corpus(spark, dir)
     annIncrSigged(spark, dir,
       e.filter(pmod(col("vec_id"), lit(5)) =!= 4), "base")
@@ -1029,11 +1008,7 @@ object Similarity {
     */
   def lshNearDup(spark: SparkSession, dir: String): DataFrame = {
     val nBits = autoBits(corpus(spark, dir).count())
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(spark, nBits)
     val sigd = corpus(spark, dir).withColumn("sig", expr("lsh_sig(emb)"))
     val masks = 0 +: ((0 until nBits).map(i => 1 << i) ++
       (for (i <- 0 until nBits; j <- i + 1 until nBits)
@@ -1592,11 +1567,7 @@ object Similarity {
   def knnAnn(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TopKStructs.register(spark)
     val nBits = ensureAnnIndex(spark, dir)
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(spark, nBits)
     val index = spark.read.parquet(annIndexPath(dir, nBits))
       .select(col("vec_id").as("c_id"), col("label").as("c_label"),
         col("emb").as("c_emb"), col("nrm").as("c_nrm"),
@@ -1762,11 +1733,7 @@ object Similarity {
     */
   def topicCard(spark: SparkSession, dir: String): DataFrame = {
     val nBits = autoBits(corpus(spark, dir).count(), maxBits = CardMaxBits)
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig_card",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(spark, nBits, "lsh_sig_card")
     val buckets = corpus(spark, dir)
       .select(col("vec_id").as("doc_id"),
         expr("lsh_sig_card(emb)").as("bucket"))

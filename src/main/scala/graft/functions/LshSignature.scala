@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,5 +71,16 @@ object LshSignature {
   def planes(nBits: Int, dim: Int, seed: Long = 421L): Array[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
     Array.fill(nBits)(Array.fill(dim)(rnd.nextGaussian()))
+  }
+
+  /** Register `name(emb)` over `nBits` fixed-seed planes. Testdata
+    * embeddings are 64-dim (TESTDATA.md); [[compute]] clips to the
+    * shorter of vector/plane, so a dim change degrades, not breaks.
+    */
+  def register(spark: SparkSession, nBits: Int,
+      name: String = "lsh_sig"): Unit = {
+    val p = planes(nBits, 64)
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      name, exprs => LshSignature(exprs.head, p), "scala_udf")
   }
 }

@@ -17,15 +17,13 @@ import graft.io.Sources._
   */
 object IoQueries {
 
-  private def key(dir: String) = dir.replaceAll("[^a-zA-Z0-9]", "_")
-
   /** S1+S5: header CSV write (overwrite, `pre_process.py:304-306`) and
     * schema'd header CSV read (`pre_analysis.py:36-38` — but typed, not
     * all-string).
     */
   def csvRoundTripQ(spark: SparkSession, dir: String): DataFrame =
     csvRoundTrip(spark, table(spark, dir, "region"),
-      tmpDir(s"csv_region_${key(dir)}"), schemaOf("region"))
+      tmpDir(s"csv_region_${dirKey(dir)}"), schemaOf("region"))
       .orderBy(col("r_regionkey"))
 
   private val csvSql = "SELECT * FROM region ORDER BY r_regionkey"
@@ -42,7 +40,7 @@ object IoQueries {
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("wrapped", StringType)))
     csvMultilineRoundTrip(spark, wrapped,
-      tmpDir(s"csv_multiline_${key(dir)}"), schema)
+      tmpDir(s"csv_multiline_${dirKey(dir)}"), schema)
       .orderBy(col("doc_id"))
   }
 
@@ -56,12 +54,12 @@ object IoQueries {
     * over the stale one (truncated nation).
     */
   def latestPartitionQ(spark: SparkSession, dir: String): DataFrame = {
-    val target = tmpDir(s"latest_${key(dir)}")
+    val target = tmpDir(s"latest_${dirKey(dir)}")
     new File(target).listFiles().foreach(_.delete())
     val n = table(spark, dir, "nation")
 
     def writeSnapshot(df: DataFrame, name: String, mtime: Long): Unit = {
-      val staging = tmpDir(s"latest_staging_${key(dir)}_$name")
+      val staging = tmpDir(s"latest_staging_${dirKey(dir)}_$name")
       df.coalesce(1).write.mode(SaveMode.Overwrite)
         .option("header", "true").csv(staging)
       val part = new File(staging).listFiles()
@@ -86,7 +84,7 @@ object IoQueries {
     */
   def jdbcRoundTripQ(spark: SparkSession, dir: String): DataFrame =
     jdbcRoundTrip(spark, table(spark, dir, "nation"),
-      tmpDir("derby") + s"/db_${key(dir)}", "analysis")
+      tmpDir("derby") + s"/db_${dirKey(dir)}", "analysis")
       .orderBy(col("n_nationkey"))
 
   /** S5b: hive-partitioned parquet sink — `partitionBy(lang)` lays out
@@ -95,7 +93,7 @@ object IoQueries {
     * directory, asserted on the plan in `IoSpec`).
     */
   def partitionedSinkQ(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpDir(s"part_docs_${key(dir)}")
+    val out = tmpDir(s"part_docs_${dirKey(dir)}")
     table(spark, dir, "documents")
       .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(out)
     spark.read.parquet(out)
@@ -114,7 +112,7 @@ object IoQueries {
     */
   def jsonlRoundTripQ(spark: SparkSession, dir: String): DataFrame =
     jsonlRoundTrip(spark, table(spark, dir, "documents"),
-      tmpDir(s"jsonl_docs_${key(dir)}"), schemaOf("documents"))
+      tmpDir(s"jsonl_docs_${dirKey(dir)}"), schemaOf("documents"))
       .orderBy(col("doc_id"))
 
   private val jsonlSql = "SELECT * FROM documents ORDER BY doc_id"
@@ -128,7 +126,7 @@ object IoQueries {
     * losslessness contract s15 pins for JSONL.
     */
   def orcRoundTripQ(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpDir(s"orc_docs_${key(dir)}")
+    val out = tmpDir(s"orc_docs_${dirKey(dir)}")
     table(spark, dir, "documents")
       .write.mode(SaveMode.Overwrite)
       .option("compression", "zlib").orc(out)
@@ -145,8 +143,8 @@ object IoQueries {
     * asserts the file count actually collapsed.
     */
   def compactionQ(spark: SparkSession, dir: String): DataFrame = {
-    val scattered = tmpDir(s"scatter_docs_${key(dir)}")
-    val compacted = tmpDir(s"compact_docs_${key(dir)}")
+    val scattered = tmpDir(s"scatter_docs_${dirKey(dir)}")
+    val compacted = tmpDir(s"compact_docs_${dirKey(dir)}")
     table(spark, dir, "documents")
       .repartition(64)
       .write.mode(SaveMode.Overwrite).parquet(scattered)
@@ -163,7 +161,7 @@ object IoQueries {
     * readable, no rewrite of old generations.
     */
   def schemaEvolutionQ(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpDir(s"evolve_docs_${key(dir)}")
+    val root = tmpDir(s"evolve_docs_${dirKey(dir)}")
     val docs = table(spark, dir, "documents")
     docs.filter(col("doc_id") < 250)
       .select(col("doc_id"), col("lang"), col("n_chars"))

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 import graft.Q
-import graft.io.Sources.table
+import graft.io.Sources.{dirKey, rmTree, schemaOf, table, tmpDir}
 
 /** Structured Streaming over the events table (SURVEY.md §2.10 [EXT]).
   *
@@ -20,6 +21,14 @@ import graft.io.Sources.table
   *
   * At scale the file source becomes Kafka and the memory sink a Delta /
   * parquet sink; watermark + windowed state bound memory per executor.
+  *
+  * Every query but [[streamLateData]] (which writes a file between two
+  * triggers) drains through [[drain]]: [[drainToParquet]] for the
+  * full-volume sinks, [[drainToMemory]] for the driver-sized
+  * complete-mode ones, and `drain` itself for the foreachBatch upsert.
+  * Streams plan on the pinned child session; a parquet sink is read
+  * back on the CALLER's session, so the child's 8-partition conf stays
+  * out of the batch read-back plan.
   */
 object EventStream {
 
@@ -88,13 +97,6 @@ object EventStream {
     }
   }
 
-  /** Recursive delete of a sink/checkpoint dir — every streaming query
-    * starts from a fresh sink+checkpoint (a leftover checkpoint from an
-    * earlier code version would silently skip the input files).
-    */
-  private def rmTree(path: String): Unit =
-    graft.io.Sources.rmTree(path)
-
   /** The events schema as the parquet file source must declare it when
     * `ts` is on-disk TIMESTAMP(NANOS) (which Spark surfaces only as a
     * raw nanosecond long, under nanosAsLong). [[eventsStream]] swaps the
@@ -135,25 +137,64 @@ object EventStream {
     else src
   }
 
+  /** Streaming scan of testdata table `name` under its declared schema. */
+  private def tableStream(s: SparkSession, dir: String,
+      name: String): DataFrame =
+    s.readStream.schema(schemaOf(name))
+      .option("pathGlobFilter", s"$name.parquet")
+      .parquet(dir)
+
+  /** Start the query, process everything available, stop it even when
+    * processing fails.
+    */
+  private def drain(w: DataStreamWriter[Row]): Unit = {
+    val q = w.start()
+    try q.processAllAvailable()
+    finally q.stop()
+  }
+
+  /** Drain `stream` into an append-mode parquet sink under
+    * `tmpDir(sub)/dirKey(dir)` and read the sink back on `spark`, the
+    * caller's session (not the pinned child). The sink and checkpoint
+    * start fresh: a leftover checkpoint from an earlier code version
+    * would silently skip the input files. The read declares
+    * `stream.schema`, so a sink no row reached reads as zero rows where
+    * schema inference would refuse the empty dir.
+    */
+  private[graft] def drainToParquet(spark: SparkSession, stream: DataFrame,
+      sub: String, dir: String): DataFrame = {
+    val out = tmpDir(sub) + "/" + dirKey(dir)
+    rmTree(out)
+    drain(stream.writeStream
+      .outputMode("append")
+      .format("parquet")
+      .option("path", s"$out/data")
+      .option("checkpointLocation", s"$out/ckpt"))
+    spark.read.schema(stream.schema).parquet(s"$out/data")
+  }
+
+  /** Drain `stream` into a complete-mode memory sink named
+    * `<name>_<dirKey>` and return that table on the stream's session.
+    */
+  private def drainToMemory(stream: DataFrame, name: String,
+      dir: String): DataFrame = {
+    val qname = name + "_" + dirKey(dir)
+    drain(stream.writeStream
+      .outputMode("complete")
+      .format("memory")
+      .queryName(qname))
+    stream.sparkSession.table(qname)
+  }
+
   def streamTumbling(spark: SparkSession, dir: String): DataFrame = {
-    val s = streamSession(spark)
-    val qname = "stream_tumbling_" + graft.io.Sources.dirKey(dir)
-    val src = eventsStream(s, dir)
-    val agg = src
+    val agg = eventsStream(streamSession(spark), dir)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("sum_value"))
       .select(col("window.start").as("ws"), col("n_events"),
         col("sum_value"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    s.table(qname).orderBy(col("ws"))
+    drainToMemory(agg, "stream_tumbling", dir).orderBy(col("ws"))
   }
 
   private val streamTumblingSql =
@@ -254,14 +295,7 @@ object EventStream {
     * dedup state finite.
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.io.Sources.tmpDir("stream_dedup") +
-      "/" + graft.io.Sources.dirKey(dir)
-    // fresh sink+checkpoint per invocation: a leftover checkpoint from
-    // an earlier code version would silently skip the input files
-    rmTree(out)
-    val s = streamSession(spark)
-    val src = eventsStream(s, dir)
-    val deduped = src
+    val deduped = eventsStream(streamSession(spark), dir)
       .withColumn("minute", date_trunc("minute", col("ts")))
       .withWatermark("minute", "2 hours")
       .dropDuplicates("user_id", "event_type", "minute")
@@ -272,16 +306,7 @@ object EventStream {
     // dropDuplicates emits first-seen rows eagerly in append mode; the
     // watermark only evicts state — streamSession's settings are
     // exactly the right ones here (it cut streamStreamJoin 12s->2s).
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit sink schema: inference refuses an empty sink dir
-    spark.read.schema(deduped.schema).parquet(s"$out/data")
+    drainToParquet(spark, deduped, "stream_dedup", dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
       .orderBy(col("event_type"))
@@ -302,23 +327,15 @@ object EventStream {
     */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     val s = streamSession(spark)
-    val qname = "stream_static_" + graft.io.Sources.dirKey(dir)
-    val src = eventsStream(s, dir)
     val dim = table(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val enriched = src
+    val enriched = eventsStream(s, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"), "inner")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("sum_value"))
-    val q = enriched.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    s.table(qname).orderBy(col("c_mktsegment"))
+    drainToMemory(enriched, "stream_static", dir)
+      .orderBy(col("c_mktsegment"))
   }
 
   private val streamStaticJoinSql =
@@ -340,11 +357,7 @@ object EventStream {
     * DuckDB interval self-join on the same data.
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.io.Sources.tmpDir("stream_stream") +
-      "/" + graft.io.Sources.dirKey(dir)
-    rmTree(out)
-    val s = streamSession(spark)
-    val src = eventsStream(s, dir)
+    val src = eventsStream(streamSession(spark), dir)
     val views = src.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
       .withWatermark("v_ts", "2 hours")
@@ -360,19 +373,7 @@ object EventStream {
     // Inner-join matches emit eagerly (the watermark only evicts
     // state) — streamSession's settings cut this query 12s->2s when
     // they landed in round 5.
-    val q = pairs.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit sink schema (the streamAnomaly convention): a fixture
-    // where no view-purchase pair falls inside the 1-hour bound leaves
-    // an EMPTY sink dir, which schema inference refuses to read where
-    // the oracle would simply return zero rows
-    spark.read.schema(pairs.schema).parquet(s"$out/data")
+    drainToParquet(spark, pairs, "stream_stream", dir)
       .groupBy(col("v_user").as("user_id"))
       .agg(count(lit(1)).as("n_attributed"),
         round(sum(col("p_value")), 2).as("attributed_value"))
@@ -408,8 +409,7 @@ object EventStream {
     */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = graft.io.Sources.tmpDir("stream_upsert") +
-      "/" + graft.io.Sources.dirKey(dir)
+    val base = tmpDir("stream_upsert") + "/" + dirKey(dir)
     // Derby keeps a database BOOTED in the JVM after q.stop(): deleting
     // its files out from under the booted instance leaves the next
     // create=true connection resolving to the stale in-memory boot.
@@ -431,7 +431,7 @@ object EventStream {
     val src = eventsStream(s, dir)
       .select(col("user_id"), col("event_id"), col("ts").as("ts_ev"),
         col("event_type"), col("value"))
-    val q = src.writeStream
+    drain(src.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$base/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -453,10 +453,7 @@ object EventStream {
         try conn.createStatement().execute("DROP TABLE user_state_stage")
         finally conn.close()
         ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      })
     spark.read.jdbc(url, "user_state", props)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_users"),
@@ -487,17 +484,7 @@ object EventStream {
     * Output: the gate manifest summarized per (reason_mask, keep).
     */
   def streamQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.io.Sources.tmpDir("stream_gate") +
-      "/" + graft.io.Sources.dirKey(dir)
-    rmTree(out)
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val s = streamSession(spark)
-    val src = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val src = tableStream(streamSession(spark), dir, "documents")
     // the SAME projection the batch gate runs (Curation.gateSignals) —
     // not a copy: the stream literally executes the batch stage's code
     val gated = graft.ext.Curation.gateSignals(src
@@ -508,15 +495,7 @@ object EventStream {
           + when(col("s_rep"), 0).otherwise(4)).cast("int"))
       .select(col("doc_id"), col("lang"), col("reason_mask"),
         (col("reason_mask") === 0).as("keep"))
-    val q = gated.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.read.parquet(s"$out/data")
+    drainToParquet(spark, gated, "stream_gate", dir)
       .groupBy(col("reason_mask"), col("keep"))
       .agg(count(lit(1)).cast("int").as("n_docs"))
       .orderBy(col("reason_mask"))
@@ -561,31 +540,13 @@ object EventStream {
     * because nothing depends on micro-batch boundaries.
     */
   def streamAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.io.Sources.tmpDir("stream_anomaly") +
-      "/" + graft.io.Sources.dirKey(dir)
-    rmTree(out)
     val s = streamSession(spark)
     val flagged = graft.ext.Governance
       .withZ(graft.ext.Governance.centsProjection(eventsStream(s, dir)),
         graft.ext.Governance.typeStats(s, dir))
       .filter(col("az_bps") >= graft.ext.Governance.AnomalyFlagBps)
       .select(col("event_id"), col("event_type"), col("az_bps"))
-    val q = flagged.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit schema: a run where no event crosses AnomalyFlagBps
-    // leaves an empty sink directory, which schema inference would
-    // refuse to read (the streamNearDupProbeRun convention)
-    val sinkSchema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("event_type", StringType),
-      StructField("az_bps", LongType)))
-    spark.read.schema(sinkSchema).parquet(s"$out/data")
+    drainToParquet(spark, flagged, "stream_anomaly", dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("int").as("n_flagged"),
         min(col("event_id")).as("first_event"),
@@ -628,17 +589,8 @@ object EventStream {
     * executor-sized); only the verdict summary is driver-sized.
     */
   def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.io.Sources.tmpDir("stream_incr") +
-      "/" + graft.io.Sources.dirKey(dir)
-    rmTree(out)
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
     val s = streamSession(spark)
-    val src = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val src = tableStream(s, dir, "documents")
       .filter(pmod(col("doc_id"), lit(5)) === 4)
     val baseFp = table(s, dir, "documents")
       .filter(pmod(col("doc_id"), lit(5)) =!= 4)
@@ -651,16 +603,7 @@ object EventStream {
         when(col("exact_match").isNotNull, "exact")
           .otherwise("novel").as("verdict"),
         coalesce(col("exact_match"), lit(-1L)).as("match_id"))
-    val q = verdicts.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit sink schema: inference refuses an empty sink dir
-    spark.read.schema(verdicts.schema).parquet(s"$out/data")
+    drainToParquet(spark, verdicts, "stream_incr", dir)
       .groupBy(col("verdict"))
       .agg(count(lit(1)).cast("int").as("n_docs"),
         min(col("doc_id")).as("first_doc"))
@@ -715,9 +658,6 @@ object EventStream {
     val nPerm = 16
     val rowsPerBand = 2
     val nBands = nPerm / rowsPerBand
-    val out = graft.io.Sources.tmpDir("stream_neardup") +
-      "/" + graft.io.Sources.dirKey(dir)
-    rmTree(out)
     def withSigs(df: DataFrame): DataFrame = {
       val withMins = (0 until nPerm).foldLeft(df) { (d, i) =>
         d.withColumn(s"m$i",
@@ -738,13 +678,7 @@ object EventStream {
           .filter(pmod(col("doc_id"), lit(5)) =!= 4)))
       .select(col("doc_id").as("base_id"), col("grams").as("base_grams"),
         col("band"), col("sig"))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val src = s.readStream.schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val src = tableStream(s, dir, "documents")
       .filter(pmod(col("doc_id"), lit(5)) === 4)
     val verified = withSigs(graft.ext.Dedup.withGrams(src))
       .select(col("doc_id"), col("grams"), col("band"), col("sig"))
@@ -757,20 +691,7 @@ object EventStream {
           * 10000 + lit(0.5)) / 10000)
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_id"), col("base_id"), col("jaccard"))
-    val q = verified.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit schema: an increment with no near-dups leaves an empty
-    // sink directory, which schema inference would refuse to read
-    val sinkSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("base_id", LongType),
-      StructField("jaccard", DoubleType)))
-    spark.read.schema(sinkSchema).parquet(s"$out/data")
+    drainToParquet(spark, verified, "stream_neardup", dir)
   }
 
   /** Best base match per delta doc out of the probe's verified sink —
@@ -887,32 +808,19 @@ object EventStream {
     */
   def streamKnnProbe(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val out = graft.io.Sources.tmpDir("stream_knn") +
-      "/" + graft.io.Sources.dirKey(dir)
-    rmTree(out)
     val s = streamSession(spark)
     graft.functions.VectorOps.register(s)
     val all = graft.ext.Similarity.corpus(s, dir)
     val nBits = graft.ext.Similarity.autoBits(all.count())
-    val planes = graft.functions.LshSignature.planes(nBits, 64)
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sig",
-      exprs => graft.functions.LshSignature(exprs.head, planes),
-      "scala_udf")
+    graft.functions.LshSignature.register(s, nBits)
     val baseIdx = all.filter(pmod(col("vec_id"), lit(5)) =!= 4)
       .withColumn("sig", expr("lsh_sig(emb)"))
       .select(col("vec_id").as("c_id"), col("label").as("c_label"),
         col("emb").as("c_emb"), col("nrm").as("c_nrm"), col("sig"))
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
     val flips = (1 until (1 << nBits))
       .filter(m => Integer.bitCount(m) <=
         graft.ext.Similarity.KnnProbeHamming)
-    val src = s.readStream.schema(embSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val src = tableStream(s, dir, "embeddings")
       .filter(pmod(col("vec_id"), lit(5)) === 4)
       .withColumn("emb",
         expr("transform(embedding, v -> cast(v AS double))"))
@@ -929,21 +837,7 @@ object EventStream {
           * 10000 + lit(0.5)).cast("long"))
       .select(col("q_id"), col("q_label"), col("c_id"), col("c_label"),
         col("cos_bps"))
-    val q = scored.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit schema: a delta with no in-probe candidates leaves an
-    // empty sink, which schema inference would refuse to read
-    val sinkSchema = StructType(Seq(
-      StructField("q_id", LongType), StructField("q_label", IntegerType),
-      StructField("c_id", LongType), StructField("c_label", IntegerType),
-      StructField("cos_bps", LongType)))
-    val cand = spark.read.schema(sinkSchema).parquet(s"$out/data")
+    val cand = drainToParquet(spark, scored, "stream_knn", dir)
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_bps").desc, col("c_id"))
     val wVote = Window.partitionBy(col("q_id"))
@@ -988,12 +882,11 @@ object EventStream {
     * here as the missing tail hours.
     */
   def streamLateData(spark: SparkSession, dir: String): DataFrame = {
-    val qname = "stream_late_" + graft.io.Sources.dirKey(dir)
-    val base = graft.io.Sources.tmpDir("stream_late") +
-      "/" + graft.io.Sources.dirKey(dir)
+    val qname = "stream_late_" + dirKey(dir)
+    val base = tmpDir("stream_late") + "/" + dirKey(dir)
     rmTree(base)
     new java.io.File(base).mkdirs()
-    val ev = graft.io.Sources.table(spark, dir, "events")
+    val ev = table(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
     // on-time-then-late ordering comes from ARRIVAL TIME alone: the

@@ -693,6 +693,23 @@ class BenchAuditSpec extends AnyFunSuite {
       }
   }
 
+  test("an artifact of neither shape is refused naming its root keys") {
+    // a per-round wrapper nests the bench line under `parsed`: neither
+    // a root "metric":"total" nor ScalingBench's generated_by stamp
+    import BenchAudit.{pairShape, shapeOf}
+    val wrapper = committed("BENCH_r22.json")
+    val scaling = committed("SCALING.json")
+    assert(shapeOf(scaling) == Right(BenchAudit.ScalingShape))
+    for ((f, r) <- Seq(wrapper -> scaling, scaling -> wrapper,
+        wrapper -> wrapper))
+      pairShape(f, r) match {
+        case Left(msg) => assert(msg.contains("neither") &&
+          msg.contains("parsed") && msg.contains("tail"), msg)
+        case Right(shape) => fail(s"wrapper audited as ${shape.name}")
+      }
+    assert(shapeOf(wrapper).isLeft)
+  }
+
   test("a runs array holding a non-number gives no spread evidence, " +
       "in both modes") {
     // the 1.9x contended bench shape, one sample in each runs array

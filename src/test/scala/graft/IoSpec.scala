@@ -98,4 +98,21 @@ class IoSpec extends SparkSuite {
     assert(io.Sources.dirKey("/root/testdata/sf0.01")
       .startsWith("root_testdata_sf0_01_"))
   }
+
+  test("IO queries keep punctuation-variant input dirs' scratch apart") {
+    // csvRoundTripQ reads its CSV scratch back lazily: had /x/a.b and
+    // /x/a_b one scratch dir, the second call would overwrite the
+    // first frame's input before it is collected
+    val root = io.Sources.tmpDir("io_dir_variants")
+    val region = spark.read.parquet(s"$sf/region.parquet")
+    val (dirA, dirB) = (s"$root/a.b", s"$root/a_b")
+    region.filter(col("r_regionkey") < 2).write.mode("overwrite")
+      .parquet(s"$dirA/region.parquet")
+    region.filter(col("r_regionkey") >= 2).write.mode("overwrite")
+      .parquet(s"$dirB/region.parquet")
+    val a = io.IoQueries.csvRoundTripQ(spark, dirA)
+    val b = io.IoQueries.csvRoundTripQ(spark, dirB).collect()
+    assert(a.collect().map(_.getInt(0)).toSeq == Seq(0, 1))
+    assert(b.map(_.getInt(0)).forall(_ >= 2) && b.nonEmpty)
+  }
 }

@@ -53,6 +53,22 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("drainToParquet reads a sink no row reached as an empty frame " +
+      "with the stream's schema") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String, Double)]
+    mem.addData((1L, "a", 1.5), (2L, "b", 2.5))
+    val stream = mem.toDF().toDF("id", "t", "v").filter(col("id") < 0)
+    val back = streaming.EventStream.drainToParquet(spark, stream,
+      "drain_empty", "memory_stream")
+    assert(back.count() == 0)
+    // a file source reads every column as nullable; names and types
+    // are what the read-back must keep
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(fields(back.schema) == fields(stream.schema))
+  }
+
   test("stream-stream interval join: purchase joins clicks within 10 min") {
     implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[(Long, java.sql.Timestamp)]

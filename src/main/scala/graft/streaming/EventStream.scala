@@ -24,8 +24,8 @@ import graft.io.Sources.{dirKey, rmTree, schemaOf, table, tmpDir}
   *
   * Every query but [[streamLateData]] (which writes a file between two
   * triggers) drains through [[drain]]: [[drainToParquet]] for the
-  * full-volume sinks, [[drainToMemory]] for the driver-sized
-  * complete-mode ones, and `drain` itself for the foreachBatch upsert.
+  * full-volume sinks, [[drainToMemory]] for the small complete-mode
+  * aggregates, and `drain` itself for the foreachBatch upsert.
   * Streams plan on the pinned child session; a parquet sink is read
   * back on the CALLER's session, so the child's 8-partition conf stays
   * out of the batch read-back plan.

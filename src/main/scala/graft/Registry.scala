@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** A named engine query: the Spark implementation plus an optional DuckDB
   * oracle SQL (ANSI, runnable on the same parquet tables). `bench = true`
@@ -63,6 +64,29 @@ object Q {
   val KBoundedAggConfs: Map[String, String] = Map(
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
       (1 << 18).toString)
+
+  /** The band-oracle verdict, one row: `recall_ok` = the approximate
+    * run's `found` rows hit at least `minRecall` of the `truth` rows
+    * (matched on `keys`), and with `withFp` first
+    * `no_false_positives` = no found row lies outside the truth set.
+    * A band-oracled query emits its engine-independent truth rows
+    * cross-joined with this row, and its DuckDB oracle pins the
+    * booleans TRUE.
+    */
+  def recallVerdict(truth: DataFrame, found: DataFrame, keys: Seq[String],
+      minRecall: Double, withFp: Boolean): DataFrame = {
+    val t = truth.select(keys.map(col): _*)
+    val counts = t.agg(count(lit(1)).as("n_truth"))
+      .crossJoin(t.join(found, keys, "left_semi")
+        .agg(count(lit(1)).as("n_hit")))
+    val recallOk = (col("n_hit") >= col("n_truth") * minRecall)
+      .as("recall_ok")
+    if (!withFp) counts.select(recallOk)
+    else counts
+      .crossJoin(found.join(t, keys, "left_anti")
+        .agg(count(lit(1)).as("n_fp")))
+      .select((col("n_fp") === 0).as("no_false_positives"), recallOk)
+  }
 }
 
 /** Registry of per-process memoized DataFrame caches, in two tiers with

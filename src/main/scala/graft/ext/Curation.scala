@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.r4
 import graft.io.Sources.tableWide
 
 /** [EXT] The composed training-data curation pipeline — the stages every
@@ -29,6 +30,13 @@ import graft.io.Sources.tableWide
   * so the corpus never shuffles for decontamination — just one uniform
   * doc-keyed overlap count; quality/chunking/split are map-only; the
   * final rollup is a tiny keyed aggregate. No stage is corpus².
+  *
+  * Each stage rule has one definition that every other copy calls:
+  * [[exactFingerprint]] (also [[Dedup.fingerprintDedup]]'s key),
+  * [[withQuality]] over [[StopwordList]] (also
+  * [[TextAnalysis.qualityScore]] and the quality model's weak label),
+  * [[withinIds]] (survivor restriction of near-dup pairs), and
+  * [[Dedup.benchOverlap]] for decontamination.
   */
 object Curation {
 
@@ -119,28 +127,26 @@ object Curation {
     // composition semi-joins both endpoints to survivors before
     // clustering, so that is the set whose recall matters here)
     val ids = stage1Survivors(spark, dir).select(col("doc_id"))
-    def restrict(p: DataFrame): DataFrame = p
-      .join(ids.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"),
-        "left_semi")
-      .join(ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"),
-        "left_semi")
-    val truthR = restrict(truthPairs)
-    val foundR = restrict(Dedup.minhashBanded(spark, dir)
-      .select(col("doc_a"), col("doc_b")))
-    val nTruth = truthR.agg(count(lit(1)).as("n_truth"))
-    val nHit = truthR.join(foundR, Seq("doc_a", "doc_b"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    val nFp = foundR.join(truthR, Seq("doc_a", "doc_b"), "left_anti")
-      .agg(count(lit(1)).as("n_fp"))
-    val verdict = nTruth.crossJoin(nHit).crossJoin(nFp)
-      .select((col("n_fp") === 0).as("no_false_positives"),
-        (col("n_hit") >= col("n_truth") * 0.9).as("recall_ok"))
+    val verdict = Q.recallVerdict(withinIds(truthPairs, ids),
+      withinIds(Dedup.minhashBanded(spark, dir)
+        .select(col("doc_a"), col("doc_b")), ids),
+      Seq("doc_a", "doc_b"), minRecall = 0.9, withFp = true)
     truthRows.crossJoin(broadcast(verdict))
       .orderBy(col("lang"), col("split"))
   }
 
   private[graft] def curatedDocs(spark: SparkSession, dir: String)
       : DataFrame = curatedDocs(spark, dir, None)
+
+  /** Near-dup pairs (doc_a, doc_b) with both endpoints in `ids` — two
+    * semi-joins on a projected id column, so the text never moves.
+    */
+  private def withinIds(pairs: DataFrame, ids: DataFrame): DataFrame =
+    pairs
+      .join(ids.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"),
+        "left_semi")
+      .join(ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"),
+        "left_semi")
 
   /** Stage 1 (exact fingerprint dedup) survivors: keep the min doc_id
     * per normalized content hash. Scale shape: the window runs over a
@@ -182,7 +188,6 @@ object Curation {
     */
   private[graft] def curatedDocs(spark: SparkSession, dir: String,
       nearDupPairs: Option[DataFrame]): DataFrame = {
-    graft.functions.NgramSet.register(spark)
     val docs = tableWide(spark, dir, "documents")
     val dedupedExact = stage1Survivors(spark, dir)
 
@@ -195,12 +200,7 @@ object Curation {
     // broadcast anti-join) never move the text; connectedComponents
     // sizes its own shuffle width to the edge count.
     val deduped = nearDupPairs.fold(dedupedExact) { rawPairs =>
-      val ids = dedupedExact.select(col("doc_id"))
-      val pairs = rawPairs
-        .join(ids.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"),
-          "left_semi")
-        .join(ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"),
-          "left_semi")
+      val pairs = withinIds(rawPairs, dedupedExact.select(col("doc_id")))
       val drop = Graph.connectedComponents(pairs, "doc_a", "doc_b")
         .filter(col("id") =!= col("group_id"))
         .select(col("id").as("doc_id"))
@@ -213,22 +213,10 @@ object Curation {
     // leave the training mix; survivors sharing >= 20% of their grams
     // with the benchmark's gram set are dropped. Docs under 3 words
     // have no grams and cannot be contaminated — they pass through.
-    val benchGrams = docs
-      .filter(col("doc_id") % 37 === 0 &&
-        size(split(col("text"), " ")) >= 3)
-      .select(explode_outer(expr("ngram_set(text, 3)")).as("gram"))
-      .distinct()
-      .withColumn("hit", lit(1L))
     val candidates = deduped.filter(col("doc_id") % 37 =!= 0)
-    val gramDocs = candidates
-      .filter(size(split(col("text"), " ")) >= 3)
-      .select(col("doc_id"), expr("ngram_set(text, 3)").as("grams"))
-      .select(col("doc_id"), size(col("grams")).as("n_grams"),
-        explode_outer(col("grams")).as("gram"))
-    val contaminated = gramDocs
-      .join(broadcast(benchGrams), Seq("gram"), "left")
-      .groupBy(col("doc_id"), col("n_grams"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
+    val contaminated = Dedup.benchOverlap(
+        Dedup.withGrams(docs.filter(col("doc_id") % 37 === 0)),
+        Dedup.withGrams(candidates))
       .filter(col("n_overlap").cast("double") / col("n_grams") >= 0.2)
       .select(col("doc_id"))
     val clean = candidates
@@ -259,24 +247,31 @@ object Curation {
     * columns), shared verbatim by the gate above and the curate main's
     * pilot estimator: a pass-rate sampled through a DIFFERENT formula
     * than the gate applies would make the estimate wrong by
-    * construction rather than by sampling error.
+    * construction rather than by sampling error. Adds `lwords`,
+    * `n_words`, `sw_cnt`, `punct_cnt` and the 1e-4-floored `quality`;
+    * [[TextAnalysis.qualityScore]] reports these columns and the
+    * quality model's weak label thresholds the same score.
     */
-  private[graft] def withQuality(df: DataFrame): DataFrame = {
-    val swList = Seq("the", "a", "of", "and", "to", "in", "is")
-      .map(w => s"'$w'").mkString(", ")
+  private[graft] def withQuality(df: DataFrame): DataFrame =
     df.withColumn("lwords", split(lower(col("text")), " "))
       .withColumn("n_words", size(col("lwords")))
       .withColumn("sw_cnt",
-        expr(s"size(filter(lwords, w -> w IN ($swList)))"))
+        expr(s"size(filter(lwords, w -> w IN ($StopwordList)))"))
       .withColumn("punct_cnt",
         expr("size(regexp_extract_all(text, '[^\\\\w\\\\s]', 0))"))
-      .withColumn("quality", floor(
-        (lit(0.5) * least(col("n_words").cast("double") / 100, lit(1.0)) +
+      .withColumn("quality", r4(
+        lit(0.5) * least(col("n_words").cast("double") / 100, lit(1.0)) +
           lit(0.3) * (col("sw_cnt").cast("double") / col("n_words")) +
           lit(0.2) * (lit(1.0) -
-            col("punct_cnt").cast("double") / col("n_chars")))
-          * 10000 + lit(0.5)) / 10000)
-  }
+            col("punct_cnt").cast("double") / col("n_chars"))))
+
+  /** The quality score's stopword set as a quoted SQL list
+    * (`'the', 'a', ...`), for [[withQuality]] and the oracle of
+    * [[TextAnalysis.qualityScore]].
+    */
+  private[graft] val StopwordList: String =
+    Seq("the", "a", "of", "and", "to", "in", "is").map(w => s"'$w'")
+      .mkString(", ")
 
   /** Stages 4-5: chunk (40-word windows, stride 30), content-hash
     * split, and the per-(lang, split) rollup.

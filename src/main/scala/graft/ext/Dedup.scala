@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.r4
 import graft.io.Sources.{table, tableWide}
 
 /** [EXT] Deduplication family for LLM-data pipelines over `documents`:
@@ -16,6 +17,15 @@ import graft.io.Sources.{table, tableWide}
   * candidates are blocked (by `source` here; by LSH band at 100 TB) so
   * the join is band-local. MinHash-LSH is the sub-quadratic scale path;
   * the exact Jaccard op doubles as its recall oracle.
+  *
+  * Each near-dup rule is written once here and called by every copy
+  * (the curation pipeline, the streaming probe): [[jaccard]] (exact
+  * Jaccard on the 1e-4 grid), [[dropHot]] (the posting-list df cutoff),
+  * [[listPairs]] (in-list pair expansion), [[benchOverlap]] (benchmark
+  * gram overlap) and [[MinhashPerms]] / [[bandStructs]] (the banded
+  * MinHash layout). The normalized content fingerprint is
+  * [[Curation.exactFingerprint]]; band-oracle verdicts go through
+  * [[graft.Q.recallVerdict]].
   */
 object Dedup {
 
@@ -47,9 +57,7 @@ object Dedup {
     */
   def fingerprintDedup(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "documents")
-      .withColumn("norm",
-        trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")))
-      .groupBy(md5(col("norm").cast("binary")).as("fp"))
+      .groupBy(Curation.exactFingerprint.as("fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
       .select(col("doc_id"), col("n_copies"), col("fp"))
       .orderBy(col("doc_id"))
@@ -161,36 +169,79 @@ object Dedup {
     // per row, so the semantics are identical.
     val rawPost = g.select(col("doc_id") +: blockCols.map(col) ++:
       Seq(col("n_grams"), explode_outer(col("grams")).as("gram")): _*)
-    val hotGrams = rawPost.groupBy(keys.map(col): _*)
+    listPairs(dropHot(rawPost, keys, maxDf), keys, "n_grams")
+      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+      .agg(count(lit(1)).as("n_inter"),
+        first(col("p.pa")).as("sz_a"), first(col("p.pb")).as("sz_b"))
+      .select(col("doc_a"), col("doc_b"),
+        col("n_inter").cast("int").as("n_inter"),
+        (col("sz_a") + col("sz_b") - col("n_inter")).cast("int").as("n_union"),
+        jaccard(col("n_inter"), col("sz_a"), col("sz_b")).as("jaccard"))
+  }
+
+  /** Exact Jaccard of two sets from their intersection and sizes,
+    * floor-rounded to the 1e-4 grid every near-dup op and its DuckDB
+    * oracle share.
+    */
+  private[graft] def jaccard(nInter: Column, szA: Column, szB: Column)
+      : Column =
+    r4(nInter.cast("double") / (szA + szB - nInter))
+
+  /** The posting-list skew guard: drop every `keys` group whose
+    * document frequency exceeds `maxDf` BEFORE the posting aggregation.
+    * A map-side-combinable df count finds the (by definition few) hot
+    * keys and a broadcast anti-join removes them map-only, so every
+    * posting list that survives is <= maxDf long.
+    */
+  private[graft] def dropHot(post: DataFrame, keys: Seq[String],
+      maxDf: Int): DataFrame = {
+    val hot = post.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
       .select(keys.map(col): _*)
-    val post = rawPost
-      .join(broadcast(hotGrams), keys, "left_anti")
-    // one postings shuffle: per-(block..., gram) sorted (doc, size)
-    // list, then the pair expansion (doc_a < doc_b by construction)
-    // stays map-side
-    val inter = post
-      .groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n_grams"))))
+    post.join(broadcast(hot), keys, "left_anti")
+  }
+
+  /** In-list pair expansion over postings: ONE shuffle builds each
+    * `keys` group's sorted (doc_id, payload) list, and every co-listed
+    * pair expands map-side as a struct column `p` of (doc_a, doc_b, pa,
+    * pb) — doc_a < doc_b by construction, `pa`/`pb` the two docs'
+    * payloads. Work is the sum of squared list lengths, never docs².
+    */
+  private[graft] def listPairs(post: DataFrame, keys: Seq[String],
+      payload: String): DataFrame =
+    post.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("doc_id"), col(payload))))
         .as("ds"))
       .filter(size(col("ds")) >= 2)
       .select(explode(expr(
-        """flatten(transform(ds, (a, i) ->
+        s"""flatten(transform(ds, (a, i) ->
            transform(slice(ds, i + 2, size(ds) - i - 1),
              b -> struct(a.doc_id AS doc_a, b.doc_id AS doc_b,
-                         a.n_grams AS sz_a, b.n_grams AS sz_b))))"""))
+                         a.$payload AS pa, b.$payload AS pb))))"""))
         .as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"),
-        first(col("p.sz_a")).as("sz_a"), first(col("p.sz_b")).as("sz_b"))
-    inter
-      .withColumn("n_union", col("sz_a") + col("sz_b") - col("n_inter"))
-      .select(col("doc_a"), col("doc_b"),
-        col("n_inter").cast("int").as("n_inter"),
-        col("n_union").cast("int").as("n_union"),
-        (floor(col("n_inter").cast("double") / col("n_union") * 10000
-          + lit(0.5)) / 10000).as("jaccard"))
+
+  /** Benchmark-gram overlap, the decontamination kernel of
+    * [[contamination]] and the curation pipeline's stage 2: per `corpus`
+    * doc, (doc_id, n_grams, n_overlap) = how many of its distinct grams
+    * occur in any `bench` doc. Both frames carry `doc_id` and `grams`.
+    * The bench gram set is small by definition and broadcast; every
+    * corpus gram flows through ONE left join with a hit marker, so
+    * zero-overlap docs stay in the aggregate and the corpus never
+    * shuffles except for the uniform doc-keyed count (outer explode:
+    * see [[jaccardPairsBlocked]]).
+    */
+  private[graft] def benchOverlap(bench: DataFrame, corpus: DataFrame)
+      : DataFrame = {
+    val benchGrams = bench.select(explode_outer(col("grams")).as("gram"))
+      .distinct()
+      .withColumn("hit", lit(1L))
+    corpus.withColumn("n_grams", size(col("grams")))
+      .select(col("doc_id"), col("n_grams"),
+        explode_outer(col("grams")).as("gram"))
+      .join(broadcast(benchGrams), Seq("gram"), "left")
+      .groupBy(col("doc_id"), col("n_grams"))
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
   }
 
   private val ngramJaccardSql =
@@ -228,25 +279,12 @@ object Dedup {
     */
   def contamination(spark: SparkSession, dir: String): DataFrame = {
     val g = withGrams(tableWide(spark, dir, "documents"))
-      .select(col("doc_id"), col("grams"), size(col("grams")).as("n_grams"))
-    val benchGrams = g.filter(col("doc_id") % 37 === 0)
-      .select(explode_outer(col("grams")).as("gram")).distinct()
-      .withColumn("hit", lit(1L))
-    // every corpus gram flows through ONE broadcast left join with a hit
-    // marker — zero-overlap docs stay in the aggregate, so no second
-    // corpus scan / gram recompute for a re-join (outer explode: see
-    // ngramJaccard note)
-    g.filter(col("doc_id") % 37 =!= 0)
-      .select(col("doc_id"), col("n_grams"),
-        explode_outer(col("grams")).as("gram"))
-      .join(broadcast(benchGrams), Seq("gram"), "left")
-      .groupBy(col("doc_id"), col("n_grams"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
-      .withColumn("overlap_frac",
-        floor(col("n_overlap").cast("double") / col("n_grams") * 10000
-          + lit(0.5)) / 10000)
+    benchOverlap(g.filter(col("doc_id") % 37 === 0),
+        g.filter(col("doc_id") % 37 =!= 0))
       .select(col("doc_id"), col("n_grams").cast("int").as("n_grams"),
-        col("n_overlap").cast("int").as("n_overlap"), col("overlap_frac"),
+        col("n_overlap").cast("int").as("n_overlap"),
+        r4(col("n_overlap").cast("double") / col("n_grams"))
+          .as("overlap_frac"),
         (col("n_overlap").cast("double") / col("n_grams") >= 0.2)
           .as("contaminated"))
       .orderBy(col("doc_id"))
@@ -498,11 +536,8 @@ object Dedup {
         when(pmod(col("doc_id"), lit(5)) === 4, "d").otherwise("b"))
       .withColumn("n_grams", size(col("grams")))
       .persist())
-    val rawPost = g.select(col("doc_id"), col("side"), col("n_grams"),
-      explode_outer(col("grams")).as("gram"))
-    val hot = rawPost.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select(col("gram"))
-    val post = rawPost.join(broadcast(hot), Seq("gram"), "left_anti")
+    val post = dropHot(g.select(col("doc_id"), col("side"), col("n_grams"),
+      explode_outer(col("grams")).as("gram")), Seq("gram"), maxDf)
     val pairs = post.groupBy(col("gram"))
       .agg(sort_array(collect_list(
         struct(col("side"), col("doc_id"), col("n_grams")))).as("ds"))
@@ -518,9 +553,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_inter"), first(col("p.sz_d")).as("sz_d"),
         first(col("p.sz_b")).as("sz_b"))
       .withColumn("jaccard",
-        floor(col("n_inter").cast("double")
-          / (col("sz_d") + col("sz_b") - col("n_inter")) * 10000
-          + lit(0.5)) / 10000)
+        jaccard(col("n_inter"), col("sz_d"), col("sz_b")))
     val w = Window.partitionBy(col("delta_id"))
       .orderBy(col("jaccard").desc, col("base_id"))
     pairs.withColumn("rk", row_number().over(w))
@@ -635,7 +668,7 @@ object Dedup {
     model.approxSimilarityJoin(feat, feat, 0.9, "jaccard_dist")
       .select(col("datasetA.doc_id").as("doc_a"),
         col("datasetB.doc_id").as("doc_b"),
-        (floor(col("jaccard_dist") * 10000 + 0.5) / 10000).as("jaccard_dist"))
+        r4(col("jaccard_dist")).as("jaccard_dist"))
       .filter(col("doc_a") < col("doc_b"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -657,12 +690,8 @@ object Dedup {
     val truth = jaccardPairsBlocked(spark, dir, Seq.empty, maxDf = 1000)
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    val nHit = truth.select(col("doc_a"), col("doc_b"))
-      .join(found, Seq("doc_a", "doc_b"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    val verdict = nTruth.crossJoin(nHit)
-      .select((col("n_hit") >= col("n_truth") * 0.8).as("recall_ok"))
+    val verdict = Q.recallVerdict(truth, found, Seq("doc_a", "doc_b"),
+      minRecall = 0.8, withFp = false)
     truth.crossJoin(broadcast(verdict))
       .select(col("doc_a"), col("doc_b"), col("jaccard"), col("recall_ok"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -718,28 +747,20 @@ object Dedup {
     * positives cost only the candidate-verification join.
     */
   def minhashBanded(spark: SparkSession, dir: String): DataFrame = {
-    val nPerm = 16
-    val rowsPerBand = 2
     val g = withGrams(tableWide(spark, dir, "documents"))
       .select(col("doc_id"), col("grams"))
     // one shuffle: per-doc min of each of the 16 permutation hashes as
     // 16 aggregate columns (NOT a 16x row explosion — the postings
     // shuffle carries |doc x gram| rows once, each hash is a map-side
     // column; partial min combines before the exchange)
-    val minCols = (0 until nPerm).map(i =>
+    val minCols = (0 until MinhashPerms).map(i =>
       min(xxhash64(lit(i), col("gram"))).as(s"m$i"))
     val mins = g
       .select(col("doc_id"), explode_outer(col("grams")).as("gram"))
       .groupBy(col("doc_id"))
       .agg(minCols.head, minCols.tail: _*)
-    // band signatures: hash of each band's min-hashes, unpivoted to
-    // (doc, band, sig) rows for the candidate equi-join
-    val nBands = nPerm / rowsPerBand
-    val bandStructs = (0 until nBands).map { b =>
-      val sig = xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => col(s"m$i")): _*)
-      struct(lit(b).as("band"), sig.as("sig"))
-    }
+    // band signatures, unpivoted to (doc, band, sig) rows for the
+    // candidate equi-join
     val sigs = mins
       .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"),
@@ -759,13 +780,27 @@ object Dedup {
         Seq("doc_b"))
       .withColumn("n_inter", size(array_intersect(col("ga"), col("gb"))))
       .withColumn("jaccard",
-        floor(col("n_inter").cast("double") /
-          (size(col("ga")) + size(col("gb")) - col("n_inter")) * 10000
-          + lit(0.5)) / 10000)
+        jaccard(col("n_inter"), size(col("ga")), size(col("gb"))))
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** The banded-MinHash layout, shared by [[minhashBanded]] and the
+    * streaming probe ([[graft.streaming.EventStream.streamNearDupProbe]]):
+    * [[MinhashPerms]] permutation min-hashes `m0..m15` (xxhash64 seeded
+    * by the permutation index) fold into 8 bands of 2 rows, each band's
+    * signature the xxhash64 of its two mins. How the mins are computed
+    * stays with the caller: an aggregate `min` in batch, a per-row
+    * `array_min` in the stream (a streaming aggregate would need state).
+    */
+  private[graft] val MinhashPerms = 16
+
+  private[graft] def bandStructs: Seq[Column] =
+    (0 until MinhashPerms / 2).map { b =>
+      struct(lit(b).as("band"),
+        xxhash64(col(s"m${2 * b}"), col(s"m${2 * b + 1}")).as("sig"))
+    }
 
   /** Band-oracle formulation of [[minhashBanded]] — the registered,
     * driver-hash-checked entry. The minhash signature math is
@@ -795,15 +830,8 @@ object Dedup {
     val truth = jaccardPairsBlocked(spark, dir, Seq.empty, maxDf = 1000)
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    val nHit = truth.join(found, Seq("doc_a", "doc_b"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    val nFp = found.join(truth.select(col("doc_a"), col("doc_b")),
-        Seq("doc_a", "doc_b"), "left_anti")
-      .agg(count(lit(1)).as("n_fp"))
-    val verdict = nTruth.crossJoin(nHit).crossJoin(nFp)
-      .select((col("n_fp") === 0).as("no_false_positives"),
-        (col("n_hit") >= col("n_truth") * 0.9).as("recall_ok"))
+    val verdict = Q.recallVerdict(truth, found, Seq("doc_a", "doc_b"),
+      minRecall = 0.9, withFp = true)
     truth.crossJoin(broadcast(verdict))
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
         col("no_false_positives"), col("recall_ok"))
@@ -1014,20 +1042,7 @@ object Dedup {
           .as(Seq("pos", "fp")))
     val perDoc = wins.groupBy(col("fp"), col("doc_id"))
       .agg(min(col("pos")).as("first_pos"))
-    val hot = perDoc.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf)
-      .select(col("fp"))
-    val post = perDoc.join(broadcast(hot), Seq("fp"), "left_anti")
-    post.groupBy(col("fp"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("first_pos"))))
-        .as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(ds, (a, i) ->
-           transform(slice(ds, i + 2, size(ds) - i - 1),
-             b -> struct(a.doc_id AS doc_a, b.doc_id AS doc_b,
-                         a.first_pos AS pa, b.first_pos AS pb))))"""))
-        .as("p"))
+    listPairs(dropHot(perDoc, Seq("fp"), maxDf), Seq("fp"), "first_pos")
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).cast("int").as("n_shared"),
         min(col("p.pa")).cast("int").as("first_a"),
@@ -1087,10 +1102,9 @@ object Dedup {
         size(col("words")).cast("int").as("n_tokens"),
         when(col("rlist").isNull, 0)
           .otherwise(size(col("rlist"))).cast("int").as("n_removed"),
-        (floor(when(col("rlist").isNull, 0)
+        r4(when(col("rlist").isNull, 0)
           .otherwise(size(col("rlist"))).cast("double")
-          / size(col("words")) * 10000 + lit(0.5)) / 10000)
-          .as("removed_frac"),
+          / size(col("words"))).as("removed_frac"),
         md5(concat_ws(" ", expr(
           "filter(words, (w, i) -> rlist IS NULL OR NOT array_contains(rlist, i))"))
           .cast("binary")).as("cleaned_md5"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.PolyHash
+import graft.functions.Rounding.r4
 import graft.io.Sources.{table, tableWide}
 
 /** [EXT] Multimodal-column plumbing: media payloads as opaque `binary`
@@ -297,8 +298,8 @@ object Multimodal {
         sum(col("cnt") * col("clen")).cast("long").as("total_bytes"),
         sum(col("clen")).cast("long").as("unique_bytes"))
       .withColumn("dedup_pct",
-        floor((lit(1.0) - col("unique_bytes").cast("double")
-          / col("total_bytes")) * 10000 + lit(0.5)) / 10000)
+        r4(lit(1.0) - col("unique_bytes").cast("double")
+          / col("total_bytes")))
       .orderBy(col("source"))
   }
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
-import graft.io.Sources.{table, tableWide}
+import graft.functions.Rounding.r4
+import graft.io.Sources.{dirKey, table, tableWide}
 
 /** [EXT] Similarity search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -159,7 +160,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("c_id"), col("rank"),
-        (floor(col("cos") * 10000 + lit(0.5)) / 10000).as("cos_sim"))
+        r4(col("cos")).as("cos_sim"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -261,7 +262,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("c_id"), col("rank"),
-        (floor(col("cos") * 10000 + lit(0.5)) / 10000).as("cos_sim"))
+        r4(col("cos")).as("cos_sim"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -342,7 +343,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("c_id"), col("rank"),
-        (floor(col("cos") * 10000 + lit(0.5)) / 10000).as("cos_sim"))
+        r4(col("cos")).as("cos_sim"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -428,9 +429,9 @@ object Similarity {
     * signatures would silently miss most buckets; a changed bit count
     * changes the path and forces a rebuild instead.
     */
-  private def annIndexPath(dir: String, nBits: Int): String =
+  private[graft] def annIndexPath(dir: String, nBits: Int): String =
     graft.io.Sources.tmpDir("ann_index") + "/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + s"-b$nBits"
+      dirKey(dir) + s"-b$nBits"
 
   /** Freshness manifest written by the index build (round-11 directive
     * 5): one `_graft_manifest` file (underscore prefix — invisible to
@@ -517,9 +518,9 @@ object Similarity {
     * rebuild, which re-derives nBits from the new corpus and moves
     * the pointer.
     */
-  private def annPointerPath(dir: String): java.nio.file.Path =
+  private[graft] def annPointerPath(dir: String): java.nio.file.Path =
     java.nio.file.Paths.get(graft.io.Sources.tmpDir("ann_index"),
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + ".nbits")
+      dirKey(dir) + ".nbits")
 
   private def readAnnPointer(dir: String): Option[Int] =
     scala.util.Try(new String(
@@ -736,7 +737,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("c_id"), col("rank"),
-        (floor(col("cos") * 10000 + lit(0.5)) / 10000).as("cos_sim"))
+        r4(col("cos")).as("cos_sim"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -825,9 +826,9 @@ object Similarity {
     * [[annIndexPath]] so the build/probe pair and the update op never
     * clobber each other's artifact.
     */
-  private def annIndexIncrPath(dir: String): String =
+  private[graft] def annIndexIncrPath(dir: String): String =
     graft.io.Sources.tmpDir("ann_index_incr") + "/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      dirKey(dir)
 
   /** [EXT] Incremental serving-index maintenance — the UPDATE story
     * the build-once/probe-many split needs to be a real deployment:
@@ -1025,7 +1026,7 @@ object Similarity {
       .withColumn("cos", expr(dotExpr) / (col("nrm_a") * col("nrm_b")))
       .filter(col("cos") >= 0.35)
       .select(col("vec_a"), col("vec_b"),
-        (floor(col("cos") * 10000 + lit(0.5)) / 10000).as("cos_sim"))
+        r4(col("cos")).as("cos_sim"))
       .orderBy(col("vec_a"), col("vec_b"))
   }
 
@@ -1046,12 +1047,8 @@ object Similarity {
   def annIvfVerified(spark: SparkSession, dir: String): DataFrame = {
     val truth = cosineTopK(spark, dir)
     val found = annIvf(spark, dir).select(col("q_id"), col("c_id"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    val nHit = truth.select(col("q_id"), col("c_id"))
-      .join(found, Seq("q_id", "c_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    val verdict = nTruth.crossJoin(nHit)
-      .select((col("n_hit") >= col("n_truth") * 0.5).as("recall_ok"))
+    val verdict = Q.recallVerdict(truth, found, Seq("q_id", "c_id"),
+      minRecall = 0.5, withFp = false)
     truth.crossJoin(broadcast(verdict))
       .select(col("q_id"), col("c_id"), col("rank"), col("cos_sim"),
         col("recall_ok"))
@@ -1180,7 +1177,7 @@ object Similarity {
   def cosineNearDup(spark: SparkSession, dir: String): DataFrame =
     cosineNearDupPairs(spark, dir)
       .select(col("vec_a"), col("vec_b"), col("label"),
-        (floor(col("cos") * 10000 + lit(0.5)) / 10000).as("cos_sim"))
+        r4(col("cos")).as("cos_sim"))
       .orderBy(col("vec_a"), col("vec_b"))
 
   private val cosineNearDupSql =
@@ -1271,7 +1268,7 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("c_id"), col("rank"),
-        (floor(col("cos") * 10000 + lit(0.5)) / 10000).as("cos_sim"),
+        r4(col("cos")).as("cos_sim"),
         col("qscore"))
       .orderBy(col("q_id"), col("rank"))
   }

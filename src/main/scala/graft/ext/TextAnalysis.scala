@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.{r4, rN}
 import graft.io.Sources.{table, tableWide}
 
 /** [EXT] Text analysis for LLM-data pipelines over `documents`:
@@ -12,10 +13,6 @@ import graft.io.Sources.{table, tableWide}
   * UDFs, embarrassingly parallel (no shuffle at all: scan → project).
   */
 object TextAnalysis {
-
-  /** floor-based deterministic rounding (see graft.functions.Rounding). */
-  private def rN(c: org.apache.spark.sql.Column, digits: Int) =
-    graft.functions.Rounding.rN(c, digits)
 
   /** Token counting: whitespace words + a BPE-ish regex token count
     * (word pieces or single non-space punctuation).
@@ -42,31 +39,20 @@ object TextAnalysis {
          * 100 + 0.5) / 100 AS chars_per_word
        FROM documents ORDER BY doc_id"""
 
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
-  private val swList = stopwords.map(w => s"'$w'").mkString(", ")
-
   /** Quality scoring: length/stopword/punctuation signals combined into
     * a [0,1] score — the standard pre-training quality-filter shape.
+    * The score is the curation pipeline's stage-3 score
+    * ([[Curation.withQuality]]); this op adds the two rounded ratios.
     */
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
-    tableWide(spark, dir, "documents")
-      .withColumn("words", split(lower(col("text")), " "))
-      .withColumn("n_words", size(col("words")))
-      .withColumn("sw_cnt",
-        expr(s"size(filter(words, w -> w IN ($swList)))"))
-      .withColumn("punct_cnt",
-        expr("size(regexp_extract_all(text, '[^\\\\w\\\\s]', 0))"))
-      .withColumn("sw_ratio",
-        col("sw_cnt").cast("double") / col("n_words"))
-      .withColumn("punct_ratio",
-        col("punct_cnt").cast("double") / col("n_chars"))
+    Curation.withQuality(tableWide(spark, dir, "documents"))
       .select(
         col("doc_id"), col("n_words"), col("sw_cnt"), col("punct_cnt"),
-        rN(col("sw_ratio"), 4).as("stopword_ratio"),
-        rN(col("punct_ratio"), 4).as("punct_ratio"),
-        rN(lit(0.5) * least(col("n_words").cast("double") / 100, lit(1.0)) +
-           lit(0.3) * col("sw_ratio") +
-           lit(0.2) * (lit(1.0) - col("punct_ratio")), 4).as("quality"))
+        r4(col("sw_cnt").cast("double") / col("n_words"))
+          .as("stopword_ratio"),
+        r4(col("punct_cnt").cast("double") / col("n_chars"))
+          .as("punct_ratio"),
+        col("quality"))
       .orderBy(col("doc_id"))
 
   private val qualityScoreSql =
@@ -74,7 +60,7 @@ object TextAnalysis {
           SELECT doc_id, n_chars,
             len(string_split(lower(text), ' ')) AS n_words,
             len(list_filter(string_split(lower(text), ' '),
-                w -> w IN ($swList))) AS sw_cnt,
+                w -> w IN (${Curation.StopwordList}))) AS sw_cnt,
             len(regexp_extract_all(text, '[^\\w\\s]')) AS punct_cnt
           FROM documents),
         r AS (
@@ -428,10 +414,9 @@ object TextAnalysis {
       .withColumn("r", coalesce(col("rank"), lit(vocabSize + 1)))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("int").as("n_words"),
-        (floor(avg(log(col("r"))) * 10000 + lit(0.5)) / 10000)
-          .as("mean_log_rank"),
-        (floor(avg(when(col("rank").isNull, 1.0).otherwise(0.0)) * 10000
-          + lit(0.5)) / 10000).as("oov_frac"))
+        r4(avg(log(col("r")))).as("mean_log_rank"),
+        r4(avg(when(col("rank").isNull, 1.0).otherwise(0.0)))
+          .as("oov_frac"))
       .orderBy(col("doc_id"))
   }
 
@@ -476,8 +461,8 @@ object TextAnalysis {
         count(lit(1)).cast("int").as("n_grams_distinct"),
         max(col("cnt")).cast("int").as("top_gram_n"))
       .withColumn("dup_frac",
-        floor((lit(1.0) - col("n_grams_distinct").cast("double")
-          / col("n_grams_total")) * 10000 + lit(0.5)) / 10000)
+        r4(lit(1.0) - col("n_grams_distinct").cast("double")
+          / col("n_grams_total")))
       .orderBy(col("doc_id"))
   }
 
@@ -661,7 +646,7 @@ object TextAnalysis {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("int").as("n_pairs"),
         sum(col("qlp")).cast("int").as("sum_qlp"),
-        (floor(avg(col("qlp")) * 1000 + lit(0.5)) / 1000).as("mean_qlp"))
+        rN(avg(col("qlp")), 3).as("mean_qlp"))
       .orderBy(col("doc_id"))
   }
 

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.r2
 import graft.io.Sources.table
-import graft.ops.Relational.{asOf, r2}
+import graft.ops.Relational.asOf
 
 /** Feature-building (reference stage 3, `transform.py`).
   *

@@ -112,22 +112,18 @@ object Sources {
     val t = table(spark, dir, name)
     val cores = spark.sparkContext.defaultParallelism
     val bytes = tableBytes(spark, dir, name)
-    val minBytes = spark.conf.getOption(WidenMinBytesKey)
-      .map(_.toLong).getOrElse(WidenMinBytes)
     // scan parallelism upper bound from the file index: FileSourceScan
     // packs splits of at most maxPartitionBytes
     val maxSplit = spark.conf.get("spark.sql.files.maxPartitionBytes",
       (128L << 20).toString).toLong
     val estParts = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
-    if (bytes >= minBytes && estParts < cores) t.repartition(cores) else t
+    if (bytes >= WidenMinBytes && estParts < cores) t.repartition(cores) else t
   }
 
   /** Below this on-disk size the [[tableWide]] re-spread is a net loss
-    * (exchange latency > serial scan-stage compute). Overridable per
-    * session via [[WidenMinBytesKey]] for A/B measurement.
+    * (exchange latency > serial scan-stage compute).
     */
   val WidenMinBytes: Long = 64L << 20
-  val WidenMinBytesKey = "spark.graft.widen.minBytes"
 
   /** Drop every per-process cache layer for one table so the next
     * [[table]] call re-reads the files as they are NOW: the raw memo

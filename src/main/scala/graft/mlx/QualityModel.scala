@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.r4
 import graft.io.Sources.tableWide
 
 /** [EXT] Model-based document quality scorer (round-8 directive) — the
@@ -119,25 +120,13 @@ object QualityModel {
         .select(col("doc_id"), col("mean_log_rank"), col("oov_frac"))
       val lm = graft.ext.TextAnalysis.bigramLmScore(spark, dir)
         .select(col("doc_id"), col("mean_qlp"))
-      val swList = Seq("the", "a", "of", "and", "to", "in", "is")
-        .map(w => s"'$w'").mkString(", ")
-      // the weak label: the curation composite (same formula + rounding
-      // as x_curation_pipeline's stage-3 score) over signals the model
-      // does NOT consume — length, stopword ratio, punctuation density
-      val lbl = tableWide(spark, dir, "documents")
-        .withColumn("lwords", split(lower(col("text")), " "))
-        .withColumn("nw", size(col("lwords")))
-        .withColumn("sw_cnt",
-          expr(s"size(filter(lwords, w -> w IN ($swList)))"))
-        .withColumn("punct_cnt",
-          expr("size(regexp_extract_all(text, '[^\\\\w\\\\s]', 0))"))
-        .withColumn("score", floor(
-          (lit(0.5) * least(col("nw").cast("double") / 100, lit(1.0)) +
-            lit(0.3) * (col("sw_cnt").cast("double") / col("nw")) +
-            lit(0.2) * (lit(1.0) -
-              col("punct_cnt").cast("double") / col("n_chars")))
-            * 10000 + lit(0.5)) / 10000)
-        .select(col("doc_id"), (col("score") >= 0.45).cast("int").as("label"))
+      // the weak label: x_curation_pipeline's stage-3 score over
+      // signals the model does NOT consume — length, stopword ratio,
+      // punctuation density
+      val lbl = graft.ext.Curation.withQuality(
+          tableWide(spark, dir, "documents"))
+        .select(col("doc_id"),
+          (col("quality") >= 0.45).cast("int").as("label"))
       val df = ent
         .join(rep, Seq("doc_id"), "left")
         .join(wrs, Seq("doc_id"), "left")
@@ -195,7 +184,7 @@ object QualityModel {
       .withColumn("p1", org.apache.spark.ml.functions
         .vector_to_array(col("probability"))(1))
       .select(col("doc_id"), col("label"),
-        (floor(col("p1") * 10000 + lit(0.5)) / 10000).as("quality_p"))
+        r4(col("p1")).as("quality_p"))
       .orderBy(col("doc_id"))
   }
 

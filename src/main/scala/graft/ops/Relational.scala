@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.{r2, r4}
 import graft.io.Sources.table
 
 /** Core relational operators (SURVEY.md §2.2-§2.7).
@@ -39,8 +40,8 @@ object Relational {
         // 2-decimal-exact doubles is order-independent at this scale, so
         // the result can't sit on a half-cent rounding boundary that
         // shuffle order (or the oracle engine) resolves differently
-        round(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount"))
-          * 100 + lit(0.5)) / 100), 2).as("sum_disc_price"),
+        round(sum(r2(col("l_extendedprice") * (lit(1) - col("l_discount")))),
+          2).as("sum_disc_price"),
         // avg as floor(sum*100/n + 0.5)/100 over integer-exact cents:
         // bit-identical in both engines even when the true mean is an
         // exact half-cent (0.5 is representable; no epsilon involved)
@@ -102,11 +103,6 @@ object Relational {
   private val p3Sql =
     """SELECT c_custkey AS user_id, c_name, c_acctbal AS rubro
        FROM customer ORDER BY user_id"""
-
-  /** Deterministic 2-decimal rounding — see [[graft.functions.Rounding]]
-    * for the cross-engine rationale.
-    */
-  def r2(c: Column): Column = graft.functions.Rounding.r2(c)
 
   /** P5 derived columns + M1 arithmetic (`transform.py` feature adds). */
   def p5DerivedColumns(spark: SparkSession, dir: String): DataFrame =
@@ -795,8 +791,7 @@ object Relational {
     // is identical at any parallelism (count/min/max are exact already)
     val stable = d.columns.filter(_ != "summary").map { c =>
       when(col("summary").isin("mean", "stddev"),
-        (floor(col(c).cast("double") * 10000 + lit(0.5)) / 10000)
-          .cast("string"))
+        r4(col(c).cast("double")).cast("string"))
         .otherwise(col(c)).as(c)
     }
     d.select(col("summary") +: stable.toSeq: _*).orderBy(col("summary"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.r4
 import graft.io.Sources.table
 
 /** Scale utilities: the shuffle- and layout-shaping tools a 100 TB
@@ -101,7 +102,7 @@ object Scale {
       .select(col(key).cast("string").as("hot_key"), col("n").as("hot_n"))
     stats.crossJoin(top)
       .withColumn("hot_share",
-        floor(col("hot_n").cast("double") / total * 10000 + lit(0.5)) / 10000)
+        r4(col("hot_n").cast("double") / total))
       .orderBy(col("hot_n").desc, col("hot_key"))
     // counts stays cached: the returned plan's stats and top-k branches
     // both read it when the report actually executes (an unpersist here,

@@ -32,8 +32,8 @@ import graft.functions.LshSignature
   * the default 6 bits measured >= 0.45 at every sf, the same floor as
   * the hand-written [[graft.ext.Similarity.annLsh]], which remains the
   * explicit API for this plan). Enable with
-  * `spark.graft.annRewrite=true`; `spark.graft.annRewrite.nbits` /
-  * `.dim` size the plane matrix (defaults 6 / 64). Deliberately
+  * `spark.graft.annRewrite=true`; `spark.graft.annRewrite.nbits` sets
+  * the signature width (default 6) over 64-dim planes. Deliberately
   * conservative, like [[NgramChainRewrite]]: only the exact canonical
   * shape fires, and a rewritten join (condition now an And) can never
   * re-match.
@@ -105,8 +105,7 @@ case class AnnIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   private def indexProbeJoin(j: Join, corpusEmb: Attribute,
       queryEmb: Attribute): Join = {
     val nBits = conf(AnnIndexRewrite.NBitsKey, 6)
-    val dim = conf(AnnIndexRewrite.DimKey, 64)
-    val planes = LshSignature.planes(nBits, dim)
+    val planes = LshSignature.planes(nBits, 64)
     // corpus side: + signature column
     val sigC = Alias(LshSignature(corpusEmb, planes), "__ann_sig_c")()
     val corpus = Project(j.left.output :+ sigC, j.left)
@@ -133,7 +132,6 @@ case class AnnIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 object AnnIndexRewrite {
   val Flag = "spark.graft.annRewrite"
   val NBitsKey = "spark.graft.annRewrite.nbits"
-  val DimKey = "spark.graft.annRewrite.dim"
 
   /** Inject into a live session (idempotent). */
   def enable(spark: SparkSession): Unit = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.Rounding.r2
 import graft.io.Sources.table
 
 /** Data-quality profiling (reference stage 1, `pre_analysis.py`).
@@ -37,8 +38,8 @@ object Profiler {
       .select(col("e.column_name").as("column_name"), col("n_total"),
         col("e.n_null").as("n_null"), col("e.n_distinct").as("n_distinct"))
       .select(col("column_name"), col("n_total"), col("n_null"),
-        (floor((lit(100.0) * (col("n_total") - col("n_null")) /
-          col("n_total")) * 100 + 0.5) / 100).as("completeness_pct"),
+        r2(lit(100.0) * (col("n_total") - col("n_null")) / col("n_total"))
+          .as("completeness_pct"),
         col("n_distinct"))
       .orderBy(col("column_name"))
   }

@@ -655,18 +655,11 @@ object EventStream {
     */
   private[graft] def streamNearDupProbeRun(spark: SparkSession,
       dir: String): DataFrame = {
-    val nPerm = 16
-    val rowsPerBand = 2
-    val nBands = nPerm / rowsPerBand
+    import graft.ext.Dedup.{MinhashPerms, bandStructs}
     def withSigs(df: DataFrame): DataFrame = {
-      val withMins = (0 until nPerm).foldLeft(df) { (d, i) =>
+      val withMins = (0 until MinhashPerms).foldLeft(df) { (d, i) =>
         d.withColumn(s"m$i",
           expr(s"array_min(transform(grams, g -> xxhash64($i, g)))"))
-      }
-      val bandStructs = (0 until nBands).map { b =>
-        val sig = xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(i => col(s"m$i")): _*)
-        struct(lit(b).as("band"), sig.as("sig"))
       }
       withMins.withColumn("bs", explode(array(bandStructs: _*)))
         .withColumn("band", col("bs.band"))
@@ -685,10 +678,8 @@ object EventStream {
       .join(broadcast(baseIdx), Seq("band", "sig"), "inner")
       .withColumn("n_inter",
         size(array_intersect(col("grams"), col("base_grams"))))
-      .withColumn("jaccard",
-        floor(col("n_inter").cast("double") /
-          (size(col("grams")) + size(col("base_grams")) - col("n_inter"))
-          * 10000 + lit(0.5)) / 10000)
+      .withColumn("jaccard", graft.ext.Dedup.jaccard(col("n_inter"),
+        size(col("grams")), size(col("base_grams"))))
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_id"), col("base_id"), col("jaccard"))
     drainToParquet(spark, verified, "stream_neardup", dir)
@@ -722,9 +713,6 @@ object EventStream {
     val streamed = streamNearDupProbeRun(spark, dir)
     val streamBest = bestPerDoc(streamed).select(col("doc_id"), col("base_id"))
     val truth = graft.ext.Dedup.incrementalNearBest(spark, dir)
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    val nHit = truth.join(streamBest, Seq("doc_id", "base_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
     // NON-tautological false-positive check: the writer plan already
     // enforces `jaccard >= 0.5` on the STREAMED value two lines before
     // the sink, so re-filtering the sink on the same column could
@@ -742,15 +730,15 @@ object EventStream {
         col("grams").as("base_grams")), Seq("base_id"))
       .withColumn("n_inter",
         size(array_intersect(col("grams"), col("base_grams"))))
-      .withColumn("jaccard_batch",
-        floor(col("n_inter").cast("double") /
-          (size(col("grams")) + size(col("base_grams")) - col("n_inter"))
-          * 10000 + lit(0.5)) / 10000)
+      .withColumn("jaccard_batch", graft.ext.Dedup.jaccard(col("n_inter"),
+        size(col("grams")), size(col("base_grams"))))
     val nBad = recomputed.filter(col("jaccard") < 0.5 ||
         col("jaccard") =!= col("jaccard_batch"))
       .agg(count(lit(1)).as("n_bad"))
-    val verdict = nTruth.crossJoin(nHit).crossJoin(nBad)
-      .select((col("n_hit") >= col("n_truth") * 0.9).as("stream_recall_ok"),
+    val verdict = Q.recallVerdict(truth, streamBest,
+        Seq("doc_id", "base_id"), minRecall = 0.9, withFp = false)
+      .crossJoin(nBad)
+      .select(col("recall_ok").as("stream_recall_ok"),
         (col("n_bad") === 0).as("stream_no_false_positives"))
     truth.crossJoin(broadcast(verdict))
       .select(col("doc_id"), col("base_id"), col("jaccard"),

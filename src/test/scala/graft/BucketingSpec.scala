@@ -141,8 +141,7 @@ class BucketingSpec extends SparkSuite {
     // and it PRUNED: of the >16 bucket dirs on disk, the single-query
     // probe opened at most its 16 probe-mask partitions
     val total = Option(new java.io.File(
-        "/root/repo/target/tmp/ann_index/" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-b5").listFiles())
+        ext.Similarity.annIndexPath(dir, 5)).listFiles())
       .getOrElse(Array.empty).count(_.getName.startsWith("sig="))
     assert(total > 16, s"fixture occupies only $total buckets")
     val read = idxScan.metrics("numPartitions").value

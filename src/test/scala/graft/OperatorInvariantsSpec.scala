@@ -304,6 +304,34 @@ class OperatorInvariantsSpec extends SparkSuite {
       s"missed: ${exact -- banded}")
   }
 
+  test("recall verdict: exact recall bound, a stray found row, empty truth") {
+    import spark.implicits._
+    val truth = (1L to 10L).map(i => (i, i + 100)).toDF("doc_a", "doc_b")
+    def verdict(found: Seq[(Long, Long)], t: org.apache.spark.sql.DataFrame =
+        truth): (Boolean, Boolean) = {
+      val r = Q.recallVerdict(t, found.toDF("doc_a", "doc_b"),
+        Seq("doc_a", "doc_b"), minRecall = 0.9, withFp = true).collect()
+      assert(r.length == 1)
+      (r(0).getAs[Boolean]("no_false_positives"),
+        r(0).getAs[Boolean]("recall_ok"))
+    }
+    val hits = (1L to 10L).map(i => (i, i + 100))
+    // 9 of 10 is exactly 0.9: recall holds; 8 of 10 does not
+    assert(verdict(hits.take(9)) == ((true, true)))
+    assert(verdict(hits.take(8)) == ((true, false)))
+    // one found pair outside the truth set flips only the fp bit
+    assert(verdict(hits :+ ((1L, 2L))) == ((false, true)))
+    // empty truth: recall is vacuous, any found pair is a false positive
+    val empty = truth.filter(lit(false))
+    assert(verdict(Seq.empty, empty) == ((true, true)))
+    assert(verdict(Seq((1L, 2L)), empty) == ((false, true)))
+    // recall-only form: one column
+    val r = Q.recallVerdict(truth, hits.take(8).toDF("doc_a", "doc_b"),
+      Seq("doc_a", "doc_b"), minRecall = 0.8, withFp = false)
+    assert(r.columns.toSeq == Seq("recall_ok"))
+    assert(r.collect().map(_.getBoolean(0)).toSeq == Seq(true))
+  }
+
   test("banded minhash verified: truth rows nonempty, both verdict booleans true") {
     val v = ext.Dedup.minhashBandedVerified(spark, sf).collect()
     assert(v.nonEmpty, "testdata should contain planted near-dups")
@@ -1053,9 +1081,7 @@ class OperatorInvariantsSpec extends SparkSuite {
     // the append wrote files ONLY under the delta's signature
     // partitions: one part-file per untouched bucket (the base write's
     // repartition(sig) gives exactly one), two per touched bucket
-    val root = new java.io.File(
-      graft.io.Sources.tmpDir("ann_index_incr") + "/" +
-        sf.replaceAll("[^A-Za-z0-9._-]", "_"))
+    val root = new java.io.File(ext.Similarity.annIndexIncrPath(sf))
     val touched = hist.filter(_.getLong(2) > 0).map(_.getInt(0)).toSet
     val withDelta = hist.exists(_.getLong(2) > 0)
     assert(withDelta, "fixture has no delta vectors")
@@ -1068,6 +1094,16 @@ class OperatorInvariantsSpec extends SparkSuite {
         s"bucket ${r.getInt(0)}: $parts part files, expected $expected" +
           " — the increment rewrote untouched buckets")
     }
+  }
+
+  test("ann index scratch paths: punctuation-variant dirs never share one") {
+    import ext.Similarity.{annIndexIncrPath, annIndexPath, annPointerPath}
+    val (a, b) = ("/x/a b", "/x/a_b")
+    assert(annIndexPath(a, 5) != annIndexPath(b, 5))
+    assert(annPointerPath(a) != annPointerPath(b))
+    assert(annIndexIncrPath(a) != annIndexIncrPath(b))
+    // the layout stays per-nBits within one dir
+    assert(annIndexPath(a, 5) != annIndexPath(a, 6))
   }
 
   test("ann index freshness manifest: probe-time check is metadata-only, " +
@@ -1085,9 +1121,8 @@ class OperatorInvariantsSpec extends SparkSuite {
       corpusFile.toPath, StandardCopyOption.REPLACE_EXISTING)
     val n = io.Sources.table(spark, dir, "embeddings").count()
     val manifest = Paths.get(
-      graft.io.Sources.tmpDir("ann_index") + "/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-        s"-b${ext.Similarity.autoBits(n)}", "_graft_manifest")
+      ext.Similarity.annIndexPath(dir, ext.Similarity.autoBits(n)),
+      "_graft_manifest")
     Files.deleteIfExists(manifest)
 
     // first probe: builds index + manifest

@@ -1,7 +1,7 @@
 package graft
 
-import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue,
-  ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.{CompletableFuture, ConcurrentLinkedDeque,
+  ConcurrentLinkedQueue, ExecutionException, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import org.apache.spark.SparkContext
@@ -21,7 +21,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    the body never joins is still waited for before the scope
   *    returns, and its failure still fails the scope;
   *  - `s.release(df)` registers a cached or checkpointed frame that the
-  *    scope frees ([[Memos.free]]) when it exits.
+  *    scope frees ([[Memos.free]]) when it exits, newest first: a frame
+  *    cached on top of another is freed before its input, so Spark's
+  *    non-cascading uncache never has a dependent entry to rebuild.
   *
   * The first failure — a branch's or the scope body's own — cancels
   * every branch's job group, running and future jobs alike, and is what
@@ -41,7 +43,7 @@ final class Overlap private (sc: SparkContext) {
     t
   }
   private val groups = new ConcurrentLinkedQueue[String]()
-  private val frames = new ConcurrentLinkedQueue[Dataset[_]]()
+  private val frames = new ConcurrentLinkedDeque[Dataset[_]]()
   private val failure = new AtomicReference[Throwable]()
 
   def fork[T](desc: String)(body: => T): CompletableFuture[T] = {
@@ -60,7 +62,7 @@ final class Overlap private (sc: SparkContext) {
     try branch.get()
     catch { case _: ExecutionException => throw failure.get }
 
-  def release[D <: Dataset[_]](df: D): D = { frames.add(df); df }
+  def release[D <: Dataset[_]](df: D): D = { frames.push(df); df }
 
   private def cancel(group: String): Unit =
     sc.cancelJobGroupAndFutureJobs(group,

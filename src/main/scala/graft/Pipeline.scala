@@ -31,46 +31,51 @@ object Pipeline {
     // them on every exit path, a failed stage included.
     //
     // The three stages are data-INDEPENDENT (each reads only raw
-    // tables), so their sink actions run as overlapped branches
-    // ([[Overlap]]): Spark's scheduler happily runs several jobs at
-    // once, and the stages were only sequential because this driver
-    // code called them sequentially — measured round 21, the serial
-    // form left the whole job gated on one sub-second action barrier
-    // after another (36 jobs end to end). Each frame's own actions
-    // (write, then count) stay ORDERED inside its branch; only distinct
-    // stages overlap. The raw-table cache and the ml fit memos are
-    // concurrency-safe (ConcurrentHashMap + per-block cache locks).
+    // tables), so each runs whole — frame building, schema reads, sink
+    // actions — as one overlapped branch ([[Overlap]]): Spark's
+    // scheduler happily runs several jobs at once, and the stages were
+    // only sequential because this driver code called them
+    // sequentially. Each frame's own actions (write, then count) stay
+    // ORDERED inside its branch; only distinct stages overlap. The
+    // raw-table cache and the ml fit memos are concurrency-safe
+    // (ConcurrentHashMap + per-block cache locks).
     Overlap(spark) { s =>
-      // stage 1: profiling (one fused job per metric family)
-      val completeness =
-        s.release(quality.Profiler.profileCompleteness(spark, sfDir).cache())
-      val integrity = quality.Profiler.profileIntegrity(spark, sfDir)
-      // stage 2: cleaning (rule chain; R4 counted but not applied)
-      val counts = clean.Rules.ruleCounts(spark, sfDir)
-      val cleaned = s.release(clean.Rules.cleaned(spark, sfDir).cache())
-      // stage 3: features + activity clustering, JDBC sink
-      val features = feature.Features.build(spark, sfDir)
-      val labeled = mlx.Clustering.kmeansActivity(spark, sfDir)
-      val analysis =
-        s.release(features.join(labeled, Seq("c_custkey")).cache())
-
-      val f1 = s.fork("pipeline: profile") {
-        completeness.write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/profile_completeness")
-        integrity.write.mode(SaveMode.Overwrite)
-          .parquet(s"$outDir/profile_integrity")
-        completeness.count()
-      }
-      val f2 = s.fork("pipeline: clean") {
-        counts.write.mode(SaveMode.Overwrite).parquet(s"$outDir/rule_counts")
-        cleaned.write.mode(SaveMode.Overwrite).parquet(s"$outDir/cleaned")
-        cleaned.count()
-      }
+      // stage 3: features + activity clustering, JDBC sink. Forked
+      // first: the KMeans fit (k-means|| init + up to 20 Lloyd
+      // iterations, one job each) is the longest chain of jobs in the
+      // run, and the other two stages fill the cores around it. The
+      // feature join is built once; the fit input and the analysis
+      // join both read it.
       val f3 = s.fork("pipeline: transform") {
+        val features =
+          s.release(feature.Features.build(spark, sfDir).cache())
+        val input = s.release(mlx.Clustering.fitInput(spark, sfDir, features))
+        val analysis = s.release(features.join(
+          mlx.Clustering.activityLabels(spark, sfDir, input),
+          Seq("c_custkey")).cache())
         analysis.write.mode(SaveMode.Overwrite).parquet(s"$outDir/analysis")
         io.Sources.jdbcRoundTrip(spark, analysis,
           io.Sources.tmpDir("derby") + "/pipeline_db", "analysis")
         analysis.count()
+      }
+      // stage 1: profiling (one fused job per metric family)
+      val f1 = s.fork("pipeline: profile") {
+        val completeness =
+          s.release(quality.Profiler.profileCompleteness(spark, sfDir).cache())
+        completeness.write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/profile_completeness")
+        quality.Profiler.profileIntegrity(spark, sfDir)
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/profile_integrity")
+        completeness.count()
+      }
+      // stage 2: cleaning (rule chain; R4 counted but not applied)
+      val f2 = s.fork("pipeline: clean") {
+        clean.Rules.ruleCounts(spark, sfDir)
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/rule_counts")
+        val cleaned = s.release(clean.Rules.cleaned(spark, sfDir).cache())
+        cleaned.write.mode(SaveMode.Overwrite).parquet(s"$outDir/cleaned")
+        cleaned.count()
       }
       Result(s.join(f1), s.join(f2), s.join(f3))
     }

@@ -221,7 +221,7 @@ object Similarity {
         // fixed fit-input layout: k-means|| init samples per partition,
         // so the centroids are reproducible across cluster sizes only
         // if the fit input's partitioning doesn't float with the
-        // session (same discipline as mlx.Clustering.FitPartitions).
+        // session (same discipline as mlx.Clustering.fitPartitions).
         // Pruned to the two needed columns BEFORE the pinning shuffle
         // (the row order — and so the model — is unchanged; the
         // exchange moves half the bytes) and persisted once so the

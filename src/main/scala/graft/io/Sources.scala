@@ -55,7 +55,11 @@ object Sources {
   private val cached =
     graft.Memos.registerRaw(new ConcurrentHashMap[String, DataFrame]())
 
-  /** S1 primary scan: schema'd parquet read of a testdata table.
+  /** S1 primary scan: parquet read of a testdata table with the schema
+    * given up front. Spark infers a parquet schema with a Spark job (one
+    * task reading the footer, even for a single file), so the inferred
+    * schema is memoized ([[tableSchema]]) and each later read of the
+    * same file skips that job.
     *
     * `events.ts` is parquet TIMESTAMP(NANOS), which Spark reads only as a
     * raw long (`spark.sql.legacy.parquet.nanosAsLong=true`, set by
@@ -65,7 +69,8 @@ object Sources {
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     def load() = {
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = spark.read.schema(tableSchema(spark, dir, name))
+        .parquet(s"$dir/$name.parquet")
       raw.schema.find(f => f.name == "ts" &&
           f.dataType == org.apache.spark.sql.types.LongType) match {
         case Some(_) => raw.withColumn("ts",
@@ -127,12 +132,12 @@ object Sources {
 
   /** Drop every per-process cache layer for one table so the next
     * [[table]] call re-reads the files as they are NOW: the raw memo
-    * entry (unpersisted), the size memo, and Spark's own file-index /
-    * cache entries for the path. Used by consumers that detect an
-    * in-place regeneration of their input (e.g. the ANN index
-    * freshness check) — rebuilding a derived artifact from a stale
-    * cached scan while stamping it with the new files' fingerprint
-    * would mark wrong data permanently fresh.
+    * entry (unpersisted), the size and schema memos, and Spark's own
+    * file-index / cache entries for the path. Used by consumers that
+    * detect an in-place regeneration of their input (e.g. the ANN
+    * index freshness check) — rebuilding a derived artifact from a
+    * stale cached scan while stamping it with the new files'
+    * fingerprint would mark wrong data permanently fresh.
     */
   private[graft] def evictTable(spark: SparkSession, dir: String,
       name: String): Unit = {
@@ -142,6 +147,7 @@ object Sources {
     val key = s"${graft.Sessions.sessionKey(spark, dir)}/$name"
     Option(cached.remove(key)).foreach(_.unpersist(blocking = false))
     sizeMemo.remove(s"$dir/$name")
+    schemaMemo.remove(key)
     scala.util.Try(spark.catalog.refreshByPath(s"$dir/$name.parquet"))
     ()
   }
@@ -149,13 +155,41 @@ object Sources {
   private val sizeMemo = new ConcurrentHashMap[String, java.lang.Long]()
 
   /** Total on-disk bytes of a table's files, memoized per path. */
-  private def tableBytes(spark: SparkSession, dir: String,
+  private[graft] def tableBytes(spark: SparkSession, dir: String,
       name: String): Long =
     sizeMemo.computeIfAbsent(s"$dir/$name", _ => {
       val p = new Path(s"$dir/$name.parquet")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.getContentSummary(p).getLength
     })
+
+  private val schemaMemo =
+    new ConcurrentHashMap[String, (Long, Long, StructType)]()
+
+  /** The schema Spark infers for a table's parquet, memoized per
+    * session (the inference reads the session's timestamp confs, the
+    * same key as the raw tier) and path, and stamped with the file
+    * status it was inferred from — modification time and length — so
+    * a file rewritten in place is inferred again. One `getFileStatus`
+    * per call, no Spark job on a hit.
+    */
+  private def tableSchema(spark: SparkSession, dir: String,
+      name: String): StructType = {
+    val p = new Path(s"$dir/$name.parquet")
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val (mtime, len) = (st.getModificationTime, st.getLen)
+    val key = s"${graft.Sessions.sessionKey(spark, dir)}/$name"
+    schemaMemo.get(key) match {
+      case (`mtime`, `len`, schema) => schema
+      case _ =>
+        // inferred outside any lock: two racing readers both infer
+        // the same schema, and neither blocks the other tables
+        val schema = spark.read.parquet(p.toString).schema
+        schemaMemo.put(key, (mtime, len, schema))
+        schema
+    }
+  }
 
   /** S1/S5: CSV round-trip — write a DataFrame as header CSV (overwrite,
     * like `pre_process.py:304-306`), read it back with an explicit schema

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** IO round-trip edge cases beyond the oracled happy paths: quote and
   * escape handling in multiline CSV (the reference's S2 quirk,
-  * `pre_analysis.py:52-59`), and empty-frame sinks.
+  * `pre_analysis.py:52-59`), empty-frame sinks, and the schema memo
+  * behind `Sources.table`.
   */
 class IoSpec extends SparkSuite {
   import spark.implicits._
@@ -114,5 +116,72 @@ class IoSpec extends SparkSuite {
     val b = io.IoQueries.csvRoundTripQ(spark, dirB).collect()
     assert(a.collect().map(_.getInt(0)).toSeq == Seq(0, 1))
     assert(b.map(_.getInt(0)).forall(_ >= 2) && b.nonEmpty)
+  }
+
+  /** Spark jobs started while `body` runs. Listener delivery is async,
+    * so a marker job runs after `body`: the bus delivers job starts in
+    * submission order, and once the marker's has arrived every job
+    * `body` started is counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(String.valueOf(
+          j.properties.getProperty("spark.job.description")))
+    }
+    val marker = s"jobsDuring marker ${System.nanoTime()}"
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(marker), "marker job start never delivered")
+      started.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Replace `$dir/$name.parquet` in place with `df` as one file. */
+  private def writeTableFile(df: org.apache.spark.sql.DataFrame,
+      dir: String, name: String): Unit = {
+    val stage = java.nio.file.Files.createTempDirectory("graft_io_stage")
+    df.coalesce(1).write.mode("overwrite").parquet(stage.resolve("t").toString)
+    val part = stage.resolve("t").toFile.listFiles()
+      .find(f => f.getName.startsWith("part-") &&
+        f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$dir/$name.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("table() re-reads the schema of a table file rewritten in place") {
+    val dir = io.Sources.tmpDir("schema_rewrite")
+    writeTableFile(Seq((1L, "a")).toDF("id", "t"), dir, "t")
+    assert(io.Sources.table(spark, dir, "t").columns.toSeq == Seq("id", "t"))
+    writeTableFile(Seq((2L, 2.5, "b")).toDF("id", "x", "t"), dir, "t")
+    val back = io.Sources.table(spark, dir, "t")
+    assert(back.columns.toSeq == Seq("id", "x", "t"))
+    assert(back.collect().toSeq == Seq(Row(2L, 2.5, "b")))
+  }
+
+  test("table() infers a file's schema once; evictTable forgets it") {
+    val dir = io.Sources.tmpDir("schema_evict")
+    writeTableFile(Seq((1L, "a")).toDF("id", "t"), dir, "t")
+    io.Sources.table(spark, dir, "t")
+    assert(jobsDuring(io.Sources.table(spark, dir, "t")) == 0,
+      "a second read of an unchanged file inferred its schema again")
+    io.Sources.evictTable(spark, dir, "t")
+    assert(jobsDuring(io.Sources.table(spark, dir, "t")) == 1,
+      "a read after evictTable did not infer the schema again")
+  }
+
+  test("a second Features.build on one dir starts no Spark job") {
+    feature.Features.build(spark, sf)
+    assert(jobsDuring(feature.Features.build(spark, sf)) == 0)
   }
 }

@@ -21,8 +21,29 @@ class OperatorInvariantsSpec extends SparkSuite {
       .map(_.getInt(0)).toSet
     assert(labels.subsetOf(Set(0, 1, 2)) && labels.nonEmpty)
     assert(a.count() == 150)
-    val b = mlx.Clustering.kmeansActivity(spark, sf)
-    assert(a.collect().toSeq == b.collect().toSeq)
+    val memoized = a.collect().toSeq
+    // a second memoized call would read the same model back; determinism
+    // is an UNMEMOIZED fit in a narrower session matching it: the fit
+    // input is reassembled there (derived tier dropped) with 2 shuffle
+    // partitions, and its layout must not follow the session width
+    Memos.clearDerived()
+    val narrow = spark.newSession()
+    narrow.conf.set("spark.sql.shuffle.partitions", "2")
+    try assert(mlx.Clustering.kmeansPipeline(narrow, sf).collect().toSeq ==
+      memoized)
+    finally Memos.clearDerived() // no narrow-born fit input in the memo
+  }
+
+  test("kmeans fit-input partitions follow the customer table's size only") {
+    import mlx.Clustering.{fitPartitions, FitBytesPerPartition}
+    val sf01 = io.Sources.tableBytes(spark,
+      sf.stripSuffix("sf0.001") + "sf0.1", "customer")
+    assert(fitPartitions(0L) == 1 && fitPartitions(sf01) == 1)
+    assert(fitPartitions(4L << 30) > 1)
+    val sizes = (0L to 64L).map(_ * (FitBytesPerPartition / 4)) :+ (1L << 40)
+    val parts = sizes.map(fitPartitions)
+    assert(parts.zip(parts.tail).forall { case (a, b) => a <= b },
+      s"partition count decreased as the size grew: $parts")
   }
 
   test("pca: finite 2-d projection for every customer") {

@@ -26,4 +26,16 @@ class PipelineSpec extends SparkSuite {
     assert(spark.read.parquet(s"$out/analysis").count() == r.analysis)
     assert(spark.read.parquet(s"$out/rule_counts").count() == 1)
   }
+
+  test("a run on a fresh input dir leaves no persisted RDD behind") {
+    // a dir no earlier run or memo has seen: a copy of the sf0.001 tables
+    val in = Files.createTempDirectory("graft_pipeline_fresh")
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.copy(f.toPath, in.resolve(f.getName)))
+    val out = Files.createTempDirectory("graft_pipeline_fresh_out").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Pipeline.run(spark, in.toString, out)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+      "Pipeline.run left cached frames behind")
+  }
 }

@@ -71,8 +71,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // warm raw-table cache across the suite (the derived tier is still
-    // released per query — see Memos scaladoc for the lifecycle)
+    // warm raw-table cache across the suite (each sample's own frames
+    // are freed by its scope — see Overlap)
     io.Sources.enableTableCache()
     val spark = Sessions.local(appName = "graft-bench")
     val cost = new CostListener
@@ -83,26 +83,21 @@ object Bench {
       val (j0, s0, k0) = cost.snapshot
       val t0 = System.nanoTime()
       var ok = true
-      // q.confs scoped around build+execute (planning happens at the
-      // action), restored after — see Q.KBoundedAggConfs
-      try Sessions.withConfs(spark, q.confs) {
-        q.benchFn.getOrElse(q.fn)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+      // one scope per sample frees what the sample cached
+      val t = Overlap(spark) { _ =>
+        // q.confs scoped around build+execute (planning happens at the
+        // action), restored after — see Q.KBoundedAggConfs
+        try Sessions.withConfs(spark, q.confs) {
+          q.benchFn.getOrElse(q.fn)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+        }
+        catch { case e: Throwable =>
+          ok = false
+          failed += q.name
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+        }
+        (System.nanoTime() - t0) / 1e9
       }
-      catch { case e: Throwable =>
-        ok = false
-        failed += q.name
-        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      // release the DERIVED caches this query built (corpus, assembly,
-      // skew counts): timings stay self-contained and a 100-query
-      // session can't accumulate unbounded storage blocks (round-2
-      // driver bench: unrelated queries regressed up to 7.6x from
-      // exactly that). The bounded raw-table tier stays warm — round 3
-      // cleared it too and every multi-job query re-paid its full
-      // upstream chain (12 driver-measured >2x regressions).
-      Memos.clearDerived()
       val (j1, s1, k1) = cost.snapshot
       (Timing(t, j1 - j0, s1 - s0, k1 - k0), ok)
     }

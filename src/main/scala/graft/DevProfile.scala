@@ -26,12 +26,11 @@ object DevProfile {
         require(kv.length == 2, s"DEV_CONFS segment '$seg' is not k=v")
         kv(0) -> kv(1)
       }.toMap
-    def once(): Unit = {
+    def once(): Unit = Overlap(spark) { _ =>
       Sessions.withConfs(spark, q.confs ++ devConfs) {
         q.benchFn.getOrElse(q.fn)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
       }
-      Memos.clearDerived()
     }
     // warm the raw tier + JIT
     (1 to warm).foreach(_ => once())

@@ -89,63 +89,14 @@ object Q {
   }
 }
 
-/** Registry of per-process memoized DataFrame caches, in two tiers with
-  * different lifecycles:
-  *
-  *  - RAW ([[registerRaw]]): input-table scans ([[graft.io.Sources]]).
-  *    Bounded by the dataset on disk (10 tables per sf dir), shared by
-  *    every query — kept for the whole Bench/Verify run, exactly what a
-  *    warm cluster cache gives a resident engine.
-  *  - DERIVED ([[register]] / [[track]]): per-operator intermediates
-  *    (similarity corpus, ML assembly, skew counts). Released after
-  *    every query via [[clearDerived]] so a 100-query single-session
-  *    run never accumulates them — round 2's driver bench showed
-  *    unrelated queries regressing up to 7.6x from storage/GC pressure
-  *    of derived caches created by earlier queries and never released.
-  *
-  * Round 3 cleared BOTH tiers (plus the whole session cache) per query;
-  * that fixed the accumulation pathology but made every query
-  * re-materialize its full upstream chain — 12 driver-measured >2x
-  * regressions, all multi-job consumers of expensive shared upstreams.
-  * The scoped lifecycle keeps the bounded raw tier warm and releases
-  * only what round 2 actually leaked: derived frames.
+/** The one way to free a cached or checkpointed frame ([[free]]), and
+  * the two resets: [[clearDerived]] for what work outside every scope
+  * cached, [[clear]] for that plus the raw-table tier. Every frame the
+  * engine caches belongs to an [[Overlap]] scope or to the raw-table
+  * tier; Overlap's class doc states the ownership rule and which memos
+  * stay process-wide.
   */
 object Memos {
-  import java.util.concurrent.ConcurrentHashMap
-  private val derived =
-    scala.collection.mutable.ArrayBuffer[ConcurrentHashMap[String, DataFrame]]()
-  private val raw =
-    scala.collection.mutable.ArrayBuffer[ConcurrentHashMap[String, DataFrame]]()
-  private val adhoc = scala.collection.mutable.ArrayBuffer[DataFrame]()
-  private val hooks = scala.collection.mutable.ArrayBuffer[() => Unit]()
-
-  /** Register a DERIVED memo map — released by [[clearDerived]]. */
-  def register(m: ConcurrentHashMap[String, DataFrame])
-      : ConcurrentHashMap[String, DataFrame] =
-    synchronized { derived += m; m }
-
-  /** Register a RAW input memo map — kept across queries; released only
-    * by [[clear]].
-    */
-  def registerRaw(m: ConcurrentHashMap[String, DataFrame])
-      : ConcurrentHashMap[String, DataFrame] =
-    synchronized { raw += m; m }
-
-  /** Track a single ad-hoc cached frame (no memo map — e.g. the skew
-    * report's keyed counts) for release on the next [[clearDerived]].
-    *
-    * Bounded: Bench/Verify call [[clearDerived]] after every query, so
-    * the buffer holds at most one query's frames there; a library caller
-    * who never clears instead evicts-oldest (with unpersist) past
-    * [[adhocCap]] entries, so ad-hoc tracking can never pin an unbounded
-    * set of plan trees or storage blocks.
-    */
-  def track(df: DataFrame): DataFrame = synchronized {
-    if (adhoc.length >= adhocCap) free(adhoc.remove(0))
-    adhoc += df
-    df
-  }
-
   /** Release a cached OR checkpointed frame. `Dataset.unpersist` alone
     * does nothing to a local checkpoint: its blocks belong to the
     * checkpointed RDD under the frame's `LogicalRDD`, not to a cache
@@ -158,34 +109,13 @@ object Memos {
     case _ => df.unpersist(blocking = false)
   }
 
-  /** Max ad-hoc frames held before [[track]] evicts the oldest. */
-  val adhocCap = 32
-
-  /** Register a callback run on every [[clearDerived]] — for derived
-    * caches that are not DataFrames (e.g. the similarity corpus
-    * fingerprint memo) but share the per-query lifecycle.
+  /** Free and forget what work outside every [[Overlap]] scope cached
+    * or memoized (the process root); the raw tier stays.
     */
-  def onClearDerived(f: () => Unit): Unit = synchronized { hooks += f }
+  def clearDerived(): Unit = Overlap.closeRoot()
 
-  /** Unpersist and forget every DERIVED frame; raw input caches stay. */
-  def clearDerived(): Unit = synchronized {
-    derived.foreach { m =>
-      m.values.forEach(df => free(df))
-      m.clear()
-    }
-    adhoc.foreach(free)
-    adhoc.clear()
-    hooks.foreach(_.apply())
-  }
-
-  /** Unpersist and forget every memoized frame, both tiers. */
-  def clear(): Unit = synchronized {
-    clearDerived()
-    raw.foreach { m =>
-      m.values.forEach(df => free(df))
-      m.clear()
-    }
-  }
+  /** [[clearDerived]], then unpersist and forget the raw tier too. */
+  def clear(): Unit = { clearDerived(); io.Sources.uncacheTables() }
 }
 
 /** Session factory with the engine's standard configs.

@@ -32,17 +32,16 @@ object Verify {
       .filter(q => only.isEmpty || only(q.name))
       .foreach { q =>
       val name = q.name
-      try Sessions.withConfs(spark, q.confs) {
-        q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+      // one scope per query frees what the query cached, as in Bench
+      try Overlap(spark) { _ =>
+        Sessions.withConfs(spark, q.confs) {
+          q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-query DERIVED cache release — same discipline as Bench.run:
-      // a ~100-query single-session dump must not accumulate derived
-      // blocks; the bounded raw-table tier stays warm
-      Memos.clearDerived()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

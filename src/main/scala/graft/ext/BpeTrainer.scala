@@ -57,7 +57,7 @@ object BpeTrainer {
     */
   private def trained(spark: SparkSession, dir: String)
       : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
-    val vocab = graft.Memos.track(
+    val vocab = graft.Overlap.own(
       tableWide(spark, dir, "documents")
         .select(explode(split(lower(col("text")), " ")).as("word"))
         .filter(col("word").rlike("^[a-z0-9]+$"))

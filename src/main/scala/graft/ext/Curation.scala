@@ -529,7 +529,7 @@ object Curation {
       when(col("lang") === "en", 3).when(col("lang") === "zh", 3)
         .when(col("lang") === "de", 2).when(col("lang") === "fr", 1)
         .when(col("lang") === "es", 1).otherwise(0)
-    val docs = graft.Memos.track(tableWide(spark, dir, "documents")
+    val docs = graft.Overlap.own(tableWide(spark, dir, "documents")
       .select(col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
         conv(substring(md5(col("text").cast("binary")), 1, 5), 16, 10)
@@ -620,7 +620,7 @@ object Curation {
     val minDf = 3
     val docs = tableWide(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-    val segs = graft.Memos.track(docs
+    val segs = graft.Overlap.own(docs
       .select(col("doc_id"),
         posexplode(expr(
           s"""transform(sequence(0, cast(ceil(size(words) / $w.0) as int) - 1),
@@ -704,9 +704,8 @@ object Curation {
     */
   def shardPack(spark: SparkSession, dir: String): DataFrame = {
     // docs feeds both the offsets aggregation and the packing join:
-    // persist so the split+md5 scan pass runs once (released by the
-    // per-query clearDerived, same as mixturePlan's projection)
-    val docs = graft.Memos.track(tableWide(spark, dir, "documents")
+    // persist so the split+md5 scan pass runs once
+    val docs = graft.Overlap.own(tableWide(spark, dir, "documents")
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
         conv(substring(md5(col("text").cast("binary")), 1, 5), 16, 10)

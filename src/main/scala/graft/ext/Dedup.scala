@@ -365,8 +365,8 @@ object Dedup {
       .select(col("doc_id"), col("grams"), size(col("grams")).as("n_grams"))
     // distinct bench-gram hashes feed three consumers (the sizing count,
     // the set-bit build, and — fn only — the exact-membership join):
-    // persist once, released by the per-query clearDerived
-    val benchH = graft.Memos.track(
+    // persist once
+    val benchH = graft.Overlap.own(
       g.filter(col("doc_id") % 37 === 0)
         .select(explode(col("grams")).as("gram"))
         .select(expr("poly_hash2(gram)").as("h")).distinct()
@@ -531,7 +531,7 @@ object Dedup {
     val thresh = 0.5
     val maxDf = 1000
     val raw = tableWide(spark, dir, "documents")
-    val g = graft.Memos.track(withGrams(raw)
+    val g = graft.Overlap.own(withGrams(raw)
       .withColumn("side",
         when(pmod(col("doc_id"), lit(5)) === 4, "d").otherwise("b"))
       .withColumn("n_grams", size(col("grams")))

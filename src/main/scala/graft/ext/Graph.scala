@@ -61,39 +61,41 @@ object Graph {
     // any query another thread plans on the same session mid-loop.
     val sessionParts =
       spark.conf.get("spark.sql.shuffle.partitions").toLong // read-only cap
-    // persist the projected edge list FIRST: the sizing count, and both
-    // union branches of the symmetrization below, read it — unpersisted,
-    // the upstream pair join (the most expensive stage of any near-dup
-    // pipeline) would run three times before the loop even starts
-    // (round-3 driver bench: x_dup_groups 10.8 s / x_semantic_dedup
-    // 15.6 s, dominated by exactly that recompute)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist()
-    val nEdges = e.count()
-    val parts = math.max(1L, math.min(sessionParts, nEdges / 50000 + 1)).toInt
-    var sym: DataFrame = null
-    var labels: DataFrame = null
-    var prev: DataFrame = null
-    var done = false
-    try {
+    // The loop runs in its own scope: the scope frees the edge list,
+    // its symmetrization and every label generation on every exit, and
+    // the final generation — the frame the scope returns — passes to
+    // the caller's owner ([[graft.Overlap]]), which frees it when the
+    // caller's query or run ends.
+    val finalLabels = graft.Overlap(spark) { s =>
+      // persist the projected edge list FIRST: the sizing count, and
+      // both union branches of the symmetrization below, read it —
+      // unpersisted, the upstream pair join (the most expensive stage
+      // of any near-dup pipeline) would run three times before the
+      // loop even starts (round-3 bench: x_dup_groups 10.8 s /
+      // x_semantic_dedup 15.6 s, dominated by exactly that recompute)
+      val e = s.release(edges.select(col(srcCol).as("src"),
+        col(dstCol).as("dst")).persist())
+      val nEdges = e.count()
+      val parts =
+        math.max(1L, math.min(sessionParts, nEdges / 50000 + 1)).toInt
       // symmetrize then dedup in ONE explicit exchange: hash(src, parts)
       // already co-locates equal (src, dst) pairs, so the dropDuplicates
       // aggregate rides that layout shuffle-free, and the persisted
       // result keeps exactly the width + key every round's join needs
-      sym = e
+      val sym = s.release(e
         .union(e.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(parts, col("src"))
         .dropDuplicates("src", "dst")
-        .persist()
+        .persist())
       // same one-exchange idiom for the initial label table: explicit
       // hash(id, parts) so the per-round left join is co-partitioned
       // with `pushed` from round 1 (localCheckpoint preserves the
       // physical partitioning into the checkpointed LogicalRDD)
-      labels = sym.select(col("src").as("id"))
+      var labels = s.release(sym.select(col("src").as("id"))
         .repartition(parts, col("id"))
         .dropDuplicates("id")
         .withColumn("label", col("id"))
-        .localCheckpoint()
+        .localCheckpoint())
       // labels' eager checkpoint just materialized sym's cache; the raw
       // edge list has served all three consumers — release it
       e.unpersist(blocking = false)
@@ -134,35 +136,29 @@ object Graph {
         // non-cascading recache replan of the dependent entries — 23 s
         // vs 2 s for the whole query), but the superseded round's
         // checkpoint BLOCKS are released explicitly below rather than
-        // left to the ContextCleaner: once round k's RDD is saved by
-        // the probe, round k-1's blocks can never be read again (k's
-        // lineage is truncated at its own blocks), and a deep loop near
-        // maxIter would otherwise hold every generation of the label
-        // table in storage until the driver happens to GC (round-21
-        // verdict memory-safety item).
-        prev = labels
-        labels = labels.join(pushed, Seq("id"), "left")
+        // at scope exit: once round k's RDD is saved by the probe,
+        // round k-1's blocks can never be read again (k's lineage is
+        // truncated at its own blocks), and a deep loop near maxIter
+        // would otherwise hold every generation of the label table in
+        // storage until the loop ends (round-21 verdict memory-safety
+        // item).
+        val prev = labels
+        labels = s.release(labels.join(pushed, Seq("id"), "left")
           .select(col("id"),
             least(col("label"), coalesce(col("neighbor_min"), col("label")))
               .as("label"))
-          .localCheckpoint(false)
-        val s = labelSum(labels) // materializes the checkpoint
+          .localCheckpoint(false))
+        val total = labelSum(labels) // materializes the checkpoint
         graft.Memos.free(prev)
-        converged = prevSum.contains(s)
-        prevSum = Some(s)
+        converged = prevSum.contains(total)
+        prevSum = Some(total)
         iter += 1
       }
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds")
-      done = true
-      labels.select(col("id"), col("label").as("group_id"))
-    } finally {
-      e.unpersist(blocking = false) // no-op if already released above
-      if (sym != null) sym.unpersist(blocking = false)
-      // a failed loop (non-convergence, a cancelled probe) hands no
-      // label table out: release the generations it still holds
-      if (!done) Seq(prev, labels).filter(_ != null).foreach(graft.Memos.free)
+      labels
     }
+    finalLabels.select(col("id"), col("label").as("group_id"))
   }
 
   /** Registered query: semantic-dedup groups — fold the embedding-cosine
@@ -298,7 +294,7 @@ object Graph {
       // consumer below (`deg.count()`) fills the cache in the same
       // pass — a separate `sym.count()` was one whole planned action
       // for work the next action repeats for free.
-      val sym = graft.Memos.track(
+      val sym = graft.Overlap.own(
         raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
           .repartition(col("src"))
           .dropDuplicates("src", "dst")
@@ -313,7 +309,7 @@ object Graph {
       // shuffle per round (the first formulation rebuilt ranks from
       // deg with a second join every round: 2x the stages, measured
       // ~1.45 s/round vs ~0.7 here at sf0.1)
-      val symd = graft.Memos.track(sym.join(deg, "src").persist())
+      val symd = graft.Overlap.own(sym.join(deg, "src").persist())
       // deg.count() fills sym's cache on the way (first materializer);
       // deg itself stays a cheap co-partitioned re-aggregation of it
       // wherever referenced
@@ -419,7 +415,7 @@ object Graph {
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
       .select((col("du") * (1L << 32) + col("u")).as("ru"),
         (col("dv") * (1L << 32) + col("v")).as("rv"))
-    val e = graft.Memos.track(
+    val e = graft.Overlap.own(
       ranked.select(least(col("ru"), col("rv")).as("s"),
         greatest(col("ru"), col("rv")).as("t")).persist())
     val wedges = e.as("x").join(e.as("y"),

@@ -222,7 +222,7 @@ object Multimodal {
   def mediaDedup(spark: SparkSession, dir: String): DataFrame = {
     // pinned: the df filter and BOTH sides of the pair join read this —
     // unpersisted, the payload slicing pass would run three times
-    val fr = graft.Memos.track(frameSlices(spark, dir, step = 1)
+    val fr = graft.Overlap.own(frameSlices(spark, dir, step = 1)
       .select(col("doc_id"), col("frame_md5")).distinct().persist())
     val keep = fr.groupBy("frame_md5").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, 50))

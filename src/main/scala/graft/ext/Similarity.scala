@@ -50,41 +50,37 @@ object Similarity {
         col("nrm") =!= Double.PositiveInfinity)
   }
 
-  /** Normalized corpus, memoized + cached per (session, dir): every
-    * similarity operator starts from the same cast+norm pass, and the
-    * self-join / fit / probe shapes below each consume it two or three
-    * times — one cached copy instead of recomputing the cast + dot per
-    * consumer (same discipline as `mlx.Clustering.assembled`).
+  /** Normalized corpus, memoized + cached per (session, dir) in the
+    * owning [[graft.Overlap]] scope: every similarity operator starts
+    * from the same cast+norm pass, and the self-join / fit / probe
+    * shapes below each consume it two or three times — one cached copy
+    * instead of recomputing the cast + dot per consumer (same
+    * discipline as `mlx.Clustering.assembled`).
     */
-  private val memo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
+  private val CorpusMemo = "similarity.corpus"
 
   /** Source-file fingerprint each memoized corpus entry was built from
     * (round-12 ADVICE): lets [[corpus]] detect an in-place regeneration
     * performed by ANOTHER session/process — whose rebuild invalidates
     * only ITS caches — and drop this session's stale view instead of
-    * joining a fresh index against stale queries. Keyed like [[memo]];
-    * kept outside the Memos derived tier (strings, nothing to
-    * unpersist) and never cleared: a surviving entry whose fingerprint
-    * still matches is exactly the warm-cache case we want to keep.
+    * joining a fresh index against stale queries. Keyed like the corpus
+    * memo; process-wide (strings, nothing to unpersist) and never
+    * cleared: a surviving entry whose fingerprint still matches is
+    * exactly the warm-cache case we want to keep.
     */
   private val corpusFp =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Per-QUERY fingerprint memo keyed by dir (round-12 ADVICE): a
     * single plan build calls [[corpus]] 2-3 times, and the O(#files)
-    * metadata walk should run once per query, not once per call.
-    * Cleared with the derived tier, so the next query re-walks —
-    * that is the staleness-detection granularity for non-ANN
-    * consumers (the ANN index/freshness paths keep their own strict,
-    * unmemoized walks in [[ensureAnnIndex]]/[[writeAnnIndex]], where
-    * a stale view would be stamped permanently fresh). A library
-    * caller that never clears the derived tier gets regeneration
-    * detection only at those ANN boundaries.
+    * metadata walk should run once per owner ([[graft.Overlap]]), not
+    * once per call — so the next query re-walks: that is the
+    * staleness-detection granularity for non-ANN consumers (the ANN
+    * index/freshness paths keep their own strict, unmemoized walks in
+    * [[ensureAnnIndex]]/[[writeAnnIndex]], where a stale view would be
+    * stamped permanently fresh).
     */
-  private val fpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
-  graft.Memos.onClearDerived(() => fpMemo.clear())
+  private val FingerprintMemo = "similarity.corpus-fingerprint"
 
   /** Fingerprint of a locally readable corpus dir, or None when the
     * dir is not on the local FS (Sources reads it via Hadoop FS just
@@ -94,9 +90,9 @@ object Similarity {
     * similarity operator hard-fail on non-local stores).
     */
   private def corpusFingerprintOpt(dir: String): Option[String] =
-    fpMemo.computeIfAbsent(dir, d =>
-      if (new java.io.File(s"$d/embeddings.parquet").exists)
-        Some(corpusFingerprint(d))
+    graft.Overlap.memo(FingerprintMemo, dir)(
+      if (new java.io.File(s"$dir/embeddings.parquet").exists)
+        Some(corpusFingerprint(dir))
       else None)
 
   private[graft] def corpus(spark: SparkSession, dir: String): DataFrame = {
@@ -114,7 +110,7 @@ object Similarity {
     corpusFingerprintOpt(dir).foreach { fp =>
       val prior = corpusFp.get(key)
       if (prior != null && prior != fp) invalidateCorpus(spark, dir)
-      else if (prior == null && !memo.containsKey(key))
+      else if (prior == null)
         // first resolution in this session: the raw-table tier may
         // have been warmed BEFORE this call (Bench warms all tables)
         // and another process may have regenerated the corpus in
@@ -123,10 +119,10 @@ object Similarity {
         // (round-12 ADVICE; cheap, first-resolution-only)
         graft.io.Sources.evictTable(spark, dir, "embeddings")
     }
-    memo.computeIfAbsent(key, _ => {
+    graft.Overlap.memo(CorpusMemo, key) {
       corpusFingerprintOpt(dir).foreach(corpusFp.put(key, _))
-      withNorm(tableWide(spark, dir, "embeddings")).cache()
-    })
+      graft.Overlap.own(withNorm(tableWide(spark, dir, "embeddings")).cache())
+    }
   }
 
   private val dotExpr = "vec_dot(q_emb, c_emb)"
@@ -229,12 +225,10 @@ object Similarity {
         // is capped: bucketing needs a reasonable Voronoi partition,
         // not convergence, and each extra iteration is a full job over
         // the corpus.
-        val fitInput = e.select(col("vec_id"), col("features"))
+        km.fit(graft.Overlap.own(e.select(col("vec_id"), col("features"))
           .repartition(16, col("vec_id"))
           .sortWithinPartitions(col("vec_id"))
-          .persist()
-        try km.fit(fitInput)
-        finally fitInput.unpersist(blocking = false)
+          .persist()))
       })
     val bucketed = model.transform(e)
     val centers = model.clusterCenters.zipWithIndex
@@ -546,9 +540,10 @@ object Similarity {
     // frame view plus the app-wide trained view, which is exactly the
     // pair a detected regeneration staled.
     val sKey = graft.Sessions.sessionKey(spark, dir)
-    Option(memo.remove(sKey)).foreach(_.unpersist(blocking = false))
+    graft.Overlap.forget(CorpusMemo, sKey)
     corpusFp.remove(sKey)
-    fpMemo.remove(dir) // rebuild paths must re-walk, not reuse this query's
+    // rebuild paths must re-walk, not reuse this query's
+    graft.Overlap.forget(FingerprintMemo, dir)
     // the IVF centroids are a TRAINED view of the corpus: keeping them
     // through a detected regeneration would transform the fresh corpus
     // with centroids fit on the old one — exactly the stale-half/
@@ -777,10 +772,10 @@ object Similarity {
     * entirely inside the timed span, every branch joined before
     * return), and the frame handed back to Bench's noop sink is the
     * checkpointed rows (round-22 min-of-5: 1.242 s -> 0.716 s
-    * same-box). Those blocks outlive the call: the checkpoint is
-    * [[graft.Memos.track]]ed, so the caller's next
-    * [[graft.Memos.clearDerived]] (Bench's, after every sample) frees
-    * them. The index is resolved ONCE before the fan-out so concurrent
+    * same-box). Those blocks outlive the call: the checkpoint is the
+    * frame the scope returns, so it passes to the caller's owner
+    * ([[graft.Overlap]]) and is freed when the caller's query ends.
+    * The index is resolved ONCE before the fan-out so concurrent
     * probes can never race a missing-index rebuild.
     */
   def annProbeManyBench(spark: SparkSession, dir: String): DataFrame = {
@@ -793,7 +788,7 @@ object Similarity {
         }
       }
       val last = s.fork("ann serve: batch 4") {
-        graft.Memos.track(annProbeBatch(spark, dir, 4).localCheckpoint(true))
+        s.release(annProbeBatch(spark, dir, 4).localCheckpoint(true))
       }
       served.foreach(s.join(_))
       s.join(last)
@@ -1236,7 +1231,7 @@ object Similarity {
     // an exploded (vec, dim) shuffle of 64·N rows. Persisted: both the
     // query and index branches consume it, and without the pin each
     // would re-run the full corpus pass for the same 1-row scalar
-    val m = graft.Memos.track(un.agg(
+    val m = graft.Overlap.own(un.agg(
       max(expr("array_max(transform(u, x -> abs(x)))")).as("m")).persist())
     // |u_i·127/m| <= 127.5 by construction, so floor(.. + 0.5) lands in
     // [-127, 127] without clamping

@@ -627,7 +627,7 @@ object TextAnalysis {
     val docs = tableWide(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .filter(size(col("words")) >= 2)
-    val occ = graft.Memos.track(docs
+    val occ = graft.Overlap.own(docs
       .select(col("doc_id"),
         explode(zip_with(
           slice(col("words"), lit(1), size(col("words")) - 1),
@@ -704,7 +704,7 @@ object TextAnalysis {
     val terms = Seq("spark", "query", "window")
     val docs = tableWide(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-    val dl = graft.Memos.track(docs
+    val dl = graft.Overlap.own(docs
       .select(col("doc_id"), size(col("words")).cast("long").as("dl"))
       .persist())
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))

@@ -29,8 +29,8 @@ object Sources {
     * anti-pattern at any scale. [[graft.Bench]] and [[graft.Verify]]
     * enable it via [[enableTableCache]] to amortize scans across the
     * query suite, mirroring what a warm cluster cache / DataFrame reuse
-    * would give; the raw tier survives the per-query derived-memo clear
-    * (see [[graft.Memos]]). Off by default so library users and plan
+    * would give; the raw tier outlives every query's own cached frames
+    * (see [[graft.Overlap]]). Off by default so library users and plan
     * tests see the real FileSourceScan (pushdown assertions).
     */
   @volatile private var cacheFlag: Option[Boolean] = None
@@ -52,8 +52,13 @@ object Sources {
     prev
   }
 
-  private val cached =
-    graft.Memos.registerRaw(new ConcurrentHashMap[String, DataFrame]())
+  private val cached = new ConcurrentHashMap[String, DataFrame]()
+
+  /** Unpersist and forget the raw-table tier ([[graft.Memos.clear]]). */
+  private[graft] def uncacheTables(): Unit = {
+    cached.values.forEach(df => graft.Memos.free(df))
+    cached.clear()
+  }
 
   /** S1 primary scan: parquet read of a testdata table with the schema
     * given up front. Spark infers a parquet schema with a Spark job (one
@@ -152,43 +157,50 @@ object Sources {
     ()
   }
 
-  private val sizeMemo = new ConcurrentHashMap[String, java.lang.Long]()
+  /** `memo(key)`, stamped with the status — modification time and
+    * length — of the file `p` it was computed from, so a file rewritten
+    * in place is computed again. One `getFileStatus` per call.
+    */
+  private def stamped[T](memo: ConcurrentHashMap[String, ((Long, Long), T)],
+      spark: SparkSession, p: Path, key: String)(compute: => T): T = {
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val stamp = (st.getModificationTime, st.getLen)
+    memo.get(key) match {
+      case (`stamp`, v) => v
+      case _ =>
+        // computed outside any lock: two racing readers both compute
+        // the same value, and neither blocks the other tables
+        val v = compute
+        memo.put(key, (stamp, v))
+        v
+    }
+  }
 
-  /** Total on-disk bytes of a table's files, memoized per path. */
+  private val sizeMemo = new ConcurrentHashMap[String, ((Long, Long), Long)]()
+
+  /** Total on-disk bytes of a table's files, memoized per path ([[stamped]]). */
   private[graft] def tableBytes(spark: SparkSession, dir: String,
-      name: String): Long =
-    sizeMemo.computeIfAbsent(s"$dir/$name", _ => {
-      val p = new Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.getContentSummary(p).getLength
-    })
+      name: String): Long = {
+    val p = new Path(s"$dir/$name.parquet")
+    stamped(sizeMemo, spark, p, s"$dir/$name")(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength)
+  }
 
   private val schemaMemo =
-    new ConcurrentHashMap[String, (Long, Long, StructType)]()
+    new ConcurrentHashMap[String, ((Long, Long), StructType)]()
 
   /** The schema Spark infers for a table's parquet, memoized per
     * session (the inference reads the session's timestamp confs, the
-    * same key as the raw tier) and path, and stamped with the file
-    * status it was inferred from — modification time and length — so
-    * a file rewritten in place is inferred again. One `getFileStatus`
-    * per call, no Spark job on a hit.
+    * same key as the raw tier) and path; no Spark job on a hit.
     */
   private def tableSchema(spark: SparkSession, dir: String,
       name: String): StructType = {
     val p = new Path(s"$dir/$name.parquet")
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p)
-    val (mtime, len) = (st.getModificationTime, st.getLen)
-    val key = s"${graft.Sessions.sessionKey(spark, dir)}/$name"
-    schemaMemo.get(key) match {
-      case (`mtime`, `len`, schema) => schema
-      case _ =>
-        // inferred outside any lock: two racing readers both infer
-        // the same schema, and neither blocks the other tables
-        val schema = spark.read.parquet(p.toString).schema
-        schemaMemo.put(key, (mtime, len, schema))
-        schema
-    }
+    stamped(schemaMemo, spark, p,
+      s"${graft.Sessions.sessionKey(spark, dir)}/$name")(
+      spark.read.parquet(p.toString).schema)
   }
 
   /** S1/S5: CSV round-trip — write a DataFrame as header CSV (overwrite,

@@ -27,14 +27,13 @@ object Clustering {
     * fit ITERATES over this frame (one job per iteration) — without the
     * cache every iteration would re-run the feature join, the
     * reference's no-cache anti-pattern (`pre_analysis.py` passim).
-    * Memoized per (app, dir) so repeated calls (ml1 + ml2 in one
-    * Bench/Verify run) share ONE cached copy instead of leaking a new
-    * cache entry per invocation. [[graft.Pipeline]] assembles its own
-    * copy from the features frame it already holds ([[fitInput]]) and
-    * frees it when the run ends.
+    * Memoized per (app, dir) in the owning [[graft.Overlap]] scope, so
+    * repeated calls within one query share ONE cached copy instead of
+    * leaking a new cache entry per invocation. [[graft.Pipeline]]
+    * assembles its own copy from the features frame it already holds
+    * ([[fitInput]]) and frees it when the run ends.
     */
-  private val memo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
+  private val AssembledMemo = "clustering.assembled"
 
   /** Customer-table bytes on disk per fit-input partition: every
     * testdata scale (sf0.001–sf1, at most a few MB of customer parquet)
@@ -76,11 +75,10 @@ object Clustering {
     // SparkContext share its cache manager, so serving one copy
     // app-wide is safe; a STOPPED context changes applicationId, so a
     // frame can never leak across contexts
-    memo.computeIfAbsent(
-      graft.Sessions.appKey(spark, dir), _ => {
-        assembledComputeCount.incrementAndGet()
-        fitInput(spark, dir, Features.build(spark, dir))
-      })
+    graft.Overlap.memo(AssembledMemo, graft.Sessions.appKey(spark, dir)) {
+      assembledComputeCount.incrementAndGet()
+      graft.Overlap.own(fitInput(spark, dir, Features.build(spark, dir)))
+    }
 
   /** The cached, materialized fit input assembled from `features`
     * ([[Features.build]]'s frame for `dir`, cached or not). Not
@@ -121,8 +119,8 @@ object Clustering {
     * fit (~40 scheduling-bound jobs over a 150-row cached input: the
     * dominant share of ml1's 2.2 s / 61-stage samples) even though
     * the documented operator output is the LABELED frame, with the
-    * model a derived artifact. Deliberately NOT in the Memos derived
-    * tier (Bench clears that per sample, reinstating the refit); the
+    * model a derived artifact. Deliberately NOT owned by a scope
+    * (Bench opens one per sample, which would reinstate the refit); the
     * models are O(k x d) doubles. Keyed on [[graft.Sessions.appKey]]
     * (round-16 directive 1) so a foreign harness that wraps/clones the
     * session cannot defeat fit-once — identityHashCode keys did not

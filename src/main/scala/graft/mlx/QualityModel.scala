@@ -49,16 +49,18 @@ import graft.io.Sources.tableWide
   */
 object QualityModel {
 
-  private val memo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
+  /** The signals table, memoized per (app, dir) in the owning
+    * [[graft.Overlap]] scope.
+    */
+  private val SignalsMemo = "quality-model.signals"
 
   /** Fitted-model memo (round-12 directive 1): one LBFGS fit per
     * (session, dir) — `qualityModelVerified` previously fit TWICE (once
     * inside [[aucs]], once for `fitOk`) and [[benchScores]] refit on
     * every bench sample despite documenting a map-only scoring pass
     * (4.81 s driver median, most of it fit iterations). Deliberately
-    * NOT in the [[graft.Memos]] derived tier: Bench clears that tier
-    * after every sample, which would reinstate the per-sample refit;
+    * NOT owned by a [[graft.Overlap]] scope: Bench opens one per
+    * sample, which would reinstate the per-sample refit;
     * the model is O(#features) doubles — no cached plan or storage
     * blocks to release — so a plain process-lifetime map is the right
     * lifecycle (same class of fix as round 10's `pipe2_curate_main`
@@ -110,7 +112,7 @@ object QualityModel {
     // directive 2): an identity-keyed entry here meant a wrapping
     // harness recomputed the whole four-signal join per wrapper even
     // while the model memo held
-    memo.computeIfAbsent(graft.Sessions.appKey(spark, dir), _ => {
+    graft.Overlap.memo(SignalsMemo, graft.Sessions.appKey(spark, dir)) {
       signalsComputeCount.incrementAndGet()
       val ent = graft.ext.TextAnalysis.entropyFilter(spark, dir)
         .select(col("doc_id"), col("n_words"), col("entropy_q"))
@@ -127,7 +129,7 @@ object QualityModel {
           tableWide(spark, dir, "documents"))
         .select(col("doc_id"),
           (col("quality") >= 0.45).cast("int").as("label"))
-      val df = ent
+      val df = graft.Overlap.own(ent
         .join(rep, Seq("doc_id"), "left")
         .join(wrs, Seq("doc_id"), "left")
         .join(lm, Seq("doc_id"), "left")
@@ -139,17 +141,17 @@ object QualityModel {
           col("label"))
         .repartition(FitPartitions, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
-        .cache()
+        .cache())
       // NO materializing count here (round 22, §2.4), unlike
       // Clustering.assembled: the LBFGS fit that would misattribute the
       // assembly cost is PROCESS-memoized (fitCount == 1), so after the
       // first call the only consumer is the scoring/verdict action of
       // the CURRENT query — which materializes the cache in the job it
       // already runs. The count was one extra planned action on every
-      // bench sample (the derived-tier memo is cleared per sample) for
+      // bench sample (the signals memo lives for one sample) for
       // attribution the fit memo already made moot.
       df
-    })
+    }
 
   private def assemble(df: DataFrame): DataFrame =
     new VectorAssembler()

@@ -84,7 +84,7 @@ object Scale {
     */
   def skewReport(df: DataFrame, key: String, topK: Int = 5): DataFrame = {
     val counts =
-      graft.Memos.track(df.groupBy(col(key)).agg(count(lit(1)).as("n")).cache())
+      graft.Overlap.own(df.groupBy(col(key)).agg(count(lit(1)).as("n")).cache())
     val total = counts.agg(sum(col("n"))).head().getLong(0)
     val stats = counts.agg(
       count(lit(1)).as("n_keys"),
@@ -107,9 +107,7 @@ object Scale {
     // counts stays cached: the returned plan's stats and top-k branches
     // both read it when the report actually executes (an unpersist here,
     // at construction time, would force two fresh scans of the fact
-    // table). Lifecycle: Memos.track registers it as a derived frame, so
-    // Bench/Verify release it after the query; library callers can
-    // Memos.clearDerived() or let LRU eviction handle it.
+    // table). Its owner (graft.Overlap) frees it when the query ends.
   }
 
   def skewReportQ(spark: SparkSession, dir: String): DataFrame =

@@ -10,8 +10,8 @@ import org.apache.spark.SparkException
 
 /** Library-embedding hardening: a resident engine serves many queries
   * from ONE SparkSession concurrently, while Bench/Verify drive it
-  * strictly sequentially — so the session-shared state (raw/derived
-  * [[Memos]] tiers with their computeIfAbsent + cache calls, temp
+  * strictly sequentially — so the session-shared state (the raw tier
+  * and the scope-owned memos with their computeIfAbsent + cache calls, temp
   * function registration, broadcast thresholds) is otherwise never
   * exercised under contention. Round 8 already burned one such hazard
   * (connectedComponents mutating session shuffle partitions); this

@@ -215,4 +215,16 @@ class CurateSpec extends SparkSuite {
       .collect().map(_.toString).sorted
     assert(first.sameElements(second), "curation run is not reproducible")
   }
+
+  test("a run on a fresh input dir leaves no persisted RDD behind") {
+    // a dir no earlier run or memo has seen: a copy of the sf0.001 tables
+    val in = java.nio.file.Files.createTempDirectory("graft_curate_fresh")
+    new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath, in.resolve(f.getName)))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Curate.run(spark, in.toString, s"$out/fresh")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty,
+      s"Curate.run left ${leaked.size} persisted RDDs behind")
+  }
 }

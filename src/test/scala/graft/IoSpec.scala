@@ -163,10 +163,14 @@ class IoSpec extends SparkSuite {
     val dir = io.Sources.tmpDir("schema_rewrite")
     writeTableFile(Seq((1L, "a")).toDF("id", "t"), dir, "t")
     assert(io.Sources.table(spark, dir, "t").columns.toSeq == Seq("id", "t"))
+    val bytes = io.Sources.tableBytes(spark, dir, "t")
     writeTableFile(Seq((2L, 2.5, "b")).toDF("id", "x", "t"), dir, "t")
     val back = io.Sources.table(spark, dir, "t")
     assert(back.columns.toSeq == Seq("id", "x", "t"))
     assert(back.collect().toSeq == Seq(Row(2L, 2.5, "b")))
+    val file = new java.io.File(s"$dir/t.parquet").length
+    assert(file != bytes && io.Sources.tableBytes(spark, dir, "t") == file,
+      "tableBytes kept the size of the file before the rewrite")
   }
 
   test("table() infers a file's schema once; evictTable forgets it") {

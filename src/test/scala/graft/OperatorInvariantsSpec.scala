@@ -681,20 +681,26 @@ class OperatorInvariantsSpec extends SparkSuite {
     // it creates several label-table generations. The round-22 release
     // discipline unpersists each superseded round's checkpointed RDD
     // right after the probe saves its successor — only the FINAL label
-    // table may remain persisted when the loop returns (e and sym are
-    // released in the finally). Relies on suites running sequentially
+    // table stays persisted when the loop returns (e and sym are freed
+    // when the loop's own scope exits), and the caller's scope frees
+    // that one when it closes. Relies on suites running sequentially
     // in the forked test JVM (no testForkedParallel), so no other
     // suite mutates the context's persistent-RDD map mid-test.
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
       .toDF("a", "b")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val comp = ext.Graph.connectedComponents(edges, "a", "b")
-    comp.write.format("noop").mode("overwrite").save()
+    val inScope = Overlap(spark) { _ =>
+      val comp = ext.Graph.connectedComponents(edges, "a", "b")
+      comp.write.format("noop").mode("overwrite").save()
+      spark.sparkContext.getPersistentRDDs.keySet -- before
+    }
+    assert(inScope.size == 1,
+      s"${inScope.size} persistent RDDs survive the CC loop inside the " +
+        "scope — superseded label rounds must be released eagerly, and " +
+        "the final one must outlive the loop for the caller to read")
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1,
-      s"${leaked.size} persistent RDDs survive the CC loop — superseded " +
-        "label rounds must be released eagerly, not left to the " +
-        "ContextCleaner")
+    assert(leaked.isEmpty,
+      s"${leaked.size} persistent RDDs survive the caller's scope")
   }
 
   test("connected components: a failed loop releases its label tables") {

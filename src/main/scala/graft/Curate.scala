@@ -229,9 +229,9 @@ object Curate {
       }
 
       // 1. the production exact-then-fuzzy curation stack, forked so
-      // its eager setup (the connected-components loop's edge
-      // materialization and label rounds) overlaps the forecast pilot
-      // below — the two read only raw inputs, so the forecast still
+      // its eager setup (the MinHash pair materialization and the
+      // connected-components fold of those pairs) overlaps the forecast
+      // pilot below — the two read only raw inputs, so the forecast still
       // owes nothing to the pipeline's outputs. The survivor set feeds
       // BOTH the shard-packing projection below and the final corpus
       // join — persisted once (released with the scope) or the entire

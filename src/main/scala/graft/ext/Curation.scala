@@ -198,7 +198,9 @@ object Curation {
     // are the minority), so both the survivor restriction (semi-joins
     // on a projected id column) and the final drop (size-gated
     // broadcast anti-join) never move the text; connectedComponents
-    // sizes its own shuffle width to the edge count.
+    // folds a pair list this small on the driver in one job and
+    // returns the clusters as a local frame (above its edge cap, the
+    // distributed loop sizes its own shuffle width to the edge count).
     val deduped = nearDupPairs.fold(dedupedExact) { rawPairs =>
       val pairs = withinIds(rawPairs, dedupedExact.select(col("doc_id")))
       val drop = Graph.connectedComponents(pairs, "doc_a", "doc_b")

@@ -1,7 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
 
 import graft.Q
 
@@ -15,13 +19,32 @@ import graft.Q
   */
 object Graph {
 
-  /** Connected components by minimum-label propagation.
+  /** Connected components.
     *
     * Input: an undirected edge list (two id columns). Output: one row
     * per vertex — (id, group_id) where `group_id` is the smallest vertex
-    * id in the component (deterministic, stable under any partitioning).
+    * id in the component (deterministic, stable under any partitioning
+    * and any edge order); both columns keep the input ids' data type.
     *
-    * Scale shape: the edge list is symmetrized, hash-partitioned on
+    * Two paths, one result. The edge list is projected and persisted,
+    * and ONE job reads at most [[DriverMaxEdges]] + 1 edges of it back:
+    *
+    *  - Small graph (at most [[DriverMaxEdges]] edges, integral ids, no
+    *    null endpoint): one union-find on the driver folds the edges
+    *    and the components come back as a local frame, with no further
+    *    Spark job. Near-dup pair graphs are this case: a curate run's
+    *    MinHash graph is ~530 edges over ~1k documents, and the loop
+    *    below spent 16 jobs and ~1.9 s of mostly idle driver time on
+    *    it. Memory bound: the driver holds the collected edges as
+    *    packed longs (16 bytes an edge), a vertex index and the result
+    *    rows for at most 2 x cap vertices, tens of MB at the cap (under
+    *    64 MB), well inside a 2 GB driver heap. Each task of the read
+    *    job returns at most cap + 1 edges and the driver drops them once
+    *    the running total passes the cap, so an over-cap graph stays
+    *    within the same bound before it falls back.
+    *  - Otherwise: distributed minimum-label propagation.
+    *
+    * Loop scale shape: the edge list is symmetrized, hash-partitioned on
     * `src` ONCE and persisted; every round reuses that layout for the
     * propagate join, so each round costs one shuffle of the (much
     * smaller) label table — the edges never move again. Labels only
@@ -29,136 +52,234 @@ object Graph {
     * serves as the O(1)-per-round convergence probe (no old-vs-new
     * join).
     *
-    * Rounds needed = component diameter; near-dup graphs are dense
-    * little clumps (measured round-21 at sf0.1: 5 rounds for the
-    * cosine near-dup graph, 2 for the curation MinHash graph), so this
-    * beats the O(log n)-round large-star/small-star alternating scheme
-    * (Kiveris et al., "Connected Components in MapReduce") in practice
-    * — a pointer-jumping variant was A/B'd in round 21 and LOST (the
-    * extra label-sized self-join per round cost more than the zero
-    * rounds it saved on these shallow graphs). What the round-21
-    * profile did show is that the loop's cost is DRIVER-side per-round
-    * overhead, not executor work: every job in the loop runs 10-70 ms,
-    * but each round paid for two separately planned actions
-    * (localCheckpoint, then the convergence probe). So each round now
-    * issues ONE action: the new label table is LAZILY
-    * localCheckpoint'ed and the `sum(label)` probe materializes it —
-    * the probe IS the materializing action, and the checkpoint still
-    * truncates lineage every round (a 50-round unpruned plan would
-    * choke Catalyst long before the cluster). Data never visits the
-    * driver.
+    * Rounds needed = component diameter + 1 at most (the last round
+    * sees no change). The catalog's graphs (the cosine near-dup graph,
+    * 5 rounds in round 21, and the curation MinHash graph, 2) are far
+    * under the cap and now take the driver path; the loop serves
+    * graphs above it. A pointer-jumping variant was A/B'd in round 21
+    * and LOST to plain propagation on shallow dup graphs (the extra
+    * label-sized self-join per round cost more than the rounds it
+    * saved); the O(log n)-round large-star/small-star scheme (Kiveris
+    * et al., "Connected Components in MapReduce") pays off only on
+    * deep graphs. The loop's cost is driver-side per-round overhead,
+    * not executor work, so each round issues ONE action: the new label
+    * table is LAZILY localCheckpoint'ed and the `sum(label)` probe
+    * materializes it — the probe IS the materializing action, and the
+    * checkpoint still truncates lineage every round (a 50-round
+    * unpruned plan would choke Catalyst long before the cluster). On
+    * this path no edge or label visits the driver.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 50): DataFrame = {
+      maxIter: Int = 50): DataFrame =
+    connectedComponentsCapped(edges, srcCol, dstCol, maxIter, DriverMaxEdges)
+
+  /** Edge-count cap of [[connectedComponents]]' driver union-find (see
+    * its scaladoc for the memory bound).
+    */
+  val DriverMaxEdges: Int = 100000
+
+  /** [[connectedComponents]] with the driver path's edge cap explicit:
+    * 0 always runs the distributed loop.
+    */
+  private[graft] def connectedComponentsCapped(edges: DataFrame,
+      srcCol: String, dstCol: String, maxIter: Int,
+      driverMaxEdges: Int): DataFrame = {
     val spark = edges.sparkSession
+    // The work runs in its own scope: the scope frees the loop's
+    // symmetrized edges and every label generation on every exit, and
+    // the loop's final generation — the frame the scope returns —
+    // passes to the caller's owner ([[graft.Overlap]]), which frees it
+    // when the caller's query or run ends. The driver path's local
+    // frame holds no storage blocks.
+    val labels = graft.Overlap(spark) { s =>
+      // persist the projected edge list FIRST: the driver read, the
+      // sizing count, and both union branches of the symmetrization
+      // below, read it — unpersisted, the upstream pair join (the most
+      // expensive stage of any near-dup pipeline) would run again for
+      // each (round-3 bench: x_dup_groups 10.8 s / x_semantic_dedup
+      // 15.6 s, dominated by exactly that recompute). Like any
+      // operator's intermediate it belongs to the caller's owner; the
+      // loop frees it early, once its last consumer has read it.
+      val e = graft.Overlap.own(edges.select(col(srcCol).as("src"),
+        col(dstCol).as("dst")).persist())
+      driverComponents(e, driverMaxEdges)
+        .getOrElse(labelLoop(s, e, maxIter))
+    }
+    labels.select(col("id"), col("label").as("group_id"))
+  }
+
+  /** The driver path of [[connectedComponents]]: `(id, label)` of every
+    * vertex of `e` (`src`, `dst`) from one union-find, or None when `e`
+    * has more than `cap` edges, a null endpoint or non-integral ids.
+    * One Spark job: each task returns at most `cap` + 1 of its edges
+    * as packed longs, and the driver keeps them only while the running
+    * total stays within `cap`.
+    */
+  private def driverComponents(e: DataFrame, cap: Int): Option[DataFrame] = {
+    val idType = e.schema("src").dataType
+    val integral = idType == e.schema("dst").dataType &&
+      (idType == IntegerType || idType == LongType)
+    if (cap <= 0 || !integral) return None
+    val kept = new java.util.ArrayList[Array[Long]]()
+    var total = 0L
+    var small = true
+    // a task that meets a null endpoint returns null: null ids take the
+    // loop path, which defines their semantics
+    e.sparkSession.sparkContext.runJob(e.rdd, (it: Iterator[Row]) => {
+      val out = Array.newBuilder[Long]
+      var n = 0
+      var nulls = false
+      while (n <= cap && it.hasNext && !nulls) {
+        val r = it.next()
+        if (r.isNullAt(0) || r.isNullAt(1)) nulls = true
+        else {
+          out += r.get(0).asInstanceOf[Number].longValue
+          out += r.get(1).asInstanceOf[Number].longValue
+          n += 1
+        }
+      }
+      if (nulls) null else out.result()
+    }, (_: Int, pairs: Array[Long]) =>
+      if (pairs == null) small = false
+      else if (small) {
+        total += pairs.length / 2
+        if (total > cap) { small = false; kept.clear() }
+        else kept.add(pairs)
+      }: Unit)
+    if (!small) return None
+    // union-find over dense vertex indices: the root of a component is
+    // its minimum id, so every vertex's label is its root's id
+    val index = new scala.collection.mutable.LongMap[Int]()
+    val ids = Array.newBuilder[Long]
+    def vertex(id: Long): Int = index.getOrElseUpdate(id, {
+      ids += id; index.size })
+    val edgeIdx = kept.asScala.iterator.flatMap(_.iterator).map(vertex)
+      .toArray
+    val idOf = ids.result()
+    val parent = Array.tabulate(idOf.length)(identity)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var i = 0
+    while (i < edgeIdx.length) {
+      val (ra, rb) = (find(edgeIdx(i)), find(edgeIdx(i + 1)))
+      if (ra != rb)
+        if (idOf(ra) < idOf(rb)) parent(rb) = ra else parent(ra) = rb
+      i += 2
+    }
+    val asId: Long => Any =
+      if (idType == IntegerType) _.toInt else identity
+    val rows = idOf.indices.sortBy(idOf).map(v =>
+      Row(asId(idOf(v)), asId(idOf(find(v)))))
+    // nullable exactly where the loop's columns are
+    val nullable = e.schema("src").nullable || e.schema("dst").nullable
+    Some(e.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("id", idType, nullable),
+      StructField("label", idType, nullable)))))
+  }
+
+  /** The distributed path of [[connectedComponents]]: minimum-label
+    * propagation over the persisted edge list `e` (`src`, `dst`),
+    * returning the final `(id, label)` generation (held by `s`'s
+    * caller's owner once `s` returns it).
+    */
+  private def labelLoop(s: graft.Overlap, e: DataFrame,
+      maxIter: Int): DataFrame = {
     // iteration stages shuffle tables of |V| / |E| rows many times —
     // size their partition count to the DATA, not the session default
     // (a 1k-vertex dup graph should not pay 32 tasks x stages x rounds
-    // of scheduling overhead; a 10^10-edge graph still gets full width).
-    // The sizing is applied with EXPLICIT repartition calls below, never
-    // by mutating the session's shuffle-partition conf: a session-conf
-    // write, even set/finally-restored, leaks the narrowed width into
-    // any query another thread plans on the same session mid-loop.
-    val sessionParts =
-      spark.conf.get("spark.sql.shuffle.partitions").toLong // read-only cap
-    // The loop runs in its own scope: the scope frees the edge list,
-    // its symmetrization and every label generation on every exit, and
-    // the final generation — the frame the scope returns — passes to
-    // the caller's owner ([[graft.Overlap]]), which frees it when the
-    // caller's query or run ends.
-    val finalLabels = graft.Overlap(spark) { s =>
-      // persist the projected edge list FIRST: the sizing count, and
-      // both union branches of the symmetrization below, read it —
-      // unpersisted, the upstream pair join (the most expensive stage
-      // of any near-dup pipeline) would run three times before the
-      // loop even starts (round-3 bench: x_dup_groups 10.8 s /
-      // x_semantic_dedup 15.6 s, dominated by exactly that recompute)
-      val e = s.release(edges.select(col(srcCol).as("src"),
-        col(dstCol).as("dst")).persist())
-      val nEdges = e.count()
-      val parts =
-        math.max(1L, math.min(sessionParts, nEdges / 50000 + 1)).toInt
-      // symmetrize then dedup in ONE explicit exchange: hash(src, parts)
-      // already co-locates equal (src, dst) pairs, so the dropDuplicates
-      // aggregate rides that layout shuffle-free, and the persisted
-      // result keeps exactly the width + key every round's join needs
-      val sym = s.release(e
-        .union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(parts, col("src"))
-        .dropDuplicates("src", "dst")
-        .persist())
-      // same one-exchange idiom for the initial label table: explicit
-      // hash(id, parts) so the per-round left join is co-partitioned
-      // with `pushed` from round 1 (localCheckpoint preserves the
-      // physical partitioning into the checkpointed LogicalRDD)
-      var labels = s.release(sym.select(col("src").as("id"))
-        .repartition(parts, col("id"))
-        .dropDuplicates("id")
-        .withColumn("label", col("id"))
-        .localCheckpoint())
-      // labels' eager checkpoint just materialized sym's cache; the raw
-      // edge list has served all three consumers — release it
-      e.unpersist(blocking = false)
-      // coalesce: sum over an EMPTY vertex set is null (no edges in —
-      // the loop then converges in the second probe and returns zero
-      // rows)
-      def labelSum(df: DataFrame): Long =
-        df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
-      // No initial probe: with a non-empty edge set, round 1 always
-      // changes a label (the larger endpoint of any edge decreases),
-      // so comparing round 1 against the initial sum never converges —
-      // the sentinel None spends nothing and keeps the empty-input
-      // case terminating (round 2 sees the same 0 sum and stops).
-      var prevSum = Option.empty[Long]
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        // explicit hash(dst, parts) exchange instead of letting the
-        // aggregate shuffle at session width: keeps the whole loop
-        // co-partitioned at `parts` with zero session-conf writes. The
-        // trade is losing the aggregate's map-side combine on this one
-        // exchange — negligible here because near-dup graphs have tiny
-        // average degree (|E_sym| is a small multiple of |V|), and the
-        // downstream left join then elides BOTH its exchanges
-        val pushed = sym.join(labels.withColumnRenamed("id", "src"), "src")
-          .select(col("dst"), col("label"))
-          .repartition(parts, col("dst"))
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("label")).as("neighbor_min"))
-        // LAZY local checkpoint: the convergence probe below is the
-        // round's ONE action — it materializes the checkpointed RDD
-        // (truncating lineage exactly like the eager form) and computes
-        // the sum in the same job. The eager checkpoint-then-probe pair
-        // cost two planned actions per round (round-21 profile: the
-        // loop spent ~2x its executor time in driver-side planning).
-        // No CacheManager entry is involved (an A/B with persist()-
-        // backed rounds lost badly: every in-loop unpersist triggered a
-        // non-cascading recache replan of the dependent entries — 23 s
-        // vs 2 s for the whole query), but the superseded round's
-        // checkpoint BLOCKS are released explicitly below rather than
-        // at scope exit: once round k's RDD is saved by the probe,
-        // round k-1's blocks can never be read again (k's lineage is
-        // truncated at its own blocks), and a deep loop near maxIter
-        // would otherwise hold every generation of the label table in
-        // storage until the loop ends (round-21 verdict memory-safety
-        // item).
-        val prev = labels
-        labels = s.release(labels.join(pushed, Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("neighbor_min"), col("label")))
-              .as("label"))
-          .localCheckpoint(false))
-        val total = labelSum(labels) // materializes the checkpoint
-        graft.Memos.free(prev)
-        converged = prevSum.contains(total)
-        prevSum = Some(total)
-        iter += 1
-      }
-      require(converged,
-        s"connectedComponents did not converge in $maxIter rounds")
-      labels
+    // of scheduling overhead; a 10^10-edge graph still gets full
+    // width). The sizing is applied with EXPLICIT repartition calls
+    // below, never by mutating the session's shuffle-partition conf: a
+    // session-conf write, even set/finally-restored, leaks the
+    // narrowed width into any query another thread plans on the same
+    // session mid-loop.
+    val sessionParts = e.sparkSession.conf
+      .get("spark.sql.shuffle.partitions").toLong // read-only cap
+    val nEdges = e.count()
+    val parts =
+      math.max(1L, math.min(sessionParts, nEdges / 50000 + 1)).toInt
+    // symmetrize then dedup in ONE explicit exchange: hash(src, parts)
+    // already co-locates equal (src, dst) pairs, so the dropDuplicates
+    // aggregate rides that layout shuffle-free, and the persisted
+    // result keeps exactly the width + key every round's join needs
+    val sym = s.release(e
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(parts, col("src"))
+      .dropDuplicates("src", "dst")
+      .persist())
+    // same one-exchange idiom for the initial label table: explicit
+    // hash(id, parts) so the per-round left join is co-partitioned
+    // with `pushed` from round 1 (localCheckpoint preserves the
+    // physical partitioning into the checkpointed LogicalRDD)
+    var labels = s.release(sym.select(col("src").as("id"))
+      .repartition(parts, col("id"))
+      .dropDuplicates("id")
+      .withColumn("label", col("id"))
+      .localCheckpoint())
+    // labels' eager checkpoint just materialized sym's cache; the raw
+    // edge list has served all three consumers — release it
+    e.unpersist(blocking = false)
+    // coalesce: sum over an EMPTY vertex set is null (no edges in —
+    // the loop then converges in the second probe and returns zero
+    // rows)
+    def labelSum(df: DataFrame): Long =
+      df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
+    // No initial probe: with a non-empty edge set, round 1 always
+    // changes a label (the larger endpoint of any edge decreases),
+    // so comparing round 1 against the initial sum never converges —
+    // the sentinel None spends nothing and keeps the empty-input
+    // case terminating (round 2 sees the same 0 sum and stops).
+    var prevSum = Option.empty[Long]
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      // explicit hash(dst, parts) exchange instead of letting the
+      // aggregate shuffle at session width: keeps the whole loop
+      // co-partitioned at `parts` with zero session-conf writes. The
+      // trade is losing the aggregate's map-side combine on this one
+      // exchange — negligible here because near-dup graphs have tiny
+      // average degree (|E_sym| is a small multiple of |V|), and the
+      // downstream left join then elides BOTH its exchanges
+      val pushed = sym.join(labels.withColumnRenamed("id", "src"), "src")
+        .select(col("dst"), col("label"))
+        .repartition(parts, col("dst"))
+        .groupBy(col("dst").as("id"))
+        .agg(min(col("label")).as("neighbor_min"))
+      // LAZY local checkpoint: the convergence probe below is the
+      // round's ONE action — it materializes the checkpointed RDD
+      // (truncating lineage exactly like the eager form) and computes
+      // the sum in the same job. The eager checkpoint-then-probe pair
+      // cost two planned actions per round (round-21 profile: the
+      // loop spent ~2x its executor time in driver-side planning).
+      // No CacheManager entry is involved (an A/B with persist()-
+      // backed rounds lost badly: every in-loop unpersist triggered a
+      // non-cascading recache replan of the dependent entries — 23 s
+      // vs 2 s for the whole query), but the superseded round's
+      // checkpoint BLOCKS are released explicitly below rather than
+      // at scope exit: once round k's RDD is saved by the probe,
+      // round k-1's blocks can never be read again (k's lineage is
+      // truncated at its own blocks), and a deep loop near maxIter
+      // would otherwise hold every generation of the label table in
+      // storage until the loop ends (round-21 verdict memory-safety
+      // item).
+      val prev = labels
+      labels = s.release(labels.join(pushed, Seq("id"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("neighbor_min"), col("label")))
+            .as("label"))
+        .localCheckpoint(false))
+      val total = labelSum(labels) // materializes the checkpoint
+      graft.Memos.free(prev)
+      converged = prevSum.contains(total)
+      prevSum = Some(total)
+      iter += 1
     }
-    finalLabels.select(col("id"), col("label").as("group_id"))
+    require(converged,
+      s"connectedComponents did not converge in $maxIter rounds")
+    labels
   }
 
   /** Registered query: semantic-dedup groups — fold the embedding-cosine

@@ -615,9 +615,11 @@ object TextAnalysis {
     * keys, so every exchange below carries (doc_id, uh, ph) longs — the
     * corpus text never shuffles (plan-asserted). The model tables
     * (pair / history counts) are map-side-combined aggregations on
-    * those 8-byte keys and join back by SHUFFLE, not broadcast — a
-    * web-scale bigram vocabulary outgrows any driver (same posture as
-    * x_tfidf's df join; AQE still broadcasts when genuinely small).
+    * those 8-byte keys; the pair counts broadcast back only under the
+    * size gate ([[Curation.gatedBroadcastWith]]) and otherwise join by
+    * SHUFFLE — a web-scale bigram vocabulary outgrows any driver (same
+    * posture as x_tfidf's df join; AQE still broadcasts when genuinely
+    * small).
     * Counts keyed by the 61-bit hash merge on collision (~n²/2⁶² odds —
     * the md5 fingerprint-dedup tradeoff); the oracle joins the exact
     * strings, which also certifies the collision-free regime.
@@ -640,7 +642,14 @@ object TextAnalysis {
       .persist())
     val pairN = occ.groupBy(col("ph")).agg(count(lit(1)).as("n_pair"))
     val histN = occ.groupBy(col("uh")).agg(count(lit(1)).as("n_hist"))
-    occ.join(pairN, Seq("ph")).join(histN, Seq("uh"))
+    // the pair-count side is the build side while its estimate is under
+    // the curation broadcast cap (one cap for the engine's small-side
+    // broadcasts): unhinted, AQE builds on whichever side's stage
+    // finishes first, often the larger occurrence table
+    occ.join(Curation.gatedBroadcastWith(spark, pairN,
+        Curation.RemovalBroadcastMaxBytesKey,
+        Curation.RemovalBroadcastMaxBytes), Seq("ph"))
+      .join(histN, Seq("uh"))
       .withColumn("qlp",
         length(bin(col("n_pair"))) - length(bin(col("n_hist"))))
       .groupBy(col("doc_id"))

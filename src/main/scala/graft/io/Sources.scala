@@ -157,27 +157,32 @@ object Sources {
     ()
   }
 
+  /** A value computed at most once, on first read; concurrent first
+    * readers wait for it. A failed compute is retried by the next read.
+    */
+  private final class Once[T](compute: => T) { lazy val value: T = compute }
+
+  private type Stamped[T] = ConcurrentHashMap[String, ((Long, Long), Once[T])]
+
   /** `memo(key)`, stamped with the status — modification time and
     * length — of the file `p` it was computed from, so a file rewritten
     * in place is computed again. One `getFileStatus` per call.
+    * Single-flight: readers racing on one key and stamp share ONE
+    * compute (three branches of a run opening the same fresh table
+    * start one schema-inference job, not three); the map is locked only
+    * to swap the entry, so the compute never blocks other keys.
     */
-  private def stamped[T](memo: ConcurrentHashMap[String, ((Long, Long), T)],
-      spark: SparkSession, p: Path, key: String)(compute: => T): T = {
+  private def stamped[T](memo: Stamped[T], spark: SparkSession, p: Path,
+      key: String)(compute: => T): T = {
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(p)
     val stamp = (st.getModificationTime, st.getLen)
-    memo.get(key) match {
-      case (`stamp`, v) => v
-      case _ =>
-        // computed outside any lock: two racing readers both compute
-        // the same value, and neither blocks the other tables
-        val v = compute
-        memo.put(key, (stamp, v))
-        v
-    }
+    memo.compute(key, (_, old) =>
+      if (old != null && old._1 == stamp) old else (stamp, new Once(compute))
+    )._2.value
   }
 
-  private val sizeMemo = new ConcurrentHashMap[String, ((Long, Long), Long)]()
+  private val sizeMemo: Stamped[Long] = new ConcurrentHashMap()
 
   /** Total on-disk bytes of a table's files, memoized per path ([[stamped]]). */
   private[graft] def tableBytes(spark: SparkSession, dir: String,
@@ -188,8 +193,7 @@ object Sources {
         .getContentSummary(p).getLength)
   }
 
-  private val schemaMemo =
-    new ConcurrentHashMap[String, ((Long, Long), StructType)]()
+  private val schemaMemo: Stamped[StructType] = new ConcurrentHashMap()
 
   /** The schema Spark infers for a table's parquet, memoized per
     * session (the inference reads the session's timestamp confs, the

@@ -184,6 +184,30 @@ class IoSpec extends SparkSuite {
       "a read after evictTable did not infer the schema again")
   }
 
+  test("table() infers a fresh file's schema once for concurrent readers") {
+    val dir = io.Sources.tmpDir("schema_single_flight")
+    writeTableFile(Seq((1L, "a")).toDF("id", "t"), dir, "t")
+    val threads = 4
+    val ready = new java.util.concurrent.CountDownLatch(threads)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val jobs = jobsDuring {
+      val ts = (1 to threads).map { _ =>
+        val t = new Thread(() =>
+          try { ready.countDown(); go.await(); io.Sources.table(spark, dir, "t") }
+          catch { case e: Throwable => failures.add(e) })
+        t.start()
+        t
+      }
+      ready.await()
+      go.countDown()
+      ts.foreach(_.join())
+    }
+    assert(failures.isEmpty, s"a reader failed: ${failures.peek()}")
+    assert(jobs == 1,
+      s"$threads concurrent first reads started $jobs schema-inference jobs")
+  }
+
   test("a second Features.build on one dir starts no Spark job") {
     feature.Features.build(spark, sf)
     assert(jobsDuring(feature.Features.build(spark, sf)) == 0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Invariant checks for the non-oracled operators (ML, LSH, ANN, HLL,
@@ -673,6 +674,9 @@ class OperatorInvariantsSpec extends SparkSuite {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(ext.Graph.connectedComponents(empty, "a", "b").count() == 0L)
+    // and on the distributed loop (cap 0)
+    assert(ext.Graph.connectedComponentsCapped(empty, "a", "b", 50, 0)
+      .count() == 0L)
   }
 
   test("connected components: superseded round checkpoints are released") {
@@ -690,7 +694,9 @@ class OperatorInvariantsSpec extends SparkSuite {
       .toDF("a", "b")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val inScope = Overlap(spark) { _ =>
-      val comp = ext.Graph.connectedComponents(edges, "a", "b")
+      // cap 0: the distributed loop, whatever the graph's size
+      val comp = ext.Graph.connectedComponentsCapped(edges, "a", "b",
+        maxIter = 50, driverMaxEdges = 0)
       comp.write.format("noop").mode("overwrite").save()
       spark.sparkContext.getPersistentRDDs.keySet -- before
     }
@@ -706,17 +712,93 @@ class OperatorInvariantsSpec extends SparkSuite {
   test("connected components: a failed loop releases its label tables") {
     import spark.implicits._
     // maxIter = 1 cannot converge on a diameter-5 chain, so the loop
-    // exits through its require — every checkpoint generation it made
-    // must be released on that path too, not left to the ContextCleaner
+    // (cap 0: the driver union-find would fold the chain at once) exits
+    // through its require — every checkpoint generation it made must be
+    // released on that path too, not left to the ContextCleaner
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
       .toDF("a", "b")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalArgumentException] {
-      ext.Graph.connectedComponents(edges, "a", "b", maxIter = 1)
+      ext.Graph.connectedComponentsCapped(edges, "a", "b", maxIter = 1,
+        driverMaxEdges = 0)
     }
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
       s"a non-converging CC loop left ${leaked.size} persistent RDDs behind")
+  }
+
+  /** `(id, group_id)` of [[ext.Graph.connectedComponentsCapped]] with
+    * the driver path's cap at `cap` (0 runs the distributed loop).
+    */
+  private def components(edges: DataFrame, cap: Int): Map[Any, Any] =
+    ext.Graph.connectedComponentsCapped(edges, "a", "b", 50, cap)
+      .collect().map(r => r.get(0) -> r.get(1)).toMap
+
+  test("connected components: driver union-find == loop on a long chain, " +
+      "duplicate and reversed edges") {
+    import spark.implicits._
+    // chain 0-1-...-39 listed from the far end (every union links two
+    // multi-vertex trees), each edge also reversed and repeated, plus
+    // a self-loop and a separate pair
+    val chain = (1L until 40L).reverse.map(i => (i, i - 1L))
+    val edges = (chain ++ chain.map(_.swap) ++ chain.take(5) ++
+      Seq((7L, 7L), (100L, 90L), (90L, 100L))).toDF("a", "b")
+    val driver = components(edges, ext.Graph.DriverMaxEdges)
+    assert(driver == components(edges, 0))
+    assert(driver == ((0L until 40L).map(i => (i: Any) -> (0L: Any)) ++
+      Seq((90L: Any) -> (90L: Any), (100L: Any) -> (90L: Any))).toMap)
+  }
+
+  test("connected components: int ids give int columns on both paths") {
+    import spark.implicits._
+    val edges = Seq((3, 1), (3, 2), (9, 8)).toDF("a", "b")
+    Seq(ext.Graph.DriverMaxEdges, 0).foreach { cap =>
+      val comp = ext.Graph.connectedComponentsCapped(edges, "a", "b", 50, cap)
+      assert(comp.schema.map(_.dataType) ==
+        Seq(org.apache.spark.sql.types.IntegerType,
+          org.apache.spark.sql.types.IntegerType), s"cap $cap")
+      assert(comp.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+        Map(1 -> 1, 2 -> 1, 3 -> 1, 8 -> 8, 9 -> 8), s"cap $cap")
+    }
+  }
+
+  test("connected components: a small graph costs one job on its edge list") {
+    import spark.implicits._
+    // four cached partitions: a take-style read would scan them in
+    // more than one job
+    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+      .toDF("a", "b").repartition(4).persist()
+    try {
+      edges.count()
+      val sc = spark.sparkContext
+      val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.add(String.valueOf(
+            j.properties.getProperty("spark.job.description")))
+      }
+      val marker = s"cc marker ${System.nanoTime()}"
+      sc.addSparkListener(listener)
+      val comp = try {
+        val rows = ext.Graph.connectedComponents(edges, "a", "b").collect()
+        // the bus delivers job starts in submission order: once the
+        // marker's has arrived, every job above has been counted
+        sc.setJobDescription(marker)
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setJobDescription(null)
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!started.contains(marker) && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(started.contains(marker), "marker job start never delivered")
+        rows
+      } finally sc.removeSparkListener(listener)
+      assert(started.size - 1 <= 1,
+        s"${started.size - 1} jobs ran for a 5-edge graph on the driver path")
+      assert(comp.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+          10L -> 10L, 11L -> 10L))
+    } finally edges.unpersist()
   }
 
   test("ann probe-many: bench formulation rows match the union's batch 4") {

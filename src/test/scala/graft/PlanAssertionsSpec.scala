@@ -1,10 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Structural assertions on the INITIAL physical plans of the headline
@@ -216,6 +221,38 @@ class PlanAssertionsSpec extends SparkSuite {
         Seq("text", "words", "w1", "pr", "s").contains(a.name)),
         s"a shuffle carries token strings:\n$p")
     }
+  }
+
+  test("bigram LM score: the pair counts are the build side, run after run") {
+    // x_quality_model reaches the occurrence ⋈ pair-count join through
+    // its cached signals frame, which the fit's scoring executes: walk
+    // the executed plan, into cached and adaptive sub-plans, to that
+    // join. Each run owns (and rebuilds) its signals in its own scope.
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case _ => p.children.flatMap(walk)
+    })
+    val pairSides = (1 to 3).map { _ =>
+      Overlap(spark) { _ =>
+        val df = SparkEntry.queries("x_quality_model")(spark, sf)
+        // the join on the pair hash `ph`: true when it broadcasts the
+        // pair-count side
+        def onPair(j: BaseJoinExec) =
+          (j.leftKeys ++ j.rightKeys).flatMap(_.references)
+            .exists(_.name == "ph")
+        walk(df.queryExecution.executedPlan).collect {
+          case j: BroadcastHashJoinExec if onPair(j) =>
+            val build = if (j.buildSide == BuildRight) j.right else j.left
+            build.output.exists(_.name == "n_pair")
+          case j: BaseJoinExec if onPair(j) => false
+        }
+      }
+    }
+    assert(pairSides.forall(sides => sides.nonEmpty && sides.forall(identity)),
+      s"pair-count side broadcast per run: $pairSides")
   }
 
   test("mixture plan: plan table broadcasts, no document text in exchanges") {

@@ -139,8 +139,16 @@ class PropertySpec extends SparkSuite {
     b <- Gen.choose(0L, 25L) if a != b
   } yield (a, b))
 
+  // sparse graphs over a wider id range: components of many sizes and
+  // depths, self-loops, repeated and reversed edges
+  private val sparseEdgeGen = Gen.listOfN(60, for {
+    a <- Gen.choose(0L, 90L)
+    b <- Gen.choose(0L, 90L)
+  } yield (a, b)).map(es => es ++ es.take(10).map(_.swap) ++ es.take(5))
+
   test("connected components == brute-force union-find on random graphs") {
-    samples(edgeGen, 5).filter(_.nonEmpty).foreach { edges =>
+    (samples(edgeGen, 5) ++ samples(sparseEdgeGen, 3)).filter(_.nonEmpty)
+        .foreach { edges =>
       // reference: sequential union-find with path compression
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -156,10 +164,14 @@ class PropertySpec extends SparkSuite {
       val expected = verts
         .groupBy(find).flatMap { case (_, vs) =>
           val m = vs.min; vs.map(_ -> m) }.toMap
-      val got = ext.Graph
-        .connectedComponents(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"edges=$edges")
+      // both paths: the driver union-find (default cap) and the
+      // distributed loop (cap 0)
+      Seq(ext.Graph.DriverMaxEdges, 0).foreach { cap =>
+        val got = ext.Graph
+          .connectedComponentsCapped(edges.toDF("a", "b"), "a", "b", 50, cap)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == expected, s"cap=$cap edges=$edges")
+      }
     }
   }
 

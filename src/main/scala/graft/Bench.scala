@@ -18,55 +18,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Each query is forced through the noop sink — full materialization of
   * every output column (a bare `count()` would let Catalyst prune the
-  * computed columns away and under-report). Set
-  * SPARK_GRAFT_BENCH=headline to time only the Q.bench subset.
+  * computed columns away and under-report). Each sample's job, stage
+  * and task counts come from a [[Trace]] window around it (its settling
+  * marker runs after the timed span).
   */
 object Bench {
-  /** Counts Spark jobs/stages/tasks as they complete — an
-    * environment-independent per-query cost proxy next to wall seconds
-    * (a box can be 2x slower; it cannot change how many stages a plan
-    * runs). Listener delivery is async, so counts attributed to a query
-    * can be off by the events still in flight at the snapshot — ±1 job
-    * at worst for the sub-second queries; diagnostics, not a contract.
-    */
-  private[graft] final class CostListener
-      extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val jobs = new AtomicLong; val stages = new AtomicLong
-    val tasks = new AtomicLong
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet()
-      tasks.addAndGet(s.stageInfo.numTasks)
-    }
-    def snapshot: (Long, Long, Long) = (jobs.get, stages.get, tasks.get)
-
-    /** Poll until the counts stop moving (listener delivery is async),
-      * then return the settled snapshot. Used wherever a per-sample
-      * stage count is a COMMITTED artifact value (ScalingBench's sweep
-      * and drills, PipelineStageBudgetSpec): without the drain, events
-      * still in flight at the snapshot bleed into the next sample —
-      * the round-14 drill arms' unflat [9,8,8] stage triples. A fixed
-      * sleep would under-count on a contended box, so poll for
-      * `stableMs` of silence (capped at `capMs`).
-      */
-    def drainStable(stableMs: Int = 300, capMs: Int = 15000)
-        : (Long, Long, Long) = {
-      var prev = snapshot
-      var quiet = 0
-      val t0 = System.nanoTime()
-      while (quiet < stableMs && (System.nanoTime() - t0) < capMs * 1e6) {
-        Thread.sleep(50)
-        val now = snapshot
-        if (now == prev) quiet += 50 else { quiet = 0; prev = now }
-      }
-      prev
-    }
-  }
-
   final case class Timing(sec: Double, jobs: Long, stages: Long, tasks: Long)
 
   def main(args: Array[String]): Unit = {
@@ -75,16 +31,13 @@ object Bench {
     // are freed by its scope — see Overlap)
     io.Sources.enableTableCache()
     val spark = Sessions.local(appName = "graft-bench")
-    val cost = new CostListener
-    spark.sparkContext.addSparkListener(cost)
 
     val failed = scala.collection.mutable.ListBuffer[String]()
     def run(q: Q): (Timing, Boolean) = {
-      val (j0, s0, k0) = cost.snapshot
-      val t0 = System.nanoTime()
       var ok = true
       // one scope per sample frees what the sample cached
-      val t = Overlap(spark) { _ =>
+      val w = Trace(spark)(Overlap(spark) { _ =>
+        val t0 = System.nanoTime()
         // q.confs scoped around build+execute (planning happens at the
         // action), restored after — see Q.KBoundedAggConfs
         try Sessions.withConfs(spark, q.confs) {
@@ -97,9 +50,8 @@ object Bench {
           System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
         }
         (System.nanoTime() - t0) / 1e9
-      }
-      val (j1, s1, k1) = cost.snapshot
-      (Timing(t, j1 - j0, s1 - s0, k1 - k0), ok)
+      })
+      (Timing(w.value, w.jobs.size, w.stages, w.tasks), ok)
     }
 
     // JVM/Catalyst warmup on the smallest sf so headline numbers measure
@@ -108,14 +60,11 @@ object Bench {
 
     // SPARK_GRAFT_ONLY=q1,q2 times just those queries (builder profiling)
     val onlyMode = sys.env.contains("SPARK_GRAFT_ONLY")
-    val headlineMode = sys.env.get("SPARK_GRAFT_BENCH").contains("headline")
     val toRun = sys.env.get("SPARK_GRAFT_ONLY") match {
       case Some(names) =>
         val want = names.split(",").map(_.trim).toSet
         SparkEntry.registry.filter(q => want.contains(q.name))
-      case None =>
-        if (headlineMode) SparkEntry.benchQueries
-        else SparkEntry.registry.filter(_.benchDefault)
+      case None => SparkEntry.registry.filter(_.benchDefault)
     }
 
     // Warm the bench-sf RAW table tier before timing: the one-time
@@ -183,14 +132,13 @@ object Bench {
 
     // BENCH_FULL.json is the COMMITTED closing-ritual artifact — the
     // full benchDefault catalog. A targeted profiling run
-    // (SPARK_GRAFT_ONLY / headline mode) writes BENCH_TARGETED.json
+    // (SPARK_GRAFT_ONLY) writes BENCH_TARGETED.json
     // instead so it can never clobber the committed full-catalog
     // numbers: round 13 briefly committed a 1-query BENCH_FULL.json
     // exactly that way, and BenchContractSpec's scale floor now
     // red-lines the artifact itself.
     val artifactPath =
-      if (onlyMode || headlineMode) "BENCH_TARGETED.json"
-      else "BENCH_FULL.json"
+      if (onlyMode) "BENCH_TARGETED.json" else "BENCH_FULL.json"
     Files.write(Paths.get(artifactPath),
       fullJson(timings, sfDir, failed.distinct.toSeq, runsMap, warmSec,
         runStages, fitCounts = fitCountSnapshot(),

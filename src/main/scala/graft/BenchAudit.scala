@@ -468,8 +468,8 @@ object BenchAudit {
   /** A root `"metric":"total"` (the [[Bench.jsonLine]] contract) marks
     * a bench artifact and a root `"generated_by":"graft.ScalingBench"`
     * a scaling artifact. Anything else (a per-round wrapper such as
-    * `BENCH_r22.json`, which nests the bench line under `parsed`) is
-    * refused, naming its root keys.
+    * `bench_history/BENCH_r22.json`, which nests the bench line under
+    * `parsed`) is refused, naming its root keys.
     */
   private[graft] def shapeOf(json: String): Either[String, Shape] = {
     val root = JsonMethods.parse(json)

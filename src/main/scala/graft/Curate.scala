@@ -379,8 +379,7 @@ object Curate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val outDir =
-      args.lift(1).getOrElse("/root/repo/target/tmp/curate_out")
+    val outDir = args.lift(1).getOrElse(s"${io.Sources.TmpRoot}/curate_out")
     val budget = args.lift(2).map(_.toLong).getOrElse(2048L)
     val spark = Sessions.local()
     val r = run(spark, sfDir, outDir, budget)

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-
 /** TEMPORARY round-21 profiling harness (not registered, not shipped):
-  * runs one named query through the noop sink with a listener that
-  * prints every Spark job's wall time and description/call site, so
-  * per-query job budgets can be attributed to code lines.
+  * runs one named query through the noop sink in a [[Trace]] window per
+  * rep and prints every Spark job's wall time and description/call
+  * site, so per-query job budgets can be attributed to code lines, then
+  * each rep's wall, busy and idle seconds.
   *
   * Usage: runMain graft.DevProfile <sfDir> <query> [warmRuns]
   */
@@ -35,35 +34,26 @@ object DevProfile {
     // warm the raw tier + JIT
     (1 to warm).foreach(_ => once())
 
-    val epoch = System.nanoTime()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        val site = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
-        starts.put(j.jobId, (System.nanoTime(), s"$site | $desc"))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        Option(starts.get(e.jobId)).foreach { case (t0, what) =>
-          val ms = (System.nanoTime() - t0) / 1e6
-          val off = (t0 - epoch) / 1e6
-          println(f"[job] ${e.jobId}%4d start=${off}%8.1f dur=${ms}%8.1f ms  $what")
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     val reps = sys.env.get("DEV_REPS").map(_.toInt).getOrElse(1)
-    val times = (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      once()
-      (System.nanoTime() - t0) / 1e9
+    val epoch = System.currentTimeMillis()
+    val windows = (1 to reps).map { _ =>
+      Trace(spark) {
+        val t0 = System.nanoTime()
+        once()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
-    Thread.sleep(500)
-    val ts = times.map(t => f"$t%.3f").mkString(", ")
-    println(f"[total] $name min=${times.min}%.3f s  all=[$ts]")
+    for (w <- windows; j <- w.jobs; end <- j.endMs) {
+      val what = s"${j.callSite} | ${j.description}"
+      println(f"[job] ${j.id}%4d start=${(j.startMs - epoch).toDouble}%8.1f " +
+        f"dur=${(end - j.startMs).toDouble}%8.1f ms  $what")
+    }
+    // busy: the union of a rep's job intervals; idle: its wall minus busy
+    def secs(xs: Seq[Double]) = xs.map(t => f"$t%.3f").mkString("[", ", ", "]")
+    val times = windows.map(_.value)
+    println(f"[total] $name min=${times.min}%.3f s  all=${secs(times)}" +
+      s"  busy=${secs(windows.map(_.busySec))}" +
+      s"  idle=${secs(windows.map(w => w.value - w.busySec))}")
     spark.stop()
   }
 }

@@ -239,7 +239,7 @@ object Sessions {
       // scoped around their own execution — a session-wide raise would
       // remove the sort-based safety valve for UNBOUNDED collect_list/
       // collect_set states below the threshold (see Q.KBoundedAggConfs).
-      .config("spark.sql.warehouse.dir", "/root/repo/target/tmp/warehouse")
+      .config("spark.sql.warehouse.dir", io.Sources.WarehouseDir)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .getOrCreate()

@@ -39,8 +39,9 @@ import graft.Bench.{jarr, jobj, jstr, median, r3}
   * unbounded labeling batch actually RUNS had no recorded cost. Here
   * both arms run on that fixture — fallback = default cap (the data
   * itself trips the gate: ~128 MB corpus vs the 64 MB cap), hinted =
-  * cap raised — with per-run seconds and stage counts, so BENCH.md can
-  * state the price of the guard's degraded mode next to its happy path.
+  * cap raised — with per-run seconds and stage counts, so
+  * `bench_history/BENCH.md` can state the price of the guard's degraded
+  * mode next to its happy path.
   */
 object ScalingBench {
 
@@ -433,8 +434,6 @@ object ScalingBench {
       new String(Files.readAllBytes(path), StandardCharsets.UTF_8))
     val todo = plan(args.toSeq, committed, cpus)
       .fold(why => { spark.stop(); sys.error(why) }, identity)
-    val cost = new Bench.CostListener
-    spark.sparkContext.addSparkListener(cost)
 
     val reg = SparkEntry.registry.map(q => q.name -> q).toMap
     val missing = PinnedQueries.filterNot(reg.contains)
@@ -452,7 +451,7 @@ object ScalingBench {
       def run(name: String): Sample = {
         val q = reg(name)
         Sessions.withConfs(spark, q.confs) {
-          timedWrite(spark, cost)(q.benchFn.getOrElse(q.fn)(spark, dir))
+          timedWrite(spark)(q.benchFn.getOrElse(q.fn)(spark, dir))
         }
       }
       sw.queries.foreach(run) // untimed warm pass
@@ -462,8 +461,8 @@ object ScalingBench {
     }
 
     def draw(section: String): String = section match {
-      case "fallback_drill" => fallbackDrill(spark, cost)
-      case "rewrite_drill" => rewriteDrill(spark, cost)
+      case "fallback_drill" => fallbackDrill(spark)
+      case "rewrite_drill" => rewriteDrill(spark)
       case sweep =>
         val sw = Sweeps(sweep)
         // every point's dir first: fixtures build before any sample
@@ -480,25 +479,19 @@ object ScalingBench {
     println(json)
   }
 
-  /** One timed sample: drain the listener, time `df`'s build and a noop
-    * write in a scope of its own (which frees what the sample cached),
-    * drain again. Per-sample stage counts
-    * are COMMITTED artifact values with a flatness red line
-    * (ScalingContractSpec), so both snapshots drain the async listener
-    * first — an in-flight event at the snapshot bleeds a stage into the
-    * neighboring sample (the round-14 drill arms' unflat [9,8,8]). The
-    * drains sit OUTSIDE the timed window.
+  /** One timed sample: `df`'s build and a noop write in a scope of its
+    * own (which frees what the sample cached), with the stages of a
+    * [[Trace]] window around it. Per-sample stage counts are COMMITTED
+    * artifact values with a flatness red line (ScalingContractSpec);
+    * the window's settling marker runs outside the timed span.
     */
-  private def timedWrite(spark: SparkSession, cost: Bench.CostListener)(
-      df: => DataFrame): Sample = {
-    val (_, s0, _) = cost.drainStable()
-    val sec = Overlap(spark) { _ =>
+  private def timedWrite(spark: SparkSession)(df: => DataFrame): Sample = {
+    val w = Trace(spark)(Overlap(spark) { _ =>
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
-    }
-    val (_, s1, _) = cost.drainStable()
-    (sec, s1 - s0)
+    })
+    (w.value, w.stages)
   }
 
   /** [[Runs]] samples per arm, interleaved (false, true, false, ...) so
@@ -719,8 +712,7 @@ object ScalingBench {
     * timing it, so the recorded numbers can't silently both measure the
     * same plan.
     */
-  private def fallbackDrill(spark: SparkSession,
-      cost: Bench.CostListener): String = {
+  private def fallbackDrill(spark: SparkSession): String = {
     val dir = ensureDrillFixture(spark)
 
     // one SAMPLE per call, with the conf flipped and the branch
@@ -757,7 +749,7 @@ object ScalingBench {
         require(hints == (if (hinted) 2 else 0),
           s"drill arm hinted=$hinted landed on the wrong branch " +
             s"($hints hints)")
-        timedWrite(spark, cost)(ext.Similarity.knnAnn(spark, dir))
+        timedWrite(spark)(ext.Similarity.knnAnn(spark, dir))
       }
     }
 
@@ -800,8 +792,7 @@ object ScalingBench {
     * in brute — so the committed speedup can't silently time the
     * same plan twice.
     */
-  private def rewriteDrill(spark: SparkSession,
-      cost: Bench.CostListener): String = {
+  private def rewriteDrill(spark: SparkSession): String = {
     val dir = ensureDrillFixture(spark)
     val QueryModulus = 5000
 
@@ -830,11 +821,11 @@ object ScalingBench {
       require(gens == (if (rewrite) 1 else 0),
         s"rewrite drill arm rewrite=$rewrite landed on the wrong " +
           s"branch ($gens probe Generates in the optimized plan)")
-      timedWrite(spark, cost)(build(rewrite))
+      timedWrite(spark)(build(rewrite))
     }
 
     // untimed warm pass per arm, run through the SAME sample() shape
-    // (plan build + branch assert in a scope, drain, noop write) and
+    // (plan build + branch assert in a scope, traced noop write) and
     // discarded: the committed r14/r15 brute arms both showed a 9th
     // stage on their FIRST timed sample only — whatever one-time
     // materialization the first post-warm execution pays, running the

@@ -149,9 +149,18 @@ object Similarity {
         col("nrm").as("q_nrm"))
     val c = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
       col("nrm").as("c_nrm"))
+    top5Cosine(c.join(broadcast(q), col("q_id") =!= col("c_id"), "inner"))
+  }
+
+  /** The top-5 cosine ranking every vector search here ends with: the
+    * cosine of each (q, c) candidate pair, the best five per `q_id`
+    * (ties by `c_id`), rounded and ordered. `AnnIndexRewrite` matches
+    * this exact shape over [[bruteTopK]]'s pair join.
+    */
+  private def top5Cosine(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id"))
-    c.join(broadcast(q), col("q_id") =!= col("c_id"), "inner")
+    pairs
       .withColumn("cos", expr(dotExpr) / (col("q_nrm") * col("c_nrm")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
@@ -248,16 +257,8 @@ object Similarity {
       .select(col("q_id"), col("q_emb"), col("q_nrm"), col("bucket"))
     val c = bucketed.select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
       col("nrm").as("c_nrm"), col("bucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    c.join(broadcast(probes), Seq("bucket"), "inner")
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", expr(dotExpr) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("c_id"), col("rank"),
-        r4(col("cos")).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    top5Cosine(c.join(broadcast(probes), Seq("bucket"), "inner")
+      .filter(col("q_id") =!= col("c_id")))
   }
 
   /** LSH-bucketed ANN — the second scale path next to [[annIvf]],
@@ -329,16 +330,8 @@ object Similarity {
         col("probe").as("sig"))
     val c = sigd.select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
       col("nrm").as("c_nrm"), col("sig"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    c.join(broadcast(probes), Seq("sig"), "inner")
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", expr(dotExpr) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("c_id"), col("rank"),
-        r4(col("cos")).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    top5Cosine(c.join(broadcast(probes), Seq("sig"), "inner")
+      .filter(col("q_id") =!= col("c_id")))
   }
 
   /** The Catalyst-rewrite path as a registered, driver-benched entry
@@ -723,17 +716,10 @@ object Similarity {
     val probePairs = q.select(col("q_id"), explode(array(
       col("sig") +: flips.map(m => col("sig").bitwiseXOR(lit(m))): _*))
       .as("sig"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    index.join(gatedProbeBroadcast(spark, probePairs), Seq("sig"), "inner")
-      .filter(col("q_id") =!= col("c_id"))
-      .join(gatedProbeBroadcast(spark, q.drop("sig")), Seq("q_id"))
-      .withColumn("cos", expr(dotExpr) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("c_id"), col("rank"),
-        r4(col("cos")).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    top5Cosine(
+      index.join(gatedProbeBroadcast(spark, probePairs), Seq("sig"), "inner")
+        .filter(col("q_id") =!= col("c_id"))
+        .join(gatedProbeBroadcast(spark, q.drop("sig")), Seq("q_id")))
   }
 
   /** SERVE-MANY row (round-11 directive 6): five successive DISJOINT

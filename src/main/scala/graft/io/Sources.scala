@@ -367,9 +367,18 @@ object Sources {
     s"${sanitized}_$hex"
   }
 
-  /** Scratch dir inside the repo (never touches /root/testdata). */
+  /** The one scratch root: every scratch dir, the session warehouse
+    * and the default curate output live under it (never under the
+    * read-only test data).
+    */
+  val TmpRoot = "/root/repo/target/tmp"
+
+  /** The session warehouse (`spark.sql.warehouse.dir`). */
+  val WarehouseDir = s"$TmpRoot/warehouse"
+
+  /** Scratch dir `sub` under [[TmpRoot]], created. */
   def tmpDir(sub: String): String = {
-    val d = s"/root/repo/target/tmp/$sub"
+    val d = s"$TmpRoot/$sub"
     new java.io.File(d).mkdirs()
     d
   }

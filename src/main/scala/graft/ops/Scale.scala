@@ -150,7 +150,7 @@ object Scale {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       // the on-disk warehouse outlives the in-memory catalog: a previous
       // JVM's table files would fail this JVM's first overwrite
-      val d = new java.io.File(s"/root/repo/target/tmp/warehouse/$t")
+      val d = new java.io.File(s"${graft.io.Sources.WarehouseDir}/$t")
       if (d.exists()) { d.listFiles().foreach(_.delete()); d.delete() }
     }
     // the two bucketed writes are independent tables: overlap them

@@ -90,8 +90,8 @@ object TypedOps {
     * (KLL-style mergeable sketch, constant memory per group) instead of
     * the exact aggregate, which buffers EVERY group value — the most
     * memory-hungry aggregate in the catalog (it is why a7 shows the
-    * worst data-growth factor in BENCH.md's scaling audit). accuracy
-    * 10000 bounds rank error at 1/10000.
+    * worst data-growth factor in `bench_history/BENCH.md`'s scaling
+    * audit). accuracy 10000 bounds rank error at 1/10000.
     *
     * Band-oracle shape: sketch internals are engine-specific, so the
     * query emits the exact (oracle-checkable) percentiles alongside ONE

@@ -697,7 +697,7 @@ class BenchAuditSpec extends AnyFunSuite {
     // a per-round wrapper nests the bench line under `parsed`: neither
     // a root "metric":"total" nor ScalingBench's generated_by stamp
     import BenchAudit.{pairShape, shapeOf}
-    val wrapper = committed("BENCH_r22.json")
+    val wrapper = committed("bench_history/BENCH_r22.json")
     val scaling = committed("SCALING.json")
     assert(shapeOf(scaling) == Right(BenchAudit.ScalingShape))
     for ((f, r) <- Seq(wrapper -> scaling, scaling -> wrapper,

@@ -118,34 +118,6 @@ class IoSpec extends SparkSuite {
     assert(b.map(_.getInt(0)).forall(_ >= 2) && b.nonEmpty)
   }
 
-  /** Spark jobs started while `body` runs. Listener delivery is async,
-    * so a marker job runs after `body`: the bus delivers job starts in
-    * submission order, and once the marker's has arrived every job
-    * `body` started is counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(String.valueOf(
-          j.properties.getProperty("spark.job.description")))
-    }
-    val marker = s"jobsDuring marker ${System.nanoTime()}"
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.contains(marker), "marker job start never delivered")
-      started.size - 1
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Replace `$dir/$name.parquet` in place with `df` as one file. */
   private def writeTableFile(df: org.apache.spark.sql.DataFrame,
       dir: String, name: String): Unit = {
@@ -177,10 +149,10 @@ class IoSpec extends SparkSuite {
     val dir = io.Sources.tmpDir("schema_evict")
     writeTableFile(Seq((1L, "a")).toDF("id", "t"), dir, "t")
     io.Sources.table(spark, dir, "t")
-    assert(jobsDuring(io.Sources.table(spark, dir, "t")) == 0,
+    assert(Trace(spark)(io.Sources.table(spark, dir, "t")).jobs.isEmpty,
       "a second read of an unchanged file inferred its schema again")
     io.Sources.evictTable(spark, dir, "t")
-    assert(jobsDuring(io.Sources.table(spark, dir, "t")) == 1,
+    assert(Trace(spark)(io.Sources.table(spark, dir, "t")).jobs.size == 1,
       "a read after evictTable did not infer the schema again")
   }
 
@@ -191,7 +163,7 @@ class IoSpec extends SparkSuite {
     val ready = new java.util.concurrent.CountDownLatch(threads)
     val go = new java.util.concurrent.CountDownLatch(1)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val jobs = jobsDuring {
+    val jobs = Trace(spark) {
       val ts = (1 to threads).map { _ =>
         val t = new Thread(() =>
           try { ready.countDown(); go.await(); io.Sources.table(spark, dir, "t") }
@@ -202,7 +174,7 @@ class IoSpec extends SparkSuite {
       ready.await()
       go.countDown()
       ts.foreach(_.join())
-    }
+    }.jobs.size
     assert(failures.isEmpty, s"a reader failed: ${failures.peek()}")
     assert(jobs == 1,
       s"$threads concurrent first reads started $jobs schema-inference jobs")
@@ -210,6 +182,6 @@ class IoSpec extends SparkSuite {
 
   test("a second Features.build on one dir starts no Spark job") {
     feature.Features.build(spark, sf)
-    assert(jobsDuring(feature.Features.build(spark, sf)) == 0)
+    assert(Trace(spark)(feature.Features.build(spark, sf)).jobs.isEmpty)
   }
 }

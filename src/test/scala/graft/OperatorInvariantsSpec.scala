@@ -770,32 +770,11 @@ class OperatorInvariantsSpec extends SparkSuite {
       .toDF("a", "b").repartition(4).persist()
     try {
       edges.count()
-      val sc = spark.sparkContext
-      val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          started.add(String.valueOf(
-            j.properties.getProperty("spark.job.description")))
-      }
-      val marker = s"cc marker ${System.nanoTime()}"
-      sc.addSparkListener(listener)
-      val comp = try {
-        val rows = ext.Graph.connectedComponents(edges, "a", "b").collect()
-        // the bus delivers job starts in submission order: once the
-        // marker's has arrived, every job above has been counted
-        sc.setJobDescription(marker)
-        try sc.parallelize(Seq(1), 1).count()
-        finally sc.setJobDescription(null)
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while (!started.contains(marker) && System.nanoTime() < deadline)
-          Thread.sleep(10)
-        assert(started.contains(marker), "marker job start never delivered")
-        rows
-      } finally sc.removeSparkListener(listener)
-      assert(started.size - 1 <= 1,
-        s"${started.size - 1} jobs ran for a 5-edge graph on the driver path")
-      assert(comp.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      val w = Trace(spark)(
+        ext.Graph.connectedComponents(edges, "a", "b").collect())
+      assert(w.jobs.size <= 1,
+        s"${w.jobs.size} jobs ran for a 5-edge graph on the driver path")
+      assert(w.value.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
         Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
           10L -> 10L, 11L -> 10L))
     } finally edges.unpersist()

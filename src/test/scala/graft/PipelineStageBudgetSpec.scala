@@ -31,24 +31,13 @@ class PipelineStageBudgetSpec extends SparkSuite {
 
   private val sf01 = "/root/testdata/sf0.1"
 
-  /** Run `fn` once warm, then count the stages of a second run.
-    * Listener delivery is async, so the count polls until stable —
-    * a fixed sleep would under-count on a contended box.
+  /** Run `fn` once warm, then count the stages of a second run in a
+    * [[Trace]] window.
     */
   private def stagesOf(fn: () => Unit): Long = {
-    val cost = new Bench.CostListener
-    spark.sparkContext.addSparkListener(cost)
-    try {
-      fn() // warm: fits, sink bootstrap, codegen — the bench's posture
-      Memos.clearDerived()
-      // poll until the async listener settles (CostListener.drainStable)
-      // — a fixed sleep would under-count on a contended box
-      val (_, s0, _) = cost.drainStable(stableMs = 500)
-      fn()
-      Memos.clearDerived()
-      val (_, s1, _) = cost.drainStable(stableMs = 500)
-      s1 - s0
-    } finally spark.sparkContext.removeSparkListener(cost)
+    fn() // warm: fits, sink bootstrap, codegen — the bench's posture
+    Memos.clearDerived()
+    Trace(spark) { fn(); Memos.clearDerived() }.stages
   }
 
   test("pipe1_end_to_end stays within its stage budget") {

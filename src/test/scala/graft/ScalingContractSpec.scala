@@ -21,8 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    whose stage count differs from its siblings measured a
   *    different plan, and the median would blend plans;
   *  - the gated-fallback drill recorded both arms with the full
-  *    sample count, so BENCH.md's degraded-mode price is backed by
-  *    interleaved measurements, not a single draw.
+  *    sample count, so `bench_history/BENCH.md`'s degraded-mode price
+  *    is backed by interleaved measurements, not a single draw.
   *
   * No Spark session needed — pure artifact parsing, so the red line
   * costs milliseconds in every `sbt test`.

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExc
   * (round-11 directive 2 — grown from the 22-query round-10 pilot):
   * each audited query's FINAL (post-AQE) physical plan may use at most
   * the pinned number of shuffle exchanges. Wall-clock bench deltas on a
-  * contended box are noise (BENCH.md passim); a plan growing an
-  * exchange is a REGRESSION — a lost broadcast, a cache barrier
+  * contended box are noise (`bench_history/BENCH.md` passim); a plan
+  * growing an exchange is a REGRESSION — a lost broadcast, a cache barrier
   * blocking exchange reuse, a new unnecessary repartition — and this
   * spec turns that into a red test at verify scale instead of a mystery
   * bench delta three rounds later. Budgets are UPPER bounds pinned at

@@ -369,9 +369,10 @@ object Sources {
 
   /** The one scratch root: every scratch dir, the session warehouse
     * and the default curate output live under it (never under the
-    * read-only test data).
+    * read-only test data). It is `target/tmp` under the JVM's working
+    * directory: the repository root under sbt.
     */
-  val TmpRoot = "/root/repo/target/tmp"
+  val TmpRoot: String = new java.io.File("target/tmp").getAbsolutePath
 
   /** The session warehouse (`spark.sql.warehouse.dir`). */
   val WarehouseDir = s"$TmpRoot/warehouse"

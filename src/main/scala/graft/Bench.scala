@@ -58,7 +58,7 @@ object Bench {
     // the plan, not classloading (one tiny end-to-end query).
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
-    // SPARK_GRAFT_ONLY=q1,q2 times just those queries (builder profiling)
+    // SPARK_GRAFT_ONLY=q1,q2 times just those queries (targeted profiling)
     val onlyMode = sys.env.contains("SPARK_GRAFT_ONLY")
     val toRun = sys.env.get("SPARK_GRAFT_ONLY") match {
       case Some(names) =>
@@ -67,26 +67,19 @@ object Bench {
       case None => SparkEntry.registry.filter(_.benchDefault)
     }
 
-    // Warm the bench-sf RAW table tier before timing: the one-time
-    // parquet-read-and-persist of each input otherwise lands entirely
-    // on whichever query happens to touch that table first in registry
-    // order (q1_agg carried lineitem's ~2 s build — 3.1 s reported for
-    // a 0.9 s aggregate). The build cost is real but belongs to the
-    // WARM-UP of a resident engine, not to an arbitrary query's plan;
-    // it stays visible as `warm_sec` in BENCH_FULL.json. Comparison
-    // convention: headline numbers are WARM-engine numbers — compare
-    // them only against a baseline measured warm too.
-    //
-    // Under SPARK_GRAFT_ONLY (targeted profiling) the full multi-second
-    // all-tables build would dominate a one-query run, so warm by
-    // executing just the selected queries once untimed instead — that
-    // touches exactly the raw tables those queries read, nothing else.
+    // Warm pass: every selected query runs once, untimed, before the
+    // timed passes. It builds what a resident engine builds once — the
+    // bench-sf raw-table tier (whichever query touches a table first
+    // would otherwise carry its parquet-read-and-persist: q1_agg once
+    // reported lineitem's ~2 s build on a 0.9 s aggregate) and the
+    // memoized model fits (ml1's KMeans, x_quality_model's LBFGS,
+    // x_ann_ivf's index), which otherwise land on the query's first
+    // timed sample. That cost stays visible as `warm_sec` in
+    // BENCH_FULL.json. Comparison convention: headline numbers are
+    // WARM-engine numbers — compare them only against a baseline
+    // measured warm too.
     val warmT0 = System.nanoTime()
-    if (onlyMode) toRun.foreach(run)
-    else io.Sources.tableNames.foreach { t =>
-      io.Sources.table(spark, sfDir, t).write.format("noop")
-        .mode("overwrite").save()
-    }
+    toRun.foreach(run)
     val warmSec = (System.nanoTime() - warmT0) / 1e9
     failed.clear() // warm-pass failures re-surface in the timed runs
     // Every query's cost is the MEDIAN of its samples — micro-batch

@@ -41,11 +41,11 @@ object Pipeline {
     // (ConcurrentHashMap + per-block cache locks).
     Overlap(spark) { s =>
       // stage 3: features + activity clustering, JDBC sink. Forked
-      // first: the KMeans fit (k-means|| init + up to 20 Lloyd
-      // iterations, one job each) is the longest chain of jobs in the
-      // run, and the other two stages fill the cores around it. The
-      // feature join is built once; the fit input and the analysis
-      // join both read it.
+      // first: feature join, fit input, KMeans fit (one job on a
+      // one-partition input, see Clustering.fitKmeans), analysis join
+      // and two sinks are the longest chain of jobs in the run, and the
+      // other two stages fill the cores around it. The feature join is
+      // built once; the fit input and the analysis join both read it.
       val f3 = s.fork("pipeline: transform") {
         val features =
           s.release(feature.Features.build(spark, sfDir).cache())

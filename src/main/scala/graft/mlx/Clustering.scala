@@ -1,6 +1,7 @@
 package graft.mlx
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel,
+  OnePartitionKMeans}
 import org.apache.spark.ml.feature.{PCA, PCAModel, VectorAssembler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,10 +24,11 @@ import graft.feature.Features
   */
 object Clustering {
 
-  /** Assemble the activity features used for clustering. Cached: KMeans
-    * fit ITERATES over this frame (one job per iteration) — without the
-    * cache every iteration would re-run the feature join, the
-    * reference's no-cache anti-pattern (`pre_analysis.py` passim).
+  /** Assemble the activity features used for clustering. Cached: the
+    * fit, the labels and the PCA projection all read this frame (and a
+    * multi-partition KMeans fit reads it once per iteration) — without
+    * the cache each read would re-run the feature join, the reference's
+    * no-cache anti-pattern (`pre_analysis.py` passim).
     * Memoized per (app, dir) in the owning [[graft.Overlap]] scope, so
     * repeated calls within one query share ONE cached copy instead of
     * leaking a new cache entry per invocation. [[graft.Pipeline]]
@@ -49,10 +51,10 @@ object Clustering {
     * bit-identical across cluster sizes only if the fit input's layout
     * is identical. A hash partitioning into this count +
     * within-partition sort pins that layout (verified by the
-    * two-CPU-count Verify diff). Each Lloyd iteration is one job whose
-    * cost at this scale is scheduling, not compute, so fewer
-    * partitions shorten the fit (measured at sf0.1, 4 cores: 16
-    * partitions 4.7 s, 1 partition 2.0–2.4 s).
+    * two-CPU-count Verify diff). One partition also lets the KMeans fit
+    * run in one job ([[fitKmeans]]) instead of one per k-means|| round
+    * and Lloyd iteration, whose cost at this scale is scheduling, not
+    * compute.
     */
   private[graft] def fitPartitions(customerBytes: Long): Int =
     math.max(1L, (customerBytes + FitBytesPerPartition - 1) /
@@ -115,11 +117,11 @@ object Clustering {
     * (session, dir) — the `mlx.QualityModel.modelMemo` pattern
     * (round 12, with the same deliberate asymmetry: no input
     * fingerprint, single-writer harness contract). Before this, every
-    * Bench sample of `ml1`/`ml2` re-ran the 20-iteration k-means||
-    * fit (~40 scheduling-bound jobs over a 150-row cached input: the
-    * dominant share of ml1's 2.2 s / 61-stage samples) even though
-    * the documented operator output is the LABELED frame, with the
-    * model a derived artifact. Deliberately NOT owned by a scope
+    * Bench sample of `ml1`/`ml2` re-ran the fits (then ~29
+    * scheduling-bound jobs for the k-means|| fit alone; one job since
+    * [[fitKmeans]] fits a one-partition input on the driver) even
+    * though the documented operator output is the LABELED frame, with
+    * the model a derived artifact. Deliberately NOT owned by a scope
     * (Bench opens one per sample, which would reinstate the refit); the
     * models are O(k x d) doubles. Keyed on [[graft.Sessions.appKey]]
     * (round-16 directive 1) so a foreign harness that wraps/clones the
@@ -147,20 +149,31 @@ object Clustering {
   private[graft] val pcaFitCount =
     new java.util.concurrent.atomic.AtomicLong
 
-  /** maxIter/tol pinned EXPLICITLY at the library defaults (20, 1e-4):
-    * the unscaled features don't converge in 20 rounds, so any drift in
-    * the default would silently change the model — and lowering it
-    * would too (see graft-build-loop notes). Same values, now visible.
+  /** The activity clustering's estimator settings: k=3, seed 1, and
+    * maxIter/tol pinned EXPLICITLY at the library defaults (20, 1e-4):
+    * the unscaled features don't converge in 20 rounds at sf0.1, so any
+    * drift in the default would silently change the model — and
+    * lowering it would too. Same values, now visible.
+    */
+  private[graft] def activityKMeans[K <: KMeans](km: K): K = {
+    km.setK(3).setSeed(1L).setMaxIter(20).setTol(1e-4)
+      .setFeaturesCol("features").setPredictionCol("prediction")
+    km
+  }
+
+  /** The memoized activity model. A one-partition fit input (every
+    * customer table up to [[FitBytesPerPartition]]) fits in ONE Spark
+    * job: [[OnePartitionKMeans]] runs Spark's own algorithm for that
+    * partition on the driver and gives `KMeans.fit`'s model bit for bit
+    * (`ml3_pipeline_compose`'s `matches_ml1` checks it against Spark's
+    * fit on every run). Larger inputs take `KMeans.fit`.
     */
   private def fitKmeans(spark: SparkSession, dir: String,
       input: DataFrame): KMeansModel =
     kmMemo.computeIfAbsent(graft.Sessions.appKey(spark, dir),
       _ => {
         kmFitCount.incrementAndGet()
-        new KMeans().setK(3).setSeed(1L)
-          .setMaxIter(20).setTol(1e-4)
-          .setFeaturesCol("features").setPredictionCol("prediction")
-          .fit(input)
+        activityKMeans(new OnePartitionKMeans()).fit(input)
       })
 
   /** Canonicalize cluster ids: raw KMeans labels permute with input
@@ -214,9 +227,7 @@ object Clustering {
       .setInputCols(Array("tx_count", "total_spend",
         "days_since_first_order"))
       .setOutputCol("features")
-    val km = new KMeans().setK(3).setSeed(1L)
-      .setMaxIter(20).setTol(1e-4)
-      .setFeaturesCol("features").setPredictionCol("prediction")
+    val km = activityKMeans(new KMeans())
     val model = new org.apache.spark.ml.Pipeline()
       .setStages(Array(assembler, km)).fit(feats)
     canonicalLabels(model.stages.last.asInstanceOf[KMeansModel],
@@ -339,8 +350,10 @@ object Clustering {
     * `ml.Pipeline` must produce EXACTLY the staged fit's labels
     * (`matches_ml1` — the row-identity `OperatorInvariantsSpec` also
     * asserts), pinned TRUE over the truth rows. Two fits are inherent:
-    * the verdict compares two independently fitted models. `benchFn`
-    * times [[kmeansPipeline]].
+    * the verdict compares two independently fitted models — Spark's
+    * own `KMeans.fit` here, the one-job driver fit of [[fitKmeans]] in
+    * ml1 — so it is also the per-run check that the driver fit gives
+    * Spark's model. `benchFn` times [[kmeansPipeline]].
     */
   def kmeansPipelineVerified(spark: SparkSession, dir: String): DataFrame = {
     val a = kmeansActivity(spark, dir)

@@ -40,6 +40,30 @@ class PipelineStageBudgetSpec extends SparkSuite {
     Trace(spark) { fn(); Memos.clearDerived() }.stages
   }
 
+  test("a cold activity KMeans fit on a one-partition input runs <= 2 jobs") {
+    // the timed runs above (and Bench, DevProfile) reuse the fit memo;
+    // every fresh input dir pays for a cold fit, so time one: a copy of
+    // sf0.01 whose (app, dir) key has no model yet
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(io.Sources.tmpDir("cold_fit")), "sf0.01_")
+    new java.io.File("/root/testdata/sf0.01").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    try Overlap(spark) { s =>
+      val features = s.release(
+        feature.Features.build(spark, dir.toString).cache())
+      val input = s.release(
+        mlx.Clustering.fitInput(spark, dir.toString, features))
+      val jobs = Trace(spark)(
+        mlx.Clustering.activityLabels(spark, dir.toString, input)).jobs
+      assert(jobs.size <= 2, s"the cold fit ran ${jobs.size} jobs " +
+        "(budget 2): one per k-means|| round and Lloyd iteration again?")
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete())
+      dir.toFile.delete()
+    }
+  }
+
   test("pipe1_end_to_end stays within its stage budget") {
     val stages = stagesOf(() =>
       PipelineBench.pipelineEndToEnd(spark, sf01).collect())
